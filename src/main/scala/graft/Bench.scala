@@ -26,8 +26,33 @@ import org.apache.spark.sql.SparkSession
   * interleaved pass and stamps `"contaminated": true` plus the trigger
   * in the contract line and both side files — a dirty headline number
   * now declares itself instead of waiting to be adjudicated.
+  *
+  * A query that throws is a FAILURE, never a sample: it is listed under
+  * `"failed"` in the contract line and both side files, and only its
+  * successful runs (if any) are timed — a query that never succeeds
+  * contributes no time to the total.
   */
 object Bench {
+
+  /** Time one run of `body`; a throw records `name` in `failed` and
+    * yields no sample.
+    */
+  private[graft] def timeRun(name: String,
+                             failed: scala.collection.mutable.Set[String])(
+                             body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case t: Throwable =>
+      System.err.println(s"bench: $name failed: $t")
+      failed += name
+      None
+    }
+  }
+
+  /** The `"failed":[…]` member, names sorted. */
+  private[graft] def failedJson(failed: Iterable[String]): String =
+    failed.toSeq.sorted.map(n => s"\"$n\"").mkString("\"failed\":[", ",", "]")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -51,14 +76,16 @@ object Bench {
       graft.Lake.tableNames.foreach(t =>
         graft.Lake.table(spark, sfDir, t).limit(1).count())
     } catch { case _: Throwable => () }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
+    val failed = scala.collection.mutable.Set.empty[String]
+    def once(name: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       // noop sink: fully evaluates every output column. A bare count()
       // would let Catalyst PRUNE the computed projections of narrow
       // row-local queries and time little more than the scan.
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = timeRun(name, failed) {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      }
       spark.sharedState.cacheManager.clearCache() // keep every run cold
       t
     }
@@ -72,20 +99,21 @@ object Bench {
     // while two passes separated by the whole suite give every query one
     // sample outside any sub-suite-length spike.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val pass1 = ordered.map { case (_, fn) => once(fn) }
-    val pass2 = ordered.map { case (_, fn) => once(fn) }
-    val sampled = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      val two = Seq(pass1(i), pass2(i))
+    val pass1 = ordered.map { case (name, fn) => once(name, fn) }
+    val pass2 = ordered.map { case (name, fn) => once(name, fn) }
+    val sampled = ordered.zipWithIndex.flatMap { case ((name, fn), i) =>
+      val two = Seq(pass1(i), pass2(i)).flatten
       // third sample when the best is slow in absolute terms OR the two
       // samples disagree strongly (>2× spread = at least one is dirty).
       // The absolute bar is 1 s (lowered from 3 s after round 9 shipped
       // three phantom regressions in the 1–3 s band); round 8's 16.6 s
       // t05 (quiet-box truth: 1.1 s) passed the even older 20 s bar with
       // two equally-dirty samples.
-      val noisy = two.min > 1.0 ||
-        (two.min > 0.3 && two.max / two.min > 2.0)
-      val samples = if (noisy) two :+ once(fn) else two
-      (name, samples.min, samples)
+      val noisy = two.nonEmpty && (two.min > 1.0 ||
+        (two.min > 0.3 && two.max / two.min > 2.0))
+      val samples = if (noisy) two ++ once(name, fn) else two
+      // a query with no successful run has no time to report
+      if (samples.isEmpty) None else Some((name, samples.min, samples))
     }
     // Contamination protocol (round 14): the harness previously RECORDED
     // the external-load tells (raw samples + load averages) but nothing
@@ -106,7 +134,7 @@ object Bench {
     //    box — while the real r13 contamination was 40–60 s spikes.)
     def twoBestDisagree(s: Seq[Double]): Boolean = {
       val b = s.sorted.take(2)
-      b.head > 1.0 && b(1) / b.head > 2.0
+      b.size == 2 && b.head > 1.0 && b(1) / b.head > 2.0
     }
     // loadMid is RECORDED (load_avg_mid in every artifact — forensics
     // for external load arriving mid-run, which otherwise shows up only
@@ -130,16 +158,17 @@ object Bench {
     val results = trigger match {
       case None => sampled
       case Some(_) =>
-        val pass3 = ordered.map { case (_, fn) => once(fn) }
-        sampled.zipWithIndex.map { case ((k, _, s), i) =>
-          val all = s :+ pass3(i)
+        val fns = ordered.toMap
+        sampled.map { case (k, _, s) =>
+          val all = s ++ once(k, fns(k))
           (k, all.min, all)
         }
     }
     val contaminated = trigger.isDefined
-    val contaminationJson =
+    val statusJson =
       s""""contaminated":$contaminated""" + trigger
-        .map(t => s""","contamination_trigger":"$t"""").getOrElse("")
+        .map(t => s""","contamination_trigger":"$t"""").getOrElse("") +
+        "," + failedJson(failed)
     val samplesJson = results
       .map { case (k, _, s) => s"\"$k\":[${s.map(fmt).mkString(",")}]" }
       .mkString("{", ",", "}")
@@ -163,7 +192,7 @@ object Bench {
     }
     val fullPath = repoRoot.resolve("BENCH_FULL.json")
     val samplesPath = repoRoot.resolve("BENCH_SAMPLES.json")
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$contaminationJson,"n_queries":${results.size},"queries_file":"$fullPath","queries":{"""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"n_queries":${results.size},"queries_file":"$fullPath","queries":{"""
     val tail = "}}"
     val budget = 1700 - head.length - tail.length
     val bySlowest = results.sortBy(-_._2).map { case (k, v, _) => s"\"$k\":${fmt(v)}" }
@@ -180,9 +209,9 @@ object Bench {
     val qsFull = results.map { case (k, v, _) => s"\"$k\":${fmt(v)}" }
       .mkString("{", ",", "}")
     writeJson(fullPath,
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$contaminationJson,"queries":$qsFull}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"queries":$qsFull}""")
     writeJson(samplesPath,
-      s"""{"sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$contaminationJson,"samples":$samplesJson}""")
+      s"""{"sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"samples":$samplesJson}""")
     spark.stop()
   }
 }

@@ -10,10 +10,12 @@ import graft.model.{AssetUri, FieldSpec}
   * The reference substitutes `$project/$dataset/$table/$column` into a SQL
   * string and ships it to BigQuery, one round-trip per field (or one combined
   * `select (q1),(q2),…` per column). Here substitution is the same pure
-  * string rewrite, but evaluation is `spark.sql` — Catalyst parses, optimizes
-  * and collapses the N scalar subqueries into a single scan
-  * (CollapseProject + common-subexpression elimination), which is the
-  * native form of the reference's hand-rolled combined-query batching.
+  * string rewrite, and evaluation is `spark.sql` over the same combined
+  * statement. Catalyst does NOT collapse the N uncorrelated scalar
+  * subqueries into one scan: each runs as its own Spark job (a
+  * subquery or broadcast round) before the outer projection, so a
+  * combined query costs about one job per field (q58's profile: ~136 of
+  * its 151 jobs are such rounds).
   */
 object ConfigEval {
 

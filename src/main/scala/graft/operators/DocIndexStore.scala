@@ -28,7 +28,7 @@ import graft.sources.{AtomicStore, StoreCut}
   * of the text, so incremental ingest is [[appendSimhash]]/
   * [[appendMinhash]]: the new batch's signature rows land as an appended
   * batch — commit bytes scale with the BATCH, never the corpus (the same
-  * write-path contract as `TagStore.appendMergeCommit`).
+  * write-path contract as the tag log of `TagFamilyStore.commitJob`).
   */
 object DocIndexStore {
 
@@ -253,8 +253,8 @@ object DocIndexStore {
     * if the table moved because of a rebuild, the re-check waits for
     * the rebuild's cut (transient) or the re-guard sees its declaration
     * and rejects; if it moved because of a sibling append, both pass
-    * and the retry lands. Costs one batch rewrite per lost race (the
-    * TagStore appendMergeCommit trade) — appends race rarely, rebuilds
+    * and the retry lands. Costs one batch rewrite per lost race —
+    * appends race rarely, rebuilds
     * almost never, and the alternative is silent under-detection
     * forever. The committed batch is then published by one manifest
     * advance; a crash between the two leaves the batch invisible until

@@ -14,6 +14,13 @@ import graft.functions.Coerce
   */
 object Sinks {
 
+  /** UTC epoch day of `ts` — THE one session-tz-independent day rule
+    * (shared with UsageTracking's start_date window so the two cannot
+    * drift; floor handles pre-1970 instants correctly).
+    */
+  private[operators] def utcEpochDay(ts: Column): Column =
+    floor(unix_seconds(ts) / lit(86400L))
+
   /** UTC day of a timestamp, independent of `spark.sql.session.timeZone`
     * — epoch-floor arithmetic, not `to_date` (which renders in the
     * session zone: a Los-Angeles-configured writer would file a
@@ -22,13 +29,6 @@ object Sinks {
     * and diverging from the reference's UTC day-partitioned history
     * table, whose timestamps are UTC by construction).
     */
-  /** UTC epoch day of `ts` — THE one session-tz-independent day rule
-    * (shared with UsageTracking's start_date window so the two cannot
-    * drift; floor handles pre-1970 instants correctly).
-    */
-  private[operators] def utcEpochDay(ts: Column): Column =
-    floor(unix_seconds(ts) / lit(86400L))
-
   private def utcDay(ts: Column): Column =
     date_add(lit("1970-01-01").cast("date"), utcEpochDay(ts).cast("int"))
 
@@ -43,21 +43,6 @@ object Sinks {
   def writeHistory(rows: DataFrame, path: String): Unit =
     withHistoryPartition(rows)
       .write.mode("append").partitionBy("event_date").parquet(path)
-
-  /** ACID history append: the batch lands as one atomic
-    * [[graft.sources.AtomicStore.commitAppend]] — a crashed job leaves no
-    * half-visible batch for downstream readers (the plain parquet append
-    * above exposes files as they land). `event_date` rides as a normal
-    * column; day pruning comes from parquet column stats (append batches
-    * are day-aligned in practice), since the manifest lists plain dirs.
-    */
-  def writeHistoryAtomic(rows: DataFrame, path: String): Long =
-    graft.sources.AtomicStore.commitAppend(withHistoryPartition(rows), path)
-
-  /** Read the ACID history store (latest committed version). */
-  def readHistoryAtomic(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame =
-    graft.sources.AtomicStore.read(spark, path)
 
   /** Flatten a tags table to the report shape (BigQueryUtils.py:263–305;
     * FIXTURES.md §3.2): everything stringified except `export_time`.

@@ -264,7 +264,7 @@ object TagEngine {
       .pivot("field_id", config.fields.map(_.fieldId))
       .agg(first("field_value"))
     // no withHistoryPartition here: the SINKS own the event_date
-    // derivation (writeHistory/writeHistoryAtomic both apply it) — doing
+    // derivation (writeHistory and the family store both apply it) — doing
     // it twice invites the two call sites drifting apart
     pivoted.select(
       Seq(eventTime.as("event_time"), assetName.as("asset_name"),

@@ -10,16 +10,15 @@ import graft.sources.{AtomicStore, StoreCut}
   * store-level manifest ([[StoreCut]]), the same shape that closed the
   * index stores' torn-swap class in round 17.
   *
-  * What it fixes: `TagEngine.runJob` + the standalone ACID sinks commit
-  * the job's history append ([[Sinks.writeHistoryAtomic]]) and its tag
-  * merge ([[TagStore.mergeCommit]]/[[TagStore.appendMergeCommit]]) as
-  * SEPARATE AtomicStore commits — each internally atomic, but a crash
-  * between them leaves history recording a write that never landed in
-  * the tag store (or vice versa). The reference is equally non-atomic
-  * there (the catalog RPC then the BQ history insert,
-  * DataCatalogController.py:1608–1652 → BigQueryUtils.py:391–440 — a
-  * crashed task simply leaves the pair torn), so this store is
-  * beyond-parity hardening: the engine's own bar after round 17.
+  * It is the engine's one persisted tag-write path. Committing a job's
+  * history append and its tag merge as SEPARATE store commits — each
+  * internally atomic — would let a crash between them leave history
+  * recording a write that never landed in the tag store (or vice
+  * versa). The reference is equally non-atomic there (the catalog RPC
+  * then the BQ history insert, DataCatalogController.py:1608–1652 →
+  * BigQueryUtils.py:391–440 — a crashed task simply leaves the pair
+  * torn), so this store is beyond-parity hardening: the engine's own
+  * bar after round 17.
   *
   * Layout under a family root:
   * {{{
@@ -52,8 +51,8 @@ import graft.sources.{AtomicStore, StoreCut}
   * adopt-the-chain contract is right for index stores and wrong here.
   *
   * Scale notes (the 100 TB write family): tags take the delta-log form —
-  * bytes per job scale with the BATCH (upserts + tombstones), never the
-  * tag lake ([[TagStore.appendMergeCommit]]'s contract) — history and
+  * bytes per job scale with the BATCH (upserts + tombstones,
+  * [[TagStore.mergeDelta]]), never the tag lake — history and
   * reports are plain appends, and the cut publish is one metadata file
   * (one LIST + one create + one atomic claim). The job lease serializes
   * only the COMMIT section (metadata ops + batch-sized writes), not
@@ -113,8 +112,8 @@ object TagFamilyStore {
     * (`incoming` in the unified tag-row shape — upserts plus the
     * delete-when-all-empty trigger, exactly [[TagStore.mergeDelta]]'s
     * encoding), its history rows (must carry `event_time`; the
-    * `event_date` day column is derived here, same rule as the
-    * standalone sinks) and optionally its report rows (must carry
+    * `event_date` day column is derived here, same rule as
+    * [[Sinks.writeHistory]]) and optionally its report rows (must carry
     * `export_time`). All parts land as separate table commits and become
     * visible together via ONE cut publish — or not at all.
     *
@@ -229,14 +228,14 @@ object TagFamilyStore {
     // Versions are PREDICTED from one entry-time resolve per part (under
     // the job lease this tick is the only publisher, so part p's j-th
     // commit lands at base(p)+1+j); the consume step verifies the
-    // prediction before each publish and falls back to the in-line
-    // commitChained write+publish on any mismatch — an out-of-protocol
-    // writer degrades to the old path, never to a wrong __batch stamp.
+    // prediction before each publish, and a miss — only an
+    // out-of-protocol writer can cause one — fails the tick like a lost
+    // cut CAS, never publishing a wrong __batch stamp.
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     final case class Planned(part: String, predictedV: Long,
-                             mk: Long => DataFrame, fut: Future[String]) {
+                             fut: Future[String]) {
       @volatile var consumed = false
     }
     val nextV = scala.collection.mutable.Map.empty[String, Long]
@@ -244,7 +243,7 @@ object TagFamilyStore {
       val v = nextV.getOrElse(part,
         AtomicStore.currentVersion(spark, s"$root/$part").getOrElse(-1L) + 1)
       nextV(part) = v + 1
-      Planned(part, v, mk,
+      Planned(part, v,
         Future(blocking(AtomicStore.writeData(mk(v), s"$root/$part"))))
     }
     val planned: Seq[Seq[Planned]] = jobs.map { job =>
@@ -269,26 +268,29 @@ object TagFamilyStore {
     jobs.zipWithIndex.foreach { case (job, i) =>
       planned(i).foreach { p =>
         val table = s"$root/${p.part}"
-        val (v, rel) = {
-          val pre =
-            try Some(Await.result(p.fut, Duration.Inf))
-            catch { case t: Throwable => p.consumed = true; throw t }
-          p.consumed = true
-          val actualNext =
-            AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1
-          if (actualNext == p.predictedV &&
-              AtomicStore.publish(spark, table,
-                parents(p.part) :+ pre.get, p.predictedV))
-            (p.predictedV, pre.get)
-          else {
-            // prediction missed (out-of-protocol writer) — degrade to
-            // the sequential write+publish path with its loud bound
-            pre.foreach(AtomicStore.reclaimData(spark, table, _))
-            commitChained(spark, root, p.part, parents(p.part), p.mk)
-          }
+        val rel =
+          try Await.result(p.fut, Duration.Inf)
+          finally p.consumed = true
+        val actualNext =
+          AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1
+        if (actualNext != p.predictedV ||
+            !AtomicStore.publish(spark, table,
+              parents(p.part) :+ rel, p.predictedV)) {
+          // under the job lease nothing else publishes: a missed
+          // prediction is a writer outside the family protocol. Abort
+          // the tick (the catch below reclaims and records the orphans);
+          // the re-run truncates back to the pin and lands once
+          AtomicStore.reclaimData(spark, table, rel)
+          throw new java.util.ConcurrentModificationException(
+            s"TagFamilyStore: $table could not publish its predicted " +
+              s"v${p.predictedV} while this " +
+              s"${if (jobs.sizeIs > 1) "tick" else "job"} held the job " +
+              "lease — another writer is committing to it outside the " +
+              "family protocol. These commits are orphaned (the next " +
+              "commit truncates them); re-run")
         }
         parents += p.part -> (parents(p.part) :+ rel)
-        versions += p.part -> v
+        versions += p.part -> p.predictedV
         attemptCommits(p.part) += 1
         // hooks fire at the same post-publish points as always
         p.part match {
@@ -358,8 +360,7 @@ object TagFamilyStore {
     // published — a maintenance hiccup must not fail it): fold any part
     // whose pinned chain outgrew the dir threshold, so a long-lived
     // store's read cost stays flat in JOB count instead of decaying one
-    // manifest + one small batch dir per job (the appendMergeCommit
-    // policy, family-cut flavored)
+    // manifest + one small batch dir per job
     if (compactAboveBatches > 0)
       try versions.foreach { case (part, v) =>
         if (AtomicStore.filesAt(spark, s"$root/$part", v)
@@ -375,35 +376,6 @@ object TagFamilyStore {
       versions.toSeq.sortBy(_._1)
         .map { case (p, v) => s"$p=v$v" }.mkString(" "))
     versions + ("manifest" -> cutV)
-  }
-
-  /** Commit `mk(v)` as a batch whose manifest lists exactly `parents`
-    * plus this batch — the truncating append: a crashed predecessor's
-    * committed-but-never-published suffix is deliberately NOT adopted
-    * as a parent (see the object doc — a family batch is half a job,
-    * and adopting half a job is the torn state). Publishes at the
-    * table's next version so the CAS name is always free; under the
-    * job lease nothing else publishes, so the bounded retry exists
-    * only to fail loudly on a lease-bypassing writer.
-    */
-  private def commitChained(spark: SparkSession, root: String, part: String,
-                            parents: Seq[String],
-                            mk: Long => DataFrame): (Long, String) = {
-    val table = s"$root/$part"
-    var attempt = 0
-    while (attempt < 8) {
-      val v = AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1
-      val rel = AtomicStore.writeData(mk(v), table)
-      if (AtomicStore.publish(spark, table, parents :+ rel, v))
-        return (v, rel)
-      AtomicStore.reclaimData(spark, table, rel)
-      attempt += 1
-      Thread.sleep(20L * attempt)
-    }
-    throw new IllegalStateException(
-      s"TagFamilyStore: lost 8 straight publishes at $table while holding " +
-        "the job lease — another writer is committing to this table " +
-        "outside the family protocol")
   }
 
   // ------------------------------------------------------------- reads
@@ -666,8 +638,8 @@ object TagFamilyStore {
     * the fold into the cut. Materializes from the PIN (see the object
     * doc: folding from current would adopt a crashed job's orphan
     * batches — the family inversion of the index stores' fold), reduces
-    * tags to their latest-wins state (the log-semantics fold,
-    * `TagStore.compactLog`'s analogue) and squashes history/reports
+    * tags to their latest-wins state (the log-semantics fold) and
+    * squashes history/reports
     * row-preserving. Publishes fold-marked at the table's next version,
     * advances the cut, and vacuums with the retained-cuts floor so
     * time-travel pins stay readable.
@@ -677,8 +649,8 @@ object TagFamilyStore {
     StoreCut.fold(spark, root, part,
       StoreCut.TruncateToPin((pinned, v) =>
         if (part == TagsPart)
-          // the log-semantics fold (TagStore.compactLog's analogue):
-          // squash the pinned chain to its latest-wins state, re-marked
+          // the log-semantics fold: squash the pinned chain to its
+          // latest-wins state ([[TagStore.latestStateOf]]), re-marked
           // as one upsert batch at the fold's version
           TagStore.latestStateOf(pinned)
             .withColumn("__op", lit("upsert")).withColumn("__batch", lit(v))

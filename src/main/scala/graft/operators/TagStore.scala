@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.AtomicStore
 
 /** Tag-state maintenance (SURVEY.md §2 A9/A10, B5).
   *
@@ -15,6 +14,11 @@ import graft.sources.AtomicStore
   * Delta/Iceberg `MERGE` (ACID makes the 429-retry machinery moot); the
   * transforms below are exactly the MERGE semantics expressed as joins so
   * they run anywhere parquet does.
+  *
+  * Persisting tag state is [[TagFamilyStore]]'s job: it appends the
+  * [[mergeDelta]] change set of each job to a cut-pinned log and reads
+  * the state back through [[latestStateOf]] — the two log functions
+  * below are the encoding that store shares with these transforms.
   *
   * Scale notes: both joins are equi-joins on the tag key; with the tags table
   * bucketed by `asset_uri` the shuffle on the existing side disappears, and
@@ -30,7 +34,7 @@ object TagStore {
     * "Win" is by ROW PRESENCE, not per-column coalesce: a matched incoming
     * row replaces the existing value even when the incoming value is NULL
     * (a value-level coalesce would silently keep stale data on a
-    * legitimate NULL update — and diverge from the append-log path, whose
+    * legitimate NULL update — and diverge from the persisted log, whose
     * latest-wins replay lets the newest row win outright).
     */
   def upsert(existing: DataFrame, incoming: DataFrame): DataFrame = {
@@ -51,8 +55,8 @@ object TagStore {
     * 1581–1592), as one definition: the tag-instance keys of `incoming`
     * whose every field value is empty (NULL counts as empty). Shared by
     * [[dropAllEmptyTags]], [[applyWithDeletes]] and the delta-log
-    * [[appendMergeCommit]], so the reference-semantics rule cannot drift
-    * between the snapshot and append merge paths.
+    * [[mergeDelta]], so the reference-semantics rule cannot drift
+    * between the in-memory transforms and the persisted log.
     */
   private def allEmptyTagKeys(incoming: DataFrame): DataFrame =
     incoming
@@ -95,200 +99,11 @@ object TagStore {
     untouched.unionByName(incoming)
   }
 
-  // ------------------------------------------------ persisted (ACID) form
-
-  /** Load the persisted tag state (empty frame in `incoming`'s schema
-    * when the store has never been committed).
-    */
-  def load(spark: SparkSession, path: String, schemaLike: DataFrame): DataFrame =
-    if (AtomicStore.currentVersion(spark, path).isDefined)
-      AtomicStore.read(spark, path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaLike.schema)
-
-  /** The TRANSACTIONAL form of the tag MERGE — what the reference's
-    * retried per-tag RPCs (DataCatalogController.py:1608–1652) become on
-    * an ACID table: read the committed state, compute the next state
-    * set-based ([[applyWithDeletes]]), and swap it in with a
-    * COMPARE-AND-SWAP commit at the read version
-    * ([[AtomicStore.commitSnapshotIfUnchanged]]). Losing the publish race
-    * re-reads the winner's state and RE-RUNS the merge — never
-    * republishes a state computed against a stale base, so no concurrent
-    * writer's update is lost. A crash mid-merge leaves the previous
-    * version fully readable (data files land before the manifest
-    * publishes — AtomicStoreSpec proves it).
-    */
-  def mergeCommit(spark: SparkSession, path: String,
-                  incoming: DataFrame): Long = {
-    requireNotFamilyGoverned(spark, path, "mergeCommit")
-    casCommit(spark, path, incoming, applyWithDeletes)
-  }
-
-  /** Refuse the standalone writers/folds on a table governed by a
-    * [[TagFamilyStore]] cut (the same structural closure as
-    * `AtomicStore.compact`'s): a direct merge would commit tag state the
-    * family's history never records (the exact tear the family cut
-    * exists to kill), a direct log fold would fold a crashed job's
-    * ORPHAN batches into a snapshot and its keep-2 vacuum would reclaim
-    * the cut-pinned manifests out from under every pinned reader.
-    */
-  private def requireNotFamilyGoverned(spark: SparkSession, path: String,
-                                       what: String): Unit =
-    if (AtomicStore.isCutGoverned(spark, path))
-      throw new IllegalStateException(
-        s"TagStore.$what: $path is governed by a store cut (a sibling " +
-          "manifest pins it — a TagFamilyStore tags table). Standalone " +
-          "merges/folds bypass the family's atomic job publish and its " +
-          "pin-aware retention; use TagFamilyStore.commitJob / compact " +
-          "instead. (Governance, once observed, is cached for this JVM's " +
-          "lifetime: a store dismantled at runtime — out-of-contract — " +
-          "keeps refusing until restart)")
-
-  /** Transactional [[reconcile]]: replace the touched scopes atomically,
-    * same CAS-and-recompute discipline as [[mergeCommit]].
-    */
-  def reconcileCommit(spark: SparkSession, path: String,
-                      incoming: DataFrame): Long = {
-    requireNotFamilyGoverned(spark, path, "reconcileCommit")
-    casCommit(spark, path, incoming, reconcile)
-  }
-
-  /** CONSECUTIVE vacuum-race retries allowed before concluding the
-    * missing file is a persistent failure, not a transient race. A real
-    * race resolves on the next re-read (the racing writer's manifest is
-    * already durable), and the counter resets whenever a round completes
-    * without a race (a plain lost CAS is other writers' progress, not a
-    * failure), so the cap never fires under contention however long the
-    * commit loop runs; it exists so a genuinely vanished input — the
-    * CALLER's temp dir deleted, lost checkpoint blocks — surfaces as the
-    * original error instead of a hot loop re-running the same failing
-    * job forever.
-    */
-  private val MaxRaceRetries = 8
-
-  /** A racing writer's vacuum removed a manifest (or a data dir past the
-    * grace window) between our listStatus and open — the shared detector
-    * now lives with vacuum itself ([[AtomicStore.isVacuumRace]]).
-    */
-  private[operators] def isVacuumRace(e: Throwable): Boolean =
-    AtomicStore.isVacuumRace(e)
-
-  private def casCommit(spark: SparkSession, path: String,
-                        incoming: DataFrame,
-                        next: (DataFrame, DataFrame) => DataFrame): Long = {
-    var races = 0
-    while (true) {
-      // Guard ONLY resolve/merge/commit: a vacuum race there is
-      // indistinguishable from losing the CAS — re-read and re-merge.
-      val committed =
-        try {
-          val base = AtomicStore.currentVersion(spark, path)
-          val state = next(load(spark, path, incoming), incoming)
-          val r = AtomicStore.commitSnapshotIfUnchanged(state, path, base)
-          races = 0 // round completed race-free (a lost CAS is other
-          // writers' progress, not failure): only CONSECUTIVE races count
-          // toward the cap — a vanished input fails every round
-          r
-        } catch {
-          case e: Throwable if isVacuumRace(e) =>
-            races += 1
-            if (races > MaxRaceRetries) throw e
-            Thread.sleep(50L * races)
-            None
-        }
-      committed match {
-        case Some(v) =>
-          // Post-commit maintenance OUTSIDE the guard: our commit already
-          // succeeded, so a racing writer's vacuum failing here must not
-          // re-run the merge (that would double-apply `next`, burn a
-          // version, and return the wrong one). Tolerate and return v.
-          // Bounds steady-merge growth: each snapshot is a full table copy
-          // (grace window protects in-flight concurrent commits).
-          try AtomicStore.vacuum(spark, path, keepVersions = 2)
-          catch { case e: Throwable if isVacuumRace(e) => () }
-          return v
-        case None => () // conflict: re-read the new base and re-merge
-      }
-    }
-    -1L // unreachable
-  }
-
-  // ------------------------------------------- delta-log (append) form
-
-  /** The 100 TB WRITE PATH for tag state: [[mergeCommit]] rewrites the
-    * whole table per merge (snapshot swap — right for small/medium
-    * stores, write-amplified at tag-lake scale). Here a merge APPENDS
-    * only the change set — upsert rows plus one tombstone row per
-    * all-empty incoming tag instance (the delete-when-all-empty trigger,
-    * DataCatalogController.py:1581–1592) — as one atomic
-    * [[AtomicStore]] commit whose rows are stamped with their commit
-    * version, and the current state is the latest-wins view of
-    * [[readLatestState]]. Persisted bytes scale with the BATCH; the
-    * periodic fold back to a snapshot is [[compactLog]]. Same
-    * CAS-and-retry discipline as [[mergeCommit]]: the batch stamp must
-    * equal the commit version, so a lost publish race re-stamps and
-    * re-publishes (rare; conflicts cost one batch rewrite).
-    */
-  def appendMergeCommit(spark: SparkSession, path: String,
-                        incoming: DataFrame,
-                        compactAboveBatches: Int = 64): Long = {
-    requireNotFamilyGoverned(spark, path, "appendMergeCommit")
-    val delta = mergeDelta(incoming)
-    var races = 0
-    while (true) {
-      // hoisted so BOTH failure paths (lost publish, vacuum race) can
-      // reclaim the loser's already-materialized batch dir — otherwise a
-      // contended store below the auto-fold threshold accumulates dead
-      // full-size parquet dirs that only an explicit vacuum would sweep
-      var rel: String = null
-      try {
-        val base = AtomicStore.currentVersion(spark, path)
-        val v = base.getOrElse(-1L) + 1
-        rel = AtomicStore.writeData(
-          delta.withColumn("__batch", lit(v)), path)
-        val parents = base.toSeq
-          .flatMap(AtomicStore.filesAt(spark, path, _))
-          .map(p => new org.apache.hadoop.fs.Path(p).getName)
-        if (AtomicStore.publish(spark, path, parents :+ rel, v)) {
-          // steady-state maintenance wired in (the Ingest.ingestBatchCommit
-          // policy): each merge leaves one more batch dir, so a long-lived
-          // log otherwise decays into listing/open cost linear in MERGE
-          // COUNT. Past the threshold, fold opportunistically — bounded
-          // attempts and best-effort, because a merge that COMMITTED must
-          // never fail on its maintenance losing a race.
-          if (compactAboveBatches > 0 &&
-              parents.size + 1 > compactAboveBatches)
-            try compactLog(spark, path, maxAttempts = 4)
-            catch { case scala.util.control.NonFatal(_) => () }
-          return v
-        }
-        // conflict: the stamp no longer matches the next version — the
-        // loser's batch is known-unpublished, reclaim it before the
-        // rewrite. Round completed race-free, so the race cap resets.
-        AtomicStore.reclaimData(spark, path, rel)
-        races = 0
-      } catch {
-        // resolved manifest vacuumed by a racing compaction (possibly
-        // surfacing wrapped in a Spark/Analysis exception) — same as a
-        // lost publish race: reclaim the orphaned batch (when the write
-        // got that far), re-resolve and re-stamp (bounded: a missing
-        // INPUT would throw identically forever)
-        case e: Throwable if isVacuumRace(e) =>
-          if (rel != null) AtomicStore.reclaimData(spark, path, rel)
-          races += 1
-          if (races > MaxRaceRetries) throw e
-          Thread.sleep(50L * races)
-      }
-    }
-    -1L // unreachable
-  }
-
   /** The CHANGE SET one merge appends to the delta log: upsert rows
     * plus one tombstone per all-empty incoming tag instance — the
-    * delete-when-all-empty trigger as log rows. ONE definition shared
-    * by [[appendMergeCommit]] and the tag-family store's atomic job
-    * commit ([[TagFamilyStore]]), so the log encoding cannot drift
-    * between the standalone and family write paths.
+    * delete-when-all-empty trigger as log rows. The tag-family store's
+    * job commit ([[TagFamilyStore]]) stamps it with the batch version;
+    * persisted bytes scale with the BATCH, never the tag lake.
     */
   private[operators] def mergeDelta(incoming: DataFrame): DataFrame = {
     val emptyKeys = allEmptyTagKeys(incoming)
@@ -302,31 +117,12 @@ object TagStore {
     upserts.unionByName(deletes)
   }
 
-  /** Latest-wins state over the [[appendMergeCommit]] log: per field key
-    * the newest upsert wins; a tag instance's newest tombstone hides
-    * every field row at or before it (later upserts resurrect the tag —
-    * exactly [[applyWithDeletes]] replayed in batch order, which
-    * TagStoreSpec pins by equivalence).
-    */
-  def readLatestState(spark: SparkSession, path: String): DataFrame =
-    latestStateOf(AtomicStore.read(spark, path))
-
-  /** TIME TRAVEL on the delta log: the latest-wins state AT a committed
-    * log version — the tag-store symmetric of the index stores' loadAt.
-    * A version's manifest lists exactly the batches at or below it, so
-    * pinning the version pins the replay: a state captured at a job
-    * boundary re-reads bit-identically after later merges (within the
-    * vacuum retention window; an aged-out version fails loudly via
-    * [[AtomicStore.readAt]], the same staleness contract as every
-    * pinned read).
-    */
-  def readLatestStateAt(spark: SparkSession, path: String,
-                        version: Long): DataFrame =
-    latestStateOf(AtomicStore.readAt(spark, path, version))
-
-  /** The latest-wins replay itself, over whichever resolved view of the
-    * log the caller pinned (shared by the current-state and time-travel
-    * reads and the family store's cut-pinned read).
+  /** Latest-wins state over a [[mergeDelta]] log, whichever resolved
+    * view of it the caller pinned (the family store's current, time-travel
+    * and fold reads): per field key the newest upsert wins; a tag
+    * instance's newest tombstone hides every field row at or before it
+    * (later upserts resurrect the tag — exactly [[applyWithDeletes]]
+    * replayed in batch order, which AtomicStoreSpec pins by equivalence).
     */
   private[operators] def latestStateOf(log: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -342,74 +138,5 @@ object TagStore {
       .join(delB, TagInstanceKey, "left")
       .filter(col("__del_b").isNull || col("__batch") > col("__del_b"))
       .select(dataCols.toIndexedSeq.map(col): _*)
-  }
-
-  /** Fold the merge log into one snapshot batch (ConfigStore.compact's
-    * analogue): the current state re-lands as a single batch-stamped
-    * commit REPLACING the log (snapshot semantics via the manifest swap),
-    * and [[AtomicStore.vacuum]] reclaims the superseded batches past the
-    * grace window.
-    *
-    * `maxAttempts` bounds the lost-CAS go-arounds: a dedicated
-    * maintenance caller keeps the unbounded default (the fold MUST
-    * eventually land), while the write-path auto-fold passes a small
-    * budget — under sustained merge pressure from co-writers it gives up
-    * rather than stall the committing writer (opportunistic maintenance,
-    * the [[AtomicStore.compact]] rule).
-    */
-  def compactLog(spark: SparkSession, path: String,
-                 maxAttempts: Int = Int.MaxValue): Unit = {
-    requireNotFamilyGoverned(spark, path, "compactLog")
-    var races = 0
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts) return
-      // Same guard discipline as casCommit: only resolve/fold/commit is
-      // retryable; the post-commit vacuum runs OUTSIDE so its failure can
-      // never swallow a successful fold and re-run it (double-fold burns a
-      // version and violates the soak test's dense-versions invariant).
-      val outcome: Option[Boolean] =
-        try {
-          val base = AtomicStore.currentVersion(spark, path)
-          if (base.isEmpty) Some(false) // nothing committed — nothing to fold
-          // already one batch dir → already compact: skip the full-table
-          // rewrite and the burned version (the AtomicStore.compact
-          // early-out rule — a periodic maintenance tick on a quiet store
-          // must be a metadata-sized no-op, not a snapshot per tick)
-          else if (AtomicStore.filesAt(spark, path, base.get)
-              .lengthCompare(1) <= 0) Some(false)
-          else {
-            // state resolved INSIDE the loop: a lost race must re-read the
-            // winner's log, not republish a fold of the superseded file set
-            val v = base.getOrElse(-1L) + 1
-            val state = readLatestState(spark, path)
-              .withColumn("__op", lit("upsert"))
-              .withColumn("__batch", lit(v))
-            val won =
-              AtomicStore.commitSnapshotIfUnchanged(state, path, base).isDefined
-            races = 0 // round completed race-free — consecutive-race cap resets
-            if (won) Some(true)
-            else None // lost the CAS — re-read the winner's log and re-fold
-          }
-        } catch {
-          // resolved manifest vacuumed by a racing writer mid-read —
-          // retry (bounded: a persistently missing input throws forever)
-          case e: Throwable if isVacuumRace(e) =>
-            races += 1
-            if (races > MaxRaceRetries) throw e
-            Thread.sleep(50L * races)
-            None
-        }
-      outcome match {
-        case Some(committed) =>
-          if (committed) {
-            try AtomicStore.vacuum(spark, path, keepVersions = 2)
-            catch { case e: Throwable if isVacuumRace(e) => () }
-          }
-          return
-        case None => ()
-      }
-    }
   }
 }

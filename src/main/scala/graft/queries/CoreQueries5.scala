@@ -686,42 +686,52 @@ object CoreQueries5 {
   // --------------- ACID tag-store merge round trip (q48)
 
   /** The TRANSACTIONAL tag store under the oracle gate (q45's pattern for
-    * the ACID layer): three committed merges — seed, upsert-with-update,
+    * the ACID layer): three committed jobs — seed, upsert-with-update,
     * all-empty delete — land through
-    * [[graft.operators.TagStore.mergeCommit]] (data files first, manifest
-    * published by atomic rename), plus one CRASHED merge whose data lands
-    * but whose manifest never publishes. The output is the committed
-    * state read back through the manifest — the crashed batch must be
-    * invisible, the delete applied, the update visible
+    * [[graft.operators.TagFamilyStore.commitJob]] (data files first, one
+    * cut published per job), plus one CRASHED job whose tag batch lands
+    * but whose cut never publishes. The output is the committed state
+    * read back through the cut — the crashed batch must be invisible,
+    * the delete applied, the update visible
     * (DataCatalogController.py:1608–1652's idempotent upsert + :1581–1592
-    * delete-when-all-empty, expressed as atomic snapshot swaps).
+    * delete-when-all-empty).
     */
   def q48AtomicTagStore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.TagStore
-    import graft.sources.AtomicStore
+    import graft.operators.TagFamilyStore
     def mk(rows: Seq[(String, String, String)]): DataFrame =
       rows.toDF("asset_uri", "field_id", "field_value")
         .select(col("asset_uri"), lit("").as("column"),
-          lit("gov").as("template_id"), col("field_id"), col("field_value"))
+          lit("gov").as("template_id"), col("field_id"),
+          lit("string").as("field_type"), col("field_value"))
+    def hist(rows: Seq[(String, String, String)]): DataFrame =
+      rows.map(_._1).distinct.toDF("asset_name")
+        .select(to_timestamp(lit("2026-01-05 00:00:00")).as("event_time"),
+          col("asset_name"))
     CoreQueries.withTempDir(spark, "graft_q48") { storePath =>
-      val storeDir = storePath.toString
-      TagStore.mergeCommit(spark, storeDir, mk(Seq(
+      val root = storePath.toString
+      def commit(rows: Seq[(String, String, String)]): Unit =
+        TagFamilyStore.commitJob(spark, root, mk(rows), hist(rows))
+      commit(Seq(
         ("bigquery/project/p/dataset/lake/orders", "n_rows", "100"),
         ("bigquery/project/p/dataset/lake/orders", "env", "DEV"),
-        ("bigquery/project/p/dataset/lake/region", "n_rows", "5"))))
-      TagStore.mergeCommit(spark, storeDir, mk(Seq(
+        ("bigquery/project/p/dataset/lake/region", "n_rows", "5")))
+      commit(Seq(
         ("bigquery/project/p/dataset/lake/orders", "env", "PROD"),
-        ("bigquery/project/p/dataset/lake/nation", "n_rows", "25"))))
-      // crashed merge: next-state data lands, manifest never publishes
-      AtomicStore.writeData(TagStore.applyWithDeletes(
-        AtomicStore.read(spark, storeDir),
-        mk(Seq(("bigquery/project/p/dataset/lake/orders", "env", "GONE")))),
-        storeDir)
-      // committed merge: all-empty tag instance deletes the region tag
-      TagStore.mergeCommit(spark, storeDir, mk(Seq(
-        ("bigquery/project/p/dataset/lake/region", "n_rows", ""))))
-      AtomicStore.read(spark, storeDir)
+        ("bigquery/project/p/dataset/lake/nation", "n_rows", "25")))
+      // crashed job: its tag batch lands, the cut never publishes
+      TagFamilyStore.setTestMidJobHook(root, s =>
+        if (s == "tags") throw new RuntimeException("injected job crash"))
+      try {
+        commit(Seq(("bigquery/project/p/dataset/lake/orders", "env", "GONE")))
+        throw new IllegalStateException("q48: the injection must fire")
+      } catch {
+        case e: RuntimeException
+            if e.getMessage == "injected job crash" => ()
+      } finally TagFamilyStore.clearTestMidJobHook(root)
+      // committed job: all-empty tag instance deletes the region tag
+      commit(Seq(("bigquery/project/p/dataset/lake/region", "n_rows", "")))
+      TagFamilyStore.readTags(spark, root)
         .select("asset_uri", "field_id", "field_value")
         .orderBy("asset_uri", "field_id")
     }

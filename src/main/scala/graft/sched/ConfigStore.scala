@@ -229,7 +229,6 @@ object ConfigStore {
       // nothing ever appended (and no crashed swap to recover) -> nothing
       // to fold: a maintenance tick on a never-seeded store is a quiet
       // no-op, not an AnalysisException from reading a nonexistent path
-      // (the TagStore.compactLog empty-store rule)
       val live = new Path(logPath)
       if (!fs.exists(live)) return
       write(readLatest(spark, logPath), snapshotPath)

@@ -566,7 +566,7 @@ object AtomicStore {
     * Correct for any store whose visible state IS its row multiset (the
     * append-only stores above): the fold preserves rows exactly. Stores
     * with REDUCIBLE log semantics have their own folds that also shrink
-    * the state (`TagStore.compactLog`, `ConfigStore.compact`); this is
+    * the state (`TagFamilyStore.compact`, `ConfigStore.compact`); this is
     * the row-preserving primitive underneath.
     *
     * Concurrency: the fold DERIVES from a read of the store, so it
@@ -696,10 +696,9 @@ object AtomicStore {
   /** Is `root` a component table of a store-level manifest cut — i.e.
     * does a sibling `manifest` KV store's current cut pin this table's
     * directory name (component tables live directly under their store
-    * root by construction)? Shared by [[compact]]'s refusal below —
-    * the documented-misuse seam closed structurally in round 18 — and
-    * the tag-store writers' family guard (`TagStore`). A probe failure
-    * (after one retry) means "not provably governed" (a table named like
+    * root by construction)? Used by [[compact]]'s refusal below — the
+    * documented-misuse seam closed structurally in round 18. A probe
+    * failure (after one retry) means "not provably governed" (a table named like
     * a component but outside any cut store must not be bricked by a
     * stray sibling file) — but it is COUNTED
     * ([[cutGovernProbeFailures]]) and logged, so a guard that can't see

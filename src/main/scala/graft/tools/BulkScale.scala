@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
-import graft.operators.{ConfigDispatch, EngineInputs}
+import graft.operators.{ConfigDispatch, EngineInputs, TagEngine, TagFamilyStore,
+  TagStore}
 
 /** Measures the set-based dynamic-config path at the reference's load-test
   * asset counts (examples/load/configs/static_asset_1m.json scales to 10⁶
@@ -75,44 +76,38 @@ object BulkScale {
       println(f"BULKSCALE assets=$n%7d rows=${n * fields.length}%8d " +
         f"wall=$dt%6.1fs sql_executions=${counter.get()}")
 
-      // END-TO-END: the same tag rows through the ACID write path the
-      // engine actually persists with — compute + applyWithDeletes MERGE
-      // + CAS commit + manifest publish (the reference's load test
-      // verifies WRITTEN tags, examples/load/check_tags.py:11–48; a noop
-      // sink leaves the commit leg unmeasured). Wall includes recomputing
-      // the aggregation (this is the whole job, not just the sink).
+      // END-TO-END: the same tag rows through the write path the engine
+      // persists with — compute + the family store's job commit (tag
+      // delta batch + history batch + one cut publish). The reference's
+      // load test verifies WRITTEN tags (examples/load/check_tags.py:
+      // 11–48); a noop sink leaves the commit leg unmeasured. Wall
+      // includes recomputing the aggregation (this is the whole job, not
+      // just the sink).
       val store = java.nio.file.Files
         .createTempDirectory(s"graft_bulk_store_$n").toString
+      def commit(rows: org.apache.spark.sql.DataFrame): Long = {
+        val incoming = rows.localCheckpoint()
+        TagFamilyStore.commitJob(spark, store, incoming,
+          TagEngine.historyRows(TagStore.dropAllEmptyTags(incoming), config,
+            current_timestamp(), lit(s"bulk_$n")))("manifest")
+      }
       val t1 = System.nanoTime()
-      val v0 = graft.operators.TagStore.mergeCommit(spark, store, out)
+      val c0 = commit(out)
       val dtCommit = (System.nanoTime() - t1) / 1e9
-      println(f"BULKSCALE_COMMIT assets=$n%7d first_merge wall=$dtCommit%6.1fs " +
-        f"version=$v0 store_bytes=${Fs.dirBytes(store)}")
+      println(f"BULKSCALE_COMMIT assets=$n%7d full_state wall=$dtCommit%6.1fs " +
+        f"cut=$c0 store_bytes=${Fs.dirBytes(store)}")
       if (n == 1000000) {
-        // steady state at the 1M envelope: a SECOND full merge pays the
-        // read-existing + MERGE + snapshot rewrite (the write-amplified
-        // form)...
-        val t2 = System.nanoTime()
-        val v1 = graft.operators.TagStore.mergeCommit(spark, store, out)
-        val dtRe = (System.nanoTime() - t2) / 1e9
-        println(f"BULKSCALE_COMMIT assets=$n%7d re_merge    wall=$dtRe%6.1fs " +
-          f"version=$v1 store_bytes=${Fs.dirBytes(store)}")
-        // ...while the delta-log path appends only the batch: seed the
-        // log with the full 1M-asset state, then land a 1k-asset
-        // incremental batch — committed bytes must scale with the BATCH,
-        // not the table (the 100 TB write-path contract).
-        val logStore = java.nio.file.Files
-          .createTempDirectory("graft_bulk_log").toString
-        graft.operators.TagStore.appendMergeCommit(spark, logStore, out)
-        val seeded = Fs.dirBytes(logStore)
+        // steady state at the 1M envelope: a 1k-asset incremental job on
+        // top of the full state — committed bytes must scale with the
+        // BATCH, not the table (the 100 TB write-path contract)
+        val seeded = Fs.dirBytes(store)
         val inc = out.filter(col("asset_uri") <
           "bigquery/project/p/dataset/lake/events_0000999")
         val t3 = System.nanoTime()
-        graft.operators.TagStore.appendMergeCommit(spark, logStore, inc)
+        commit(inc)
         val dtApp = (System.nanoTime() - t3) / 1e9
-        println(f"BULKSCALE_COMMIT assets=$n%7d append_1k   wall=$dtApp%6.1fs " +
-          f"batch_bytes=${Fs.dirBytes(logStore) - seeded} log_bytes=${Fs.dirBytes(logStore)}")
-        Fs.deleteRec(logStore)
+        println(f"BULKSCALE_COMMIT assets=$n%7d append_1k  wall=$dtApp%6.1fs " +
+          f"batch_bytes=${Fs.dirBytes(store) - seeded} store_bytes=${Fs.dirBytes(store)}")
       }
       Fs.deleteRec(store)
     }

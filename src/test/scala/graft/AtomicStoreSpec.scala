@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TagStore
-import graft.sources.AtomicStore
+import graft.operators.{TagFamilyStore, TagStore}
+import graft.sources.{AtomicStore, StoreCut}
 
 /** Commit-log protocol contract: readers never observe partial commits,
   * appends never rewrite published files, concurrent publishes serialize
@@ -19,6 +19,16 @@ class AtomicStoreSpec extends SparkSpec {
       .withColumn("column", lit("")).withColumn("template_id", lit("gov"))
       .withColumn("field_id", lit("n_rows"))
       .select("asset_uri", "column", "template_id", "field_id", "field_value")
+
+  /** One history row per tagged asset — the family store's job commit
+    * needs a history batch beside every tag batch.
+    */
+  private def hist(tagRows: org.apache.spark.sql.DataFrame) =
+    tagRows.select(to_timestamp(lit("2026-01-05 00:00:00")).as("event_time"),
+      col("asset_uri").as("asset_name"))
+
+  private def state(df: org.apache.spark.sql.DataFrame) =
+    df.select("asset_uri", "field_value").as[(String, String)].collect().toSet
 
   test("snapshot commits version and round-trips; next snapshot replaces") {
     val r = root()
@@ -139,150 +149,45 @@ class AtomicStoreSpec extends SparkSpec {
 
   test("CAS snapshot commit refuses a stale base; merge retry converges") {
     val r = root()
-    TagStore.mergeCommit(spark, r, tags("a" -> "1"))          // v0
-    val base = AtomicStore.currentVersion(spark, r)           // Some(0)
+    AtomicStore.commitSnapshot(tags("a" -> "1"), r)             // v0
+    val base = AtomicStore.currentVersion(spark, r)              // Some(0)
     // a racing writer lands first
-    TagStore.mergeCommit(spark, r, tags("b" -> "2"))          // v1
+    AtomicStore.commitSnapshot(tags("a" -> "1", "b" -> "2"), r)  // v1
     // publishing state computed against the stale base must FAIL —
     // the blind version-bump would have dropped b's row
     assert(AtomicStore.commitSnapshotIfUnchanged(
       tags("a" -> "99"), r, base).isEmpty)
-    // the supported path (mergeCommit's internal re-read + re-merge
-    // loop) keeps every concurrent update
-    TagStore.mergeCommit(spark, r, tags("a" -> "99"))
-    val got = AtomicStore.read(spark, r)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toSet
-    assert(got === Set("a" -> "99", "b" -> "2"))
-  }
-
-  test("concurrent-writer soak: racing mergeCommits lose no update, versions stay dense") {
-    // the Delta conflict rule end-to-end (the reference's retry-on-429,
-    // DataCatalogController.py:1608–1652, as retry-on-CAS-conflict): two
-    // writers race mergeCommit on ONE store for 50 total rounds. Every
-    // incoming row has a writer-unique field key, so ANY lost update is a
-    // missing row in the final state; and because a CAS success consumes
-    // exactly version base+1, the 50 returned versions must be exactly
-    // 0..49 with no duplicate and no gap.
-    val r = root()
-    def row(w: Int, i: Int) = Seq(("asset", "", "gov", s"w${w}_r$i", s"$w:$i"))
-      .toDF("asset_uri", "column", "template_id", "field_id", "field_value")
-    val rounds = 25
-    val versions = java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Boolean]())
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val writers = (0 until 2).map { w =>
-      new Thread(() => {
-        try (0 until rounds).foreach { i =>
-          versions.add(TagStore.mergeCommit(spark, r, row(w, i)))
-        } catch { case t: Throwable => failures.add(t) }
-      })
-    }
-    writers.foreach(_.start())
-    writers.foreach(_.join(600000))
-    assert(failures.isEmpty, s"writer failed: ${Option(failures.peek())}")
-    import scala.jdk.CollectionConverters._
-    assert(versions.asScala.toSet === (0L until 2L * rounds).toSet,
-      s"versions not dense: ${versions.asScala.toSeq.sorted}")
-    val got = AtomicStore.read(spark, r)
-      .select("field_id", "field_value").as[(String, String)].collect().toMap
-    val want = (for (w <- 0 until 2; i <- 0 until rounds)
-      yield s"w${w}_r$i" -> s"$w:$i").toMap
-    assert(got === want)
-  }
-
-  test("concurrent-writer soak: racing appendMergeCommits lose no batch") {
-    // the delta-log sibling of the snapshot soak: two writers race
-    // appendMergeCommit on ONE log. A lost publish race re-stamps and
-    // re-publishes, so every writer's every batch must be present in the
-    // latest-wins state, the version sequence dense, and each surviving
-    // row's __batch stamp equal to the version its commit actually took
-    // (a stale stamp would break latest-wins ordering silently).
-    val r = root()
-    def row(w: Int, i: Int) = Seq(("asset", "", "gov", s"w${w}_r$i", s"$w:$i"))
-      .toDF("asset_uri", "column", "template_id", "field_id", "field_value")
-    val rounds = 15
-    val versions = java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Boolean]())
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val writers = (0 until 2).map { w =>
-      new Thread(() => {
-        try (0 until rounds).foreach { i =>
-          versions.add(TagStore.appendMergeCommit(spark, r, row(w, i)))
-        } catch { case t: Throwable => failures.add(t) }
-      })
-    }
-    writers.foreach(_.start())
-    writers.foreach(_.join(600000))
-    assert(failures.isEmpty, s"writer failed: ${Option(failures.peek())}")
-    import scala.jdk.CollectionConverters._
-    assert(versions.asScala.toSet === (0L until 2L * rounds).toSet,
-      s"versions not dense: ${versions.asScala.toSeq.sorted}")
-    val got = TagStore.readLatestState(spark, r)
-      .select("field_id", "field_value").as[(String, String)].collect().toMap
-    val want = (for (w <- 0 until 2; i <- 0 until rounds)
-      yield s"w${w}_r$i" -> s"$w:$i").toMap
-    assert(got === want)
-    // stamp integrity: every log row's __batch is a committed version
-    val stamps = AtomicStore.read(spark, r).select("__batch")
-      .distinct().as[Long].collect().toSet
-    assert(stamps.subsetOf(versions.asScala.toSet))
-  }
-
-  test("appendMergeCommit auto-folds the log past the batch threshold") {
-    // the wired-in maintenance (the Ingest.ingestBatchCommit policy): a
-    // long-lived delta log must not depend on an operator remembering to
-    // schedule compactLog — the merge itself folds once the manifest
-    // grows past compactAboveBatches, and latest-wins state is invariant
-    val r = root()
-    (0 until 8).foreach { i =>
-      TagStore.appendMergeCommit(spark, r,
-        tags(s"a$i" -> s"$i"), compactAboveBatches = 3)
-    }
-    val v = AtomicStore.currentVersion(spark, r).get
-    val nDirs = AtomicStore.filesAt(spark, r, v).size
-    // without the wiring the log would list 8 batch dirs; the threshold
-    // guarantees no merge can leave more than 4 behind
-    assert(nDirs <= 4, s"log lists $nDirs dirs — auto-fold not firing")
-    val got = TagStore.readLatestState(spark, r)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toSet
-    assert(got === (0 until 8).map(i => s"a$i" -> s"$i").toSet)
-    // the folded log keeps merging, including the delete path
-    TagStore.appendMergeCommit(spark, r, tags("a0" -> ""),
-      compactAboveBatches = 3)
-    assert(TagStore.readLatestState(spark, r)
-      .select("asset_uri").as[String].collect().toSet
-      === (1 until 8).map(i => s"a$i").toSet)
+    // the supported retry — re-read the winner's state, re-merge, CAS
+    // at the new base — keeps every concurrent update
+    val now = AtomicStore.currentVersion(spark, r)
+    assert(AtomicStore.commitSnapshotIfUnchanged(
+      TagStore.applyWithDeletes(AtomicStore.read(spark, r), tags("a" -> "99")),
+      r, now) === Some(2L))
+    assert(state(AtomicStore.read(spark, r)) === Set("a" -> "99", "b" -> "2"))
   }
 
   test("crash-mid-MERGE: tag store stays at the pre-merge state") {
     val r = root()
-    TagStore.mergeCommit(spark, r, tags("a" -> "1", "b" -> "2"))
-    // the merge's next-state data lands, then the writer dies before the
-    // manifest publish — applyWithDeletes output simulated verbatim
-    val crashed = TagStore.applyWithDeletes(
-      AtomicStore.read(spark, r), tags("a" -> "99"))
-    AtomicStore.writeData(crashed, r)
-    val got = AtomicStore.read(spark, r)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toSet
-    assert(got === Set("a" -> "1", "b" -> "2"))
+    val seed = tags("a" -> "1", "b" -> "2")
+    TagFamilyStore.commitJob(spark, r, seed, hist(seed))
+    // the merge's tag batch publishes, then the writer dies before the
+    // cut publish
+    val next = tags("a" -> "99")
+    TagFamilyStore.setTestMidJobHook(r, stage =>
+      if (stage == "tags") throw new RuntimeException("injected crash"))
+    try intercept[RuntimeException](
+      TagFamilyStore.commitJob(spark, r, next, hist(next)))
+    finally TagFamilyStore.clearTestMidJobHook(r)
+    assert(state(TagFamilyStore.readTags(spark, r)) ===
+      Set("a" -> "1", "b" -> "2"))
     // rerunning the merge (the reference's retry story) converges
-    TagStore.mergeCommit(spark, r, tags("a" -> "99"))
-    val after = AtomicStore.read(spark, r)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toSet
-    assert(after === Set("a" -> "99", "b" -> "2"))
-  }
-
-  test("mergeCommit honors delete-when-all-empty on the persisted state") {
-    val r = root()
-    TagStore.mergeCommit(spark, r, tags("a" -> "1", "b" -> "2"))
-    TagStore.mergeCommit(spark, r, tags("a" -> "")) // all-empty → delete a
-    assert(AtomicStore.read(spark, r)
-      .select("asset_uri").as[String].collect().toSeq === Seq("b"))
+    TagFamilyStore.commitJob(spark, r, next, hist(next))
+    assert(state(TagFamilyStore.readTags(spark, r)) ===
+      Set("a" -> "99", "b" -> "2"))
   }
 
   test("delta-log merge == snapshot merge replay; bytes scale with batch") {
-    val snapRoot = root()
-    val logRoot = root()
+    val r = root()
     // a merge sequence exercising upsert, field-partial update, delete,
     // and post-delete resurrection
     val batches = Seq(
@@ -290,31 +195,27 @@ class AtomicStoreSpec extends SparkSpec {
       tags("a" -> "9"),            // update a, b untouched
       tags("b" -> ""),             // all-empty instance → delete b
       tags("b" -> "back", "c" -> "3")) // resurrect b, insert c
-    batches.foreach(TagStore.mergeCommit(spark, snapRoot, _))
-    batches.foreach(TagStore.appendMergeCommit(spark, logRoot, _))
-    def state(df: org.apache.spark.sql.DataFrame) =
-      df.select("asset_uri", "field_value").as[(String, String)].collect().toSet
-    val snap = state(AtomicStore.read(spark, snapRoot))
-    assert(state(TagStore.readLatestState(spark, logRoot)) === snap)
+    batches.foreach(b => TagFamilyStore.commitJob(spark, r, b, hist(b)))
+    // the snapshot replay: applyWithDeletes folded in memory, in order
+    val snap = state(batches.foldLeft(tags())(TagStore.applyWithDeletes))
     assert(snap === Set("a" -> "9", "b" -> "back", "c" -> "3"))
-    // append path: every prior batch's files byte-identical in place
-    val fs = new org.apache.hadoop.fs.Path(logRoot).getFileSystem(
+    assert(state(TagFamilyStore.readTags(spark, r)) === snap)
+    // append path: one batch dir per job, every prior batch in place
+    val fs = new org.apache.hadoop.fs.Path(r).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(
-      new org.apache.hadoop.fs.Path(logRoot, "data")).length === 4)
-    // compaction folds to one batch, state unchanged, old batches
-    // reclaimable (grace 0 → only the fold's dir survives)
-    TagStore.compactLog(spark, logRoot)
-    assert(state(TagStore.readLatestState(spark, logRoot)) === snap)
-    AtomicStore.vacuum(spark, logRoot, keepVersions = 1, graceMs = 0L)
-    assert(fs.listStatus(
-      new org.apache.hadoop.fs.Path(logRoot, "data")).length === 1)
-    assert(state(TagStore.readLatestState(spark, logRoot)) === snap)
-    // idempotent: an already-folded log skips the full-table rewrite —
-    // no version burned on a quiet maintenance tick
-    val vBefore = AtomicStore.currentVersion(spark, logRoot)
-    TagStore.compactLog(spark, logRoot)
-    assert(AtomicStore.currentVersion(spark, logRoot) === vBefore)
+      new org.apache.hadoop.fs.Path(s"$r/tags", "data")).length === 4)
+    // compaction folds the served log to one batch, state unchanged
+    TagFamilyStore.compact(spark, r, graceMs = 0L)
+    val tagsPin = StoreCut.cut(spark, r).get(TagFamilyStore.TagsPart)
+    assert(AtomicStore.filesAt(spark, s"$r/tags", tagsPin).size === 1)
+    assert(state(TagFamilyStore.readTags(spark, r)) === snap)
+    // idempotent: an already-folded store skips the full-table rewrite —
+    // no cut advanced on a quiet maintenance tick
+    val cutBefore = TagFamilyStore.currentCutVersion(spark, r)
+    TagFamilyStore.compact(spark, r, graceMs = 0L)
+    assert(TagFamilyStore.currentCutVersion(spark, r) === cutBefore)
+    assert(state(TagFamilyStore.readTags(spark, r)) === snap)
   }
 
   test("read merges schemas across append batches (columns never vanish)") {
@@ -478,7 +379,7 @@ class AtomicStoreSpec extends SparkSpec {
 
   test("deterministic publish-race: the CAS snapshot loser reclaims and leaves the winner's merge intact") {
     val r = root()
-    TagStore.mergeCommit(spark, r, tags("a" -> "1")) // v0
+    AtomicStore.commitSnapshot(tags("a" -> "1"), r) // v0
     val base = AtomicStore.currentVersion(spark, r)
     def dataDirs(): Int =
       new java.io.File(r, "data").listFiles().count(_.isDirectory)
@@ -530,10 +431,10 @@ class AtomicStoreSpec extends SparkSpec {
       .toDF("event_time_s", "asset_name", "job_uuid")
       .select(to_timestamp(col("event_time_s")).as("event_time"),
         col("asset_name"), col("job_uuid"))
-    graft.operators.Sinks.writeHistoryAtomic(rows, r)
-    graft.operators.Sinks.writeHistoryAtomic(
-      rows.withColumn("job_uuid", lit("j2")), r)
-    val got = graft.operators.Sinks.readHistoryAtomic(spark, r)
+    TagFamilyStore.commitJob(spark, r, tags("t1" -> "1"), rows)
+    TagFamilyStore.commitJob(spark, r, tags("t1" -> "2"),
+      rows.withColumn("job_uuid", lit("j2")))
+    val got = TagFamilyStore.readHistory(spark, r)
     assert(got.count() === 2)
     assert(got.columns.contains("event_date"))
   }

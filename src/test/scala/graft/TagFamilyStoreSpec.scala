@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
-import graft.operators.{TagFamilyStore, TagStore}
+import graft.operators.TagFamilyStore
 import graft.sources.{AtomicStore, StoreCut}
 
 /** The tag-engine FAMILY cut (round 18): tags + history (+ reports)
@@ -253,40 +253,65 @@ class TagFamilyStoreSpec extends SparkSpec {
       Map("job-1" -> 2L, "job-2" -> 1L))
   }
 
-  test("standalone TagStore writers refuse a family-governed tags table") {
+  test("commitJob auto-folds the tags log past the batch threshold") {
+    // the write path's own maintenance: a long-lived store must not
+    // depend on an operator scheduling compact — the job commit folds
+    // any part whose pinned chain outgrew compactAboveBatches, and the
+    // served state is invariant
     val root = freshRoot()
-    TagFamilyStore.commitJob(spark, root, mkIncoming(j1Tags),
-      mkHistory("job-1", Seq(("a/orders", "100"))))
-    // a direct merge would commit tag state the family's history never
-    // records; a direct log fold's keep-2 vacuum would reclaim pinned
-    // manifests — both refuse with the family remedy
-    for ((what, op) <- Seq[(String, () => Any)](
-        ("mergeCommit", () =>
-          TagStore.mergeCommit(spark, s"$root/tags", mkIncoming(j2Tags))),
-        ("appendMergeCommit", () =>
-          TagStore.appendMergeCommit(spark, s"$root/tags",
-            mkIncoming(j2Tags))),
-        ("compactLog", () => TagStore.compactLog(spark, s"$root/tags")))) {
-      val e = intercept[IllegalStateException](op())
-      assert(e.getMessage.contains("TagFamilyStore"), s"$what must refuse")
+    (0 until 8).foreach { i =>
+      TagFamilyStore.commitJob(spark, root,
+        mkIncoming(Seq((s"a$i", "n_rows", s"$i"))),
+        mkHistory(s"job-$i", Seq((s"a$i", s"$i"))), compactAboveBatches = 3)
     }
-    // and a standalone store (no manifest sibling) keeps the direct path
-    val lone = s"${freshRoot()}/tags"
-    TagStore.appendMergeCommit(spark, lone, mkIncoming(j1Tags))
-    TagStore.compactLog(spark, lone)
-    assert(TagStore.readLatestState(spark, lone).count() === 3L)
+    val pin = StoreCut.cut(spark, root).get(TagFamilyStore.TagsPart)
+    val nDirs = AtomicStore.filesAt(spark, s"$root/tags", pin).size
+    // without the fold the pinned chain would list 8 batch dirs; the
+    // threshold guarantees no job can leave more than 4 behind
+    assert(nDirs <= 4, s"tags chain lists $nDirs dirs — auto-fold not firing")
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) ===
+      (0 until 8).map(i => s"a$i|n_rows|$i").toSet)
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) ===
+      (0 until 8).map(i => s"job-$i" -> 1L).toMap)
+    // the folded log keeps merging, including the delete path
+    TagFamilyStore.commitJob(spark, root, mkIncoming(Seq(("a0", "n_rows", ""))),
+      mkHistory("job-del", Seq(("a0", ""))), compactAboveBatches = 3)
+    assert(TagFamilyStore.readTags(spark, root).select("asset_uri")
+      .as[String].collect().toSet === (1 until 8).map(i => s"a$i").toSet)
   }
 
-  test("readLatestStateAt: the standalone delta log time-travels symmetrically") {
-    val root = s"${freshRoot()}/taglog"
-    val v1 = TagStore.appendMergeCommit(spark, root, mkIncoming(j1Tags))
-    val stateAtV1 = TagStore.readLatestState(spark, root)
-      .collect().map(_.mkString("|")).toSet
-    TagStore.appendMergeCommit(spark, root, mkIncoming(j2Tags))
-    // the pinned version replays only the batches at or below it
-    assert(TagStore.readLatestStateAt(spark, root, v1)
-      .collect().map(_.mkString("|")).toSet === stateAtV1)
-    assert(TagStore.readLatestState(spark, root)
-      .collect().map(_.mkString("|")).toSet !== stateAtV1)
+  test("an out-of-protocol commit during a job aborts it; the re-run lands once") {
+    val root = freshRoot()
+    TagFamilyStore.commitJob(spark, root, mkIncoming(j1Tags),
+      mkHistory("job-1", Seq(("a/orders", "100"), ("a/region", "5"))))
+    val cutBefore = TagFamilyStore.currentCutVersion(spark, root)
+    // after the job's tags publish, a writer that bypasses the job lease
+    // commits to the history table: the job's predicted history version
+    // is taken, so the job must fail rather than publish a second way
+    TagFamilyStore.setTestMidJobHook(root, stage =>
+      if (stage == "tags")
+        AtomicStore.commitAppend(mkHistory("intruder", Seq(("a/x", "1"))),
+          s"$root/history"))
+    try intercept[java.util.ConcurrentModificationException](
+      TagFamilyStore.commitJob(spark, root, mkIncoming(j2Tags),
+        mkHistory("job-2", Seq(("a/orders", "100")))))
+    finally TagFamilyStore.clearTestMidJobHook(root)
+    // the pre-job cut still serves in both tables
+    assert(TagFamilyStore.currentCutVersion(spark, root) === cutBefore)
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) === Set(
+      "a/orders|env|DEV", "a/orders|n_rows|100", "a/region|n_rows|5"))
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) ===
+      Map("job-1" -> 2L))
+    // the re-run's entry check flags the intruder's version (the aborted
+    // job's own tags commit is accounted residue) and the job lands once
+    TagFamilyStore.commitJob(spark, root, mkIncoming(j2Tags),
+      mkHistory("job-2", Seq(("a/orders", "100"))))
+    val violations = TagFamilyStore.orphanSuffixViolations
+    assert(violations.contains(s"$root/history"))
+    assert(!violations.contains(s"$root/tags"))
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) === Set(
+      "a/orders|env|PROD", "a/orders|n_rows|100"))
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) ===
+      Map("job-1" -> 2L, "job-2" -> 1L))
   }
 }

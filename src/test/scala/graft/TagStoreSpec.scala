@@ -54,14 +54,4 @@ class TagStoreSpec extends SparkSpec {
       .select("asset_uri", "field_id").as[(String, String)].collect().toSet
     assert(out === Set("a" -> "f1", "a" -> "f2"))
   }
-
-  test("reconcileCommit: the ACID form equals reconcile applied through the store") {
-    val path = java.nio.file.Files.createTempDirectory("graft_reccommit").toString
-    val v0 = TagStore.reconcileCommit(spark, path, tags("a" -> "old", "b" -> "keep"))
-    val v1 = TagStore.reconcileCommit(spark, path, tags("a" -> "new"))
-    assert(v0 === 0L && v1 === 1L)
-    val stored = graft.sources.AtomicStore.read(spark, path)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toMap
-    assert(stored === Map("a" -> "new", "b" -> "keep"))
-  }
 }
