@@ -1,4 +1,4 @@
-package graft.queries
+package graft.operators
 
 import org.apache.spark.sql.DataFrame
 

@@ -7,10 +7,13 @@ import graft.functions.Coerce
 /** History / report sinks (SURVEY.md §2 A11–A13).
   *
   * The reference lazily creates day-partitioned BigQuery tables and appends
-  * JSON rows (BigQueryUtils.py:263–305, 344–474). Here both are plain
-  * partitioned parquet appends: `partitionBy(<day>)` buys partition pruning
-  * on every downstream read, and append-mode writes scale linearly — no
-  * per-row insert RPCs.
+  * JSON rows (BigQueryUtils.py:263–305, 344–474). Here the A11 history
+  * sink is [[withHistoryPartition]]'s UTC `event_date` day column plus the
+  * history part of the tag-family store ([[TagFamilyStore]]), appended
+  * under the same cut as the job's tags. Reports have the same family
+  * append and, for `write_option` truncate, the standalone
+  * [[writeReport]]: a plain partitioned parquet write whose
+  * `partitionBy(<day>)` buys partition pruning on every downstream read.
   */
 object Sinks {
 
@@ -38,11 +41,6 @@ object Sinks {
     */
   def withHistoryPartition(rows: DataFrame): DataFrame =
     rows.withColumn("event_date", utcDay(col("event_time")))
-
-  /** Append-mode day-partitioned history write (the A11 sink). */
-  def writeHistory(rows: DataFrame, path: String): Unit =
-    withHistoryPartition(rows)
-      .write.mode("append").partitionBy("event_date").parquet(path)
 
   /** Flatten a tags table to the report shape (BigQueryUtils.py:263–305;
     * FIXTURES.md §3.2): everything stringified except `export_time`.

@@ -101,7 +101,7 @@ object TagEngine {
 
   /** [[applyDynamicTableConfig]] after the expansion collect: evaluate a
     * config over an already-expanded asset list (callers that expand many
-    * configs in one catalog pass — [[runJobs]] — land here).
+    * configs in one catalog pass — [[perConfigIncoming]] — land here).
     */
   private[operators] def applyOverAssets(spark: SparkSession,
                                          config: TagConfig,
@@ -263,9 +263,9 @@ object TagEngine {
       .groupBy(col("asset_uri"), col("column"))
       .pivot("field_id", config.fields.map(_.fieldId))
       .agg(first("field_value"))
-    // no withHistoryPartition here: the SINKS own the event_date
-    // derivation (writeHistory and the family store both apply it) — doing
-    // it twice invites the two call sites drifting apart
+    // no withHistoryPartition here: the family store's history commit
+    // owns the event_date derivation — doing it twice invites the two
+    // call sites drifting apart
     pivoted.select(
       Seq(eventTime.as("event_time"), assetName.as("asset_name"),
         jobUuid.as("job_uuid")) ++
@@ -301,113 +301,46 @@ object TagEngine {
       exportTime)
   }
 
-  /** Full job: evaluate + MERGE into the existing tag state, honoring
-    * `overwrite=false` (skip assets already tagged with this template,
-    * DataCatalogController.py:230–243) and delete-when-all-empty. When the
-    * config asks for tag history and a sink path is given, the written tag
-    * instances are ALSO appended to the day-partitioned history table
-    * (DataCatalogController.py:324–327) — the reference writes history on
-    * every create/update, so history rows are the post-overwrite-filter
-    * incoming set.
-    *
-    * The history write and the caller's merge terminal are SEPARATE
-    * effects here (reference-parity: the catalog RPC and the BQ insert
-    * are equally independent there, so a crashed task tears the pair).
-    * Deployments that need the pair atomic run the job through
-    * [[TagFamilyStore.runJob]], which publishes tags + history under one
-    * store-level cut.
-    */
-  def runJob(spark: SparkSession, config: TagConfig, catalog: DataFrame,
-             existingTags: DataFrame, historyPath: Option[String] = None,
-             eventTime: Column = current_timestamp(),
-             jobUuid: Column = lit("")): DataFrame = {
-    val computed = applyDynamicTableConfig(spark, config, catalog)
-    val incoming0 = incomingFor(config, computed, existingTags)
-    val writeHist = config.tagHistory && historyPath.isDefined
-    // with the history side-channel on, the evaluation is consumed TWICE
-    // (the eager history write, then the caller's action on the merge) —
-    // materialize once so the full config evaluation doesn't run 2×, and
-    // so history can never record values that differ from the state
-    // actually merged (the lake may change between the two actions)
-    val incoming = if (writeHist) incoming0.localCheckpoint() else incoming0
-    if (writeHist)
-      historyPath.foreach { p =>
-        // history = the WRITTEN tag instances (create/update only,
-        // DataCatalogController.py:324–327): an all-empty instance fires
-        // the delete trigger in the merge below, so it must not append a
-        // phantom all-empty history row
-        val written = TagStore.dropAllEmptyTags(incoming)
-        Sinks.writeHistory(historyRows(written, config, eventTime, jobUuid), p)
-      }
-    TagStore.applyWithDeletes(existingTags, incoming)
-  }
-
-  /** A whole scheduler tick's worth of jobs as ONE compilation pass: all
-    * due configs expand in a SINGLE catalog traversal (one balanced union
-    * of the per-config include−exclude expansions, ONE collect of
-    * metadata-scale rows), then each config's body assembles lazily over
-    * its pre-expanded assets. Output is every job's post-MERGE tag rows
-    * with a `config_uuid` column — one DataFrame, so however many configs
-    * are due, the tick costs one expansion job plus one downstream action,
-    * not #configs serialized `runJob` dispatches (the per-config driver
-    * loop the round-7 verdict flagged; TagEngineSpec pins the job-count
-    * invariance).
-    *
-    * History sinks are per-job side effects and stay on the [[runJob]]
-    * path — batch callers needing history run the terminal writes
-    * per config after the fact.
-    *
-    * Output semantics match [[runJob]] exactly: each config's slice is
-    * that job's POST-MERGE STORE STATE (existing rows the job did not
-    * touch included). With a LARGE shared `existingTags` that means
-    * untouched rows repeat once per config — callers rolling up a tick
-    * over a big store should pass the store pre-filtered to the configs'
-    * templates/scopes (the MERGE join keys), which is also the only part
-    * a rollup can attribute to the jobs.
-    *
-    * Intra-tick isolation: every job's overwrite=false filter reads the
-    * SAME pre-tick `existingTags` snapshot — sibling jobs' writes within
-    * the tick are invisible to each other, so two due configs sharing a
-    * template and an untagged asset can both emit it in one tick where
-    * strictly serialized runJob calls would make the second skip. That is
-    * the deterministic batch rendering of the reference's behavior (cloud
-    * tasks run CONCURRENTLY against Firestore; their read/write
-    * interleaving is unordered, so same-tick winners are arbitrary
-    * there); a caller needing serialized semantics chains runJob per
-    * config, merging between.
-    */
-  def runJobs(spark: SparkSession, configs: Seq[(String, TagConfig)],
-              catalog: DataFrame, existingTags: DataFrame): DataFrame =
-    balancedUnion(perConfigIncoming(spark, configs, catalog, existingTags)
-      .map { case (id, incoming) =>
-        TagStore.applyWithDeletes(existingTags, incoming)
-          .withColumn("config_uuid", lit(id))
-      })
-
   /** The PRODUCED rows of each job in a batched tick — the incoming set
     * each config's MERGE applies (computed rows after the overwrite=false
     * restriction), tagged with config_uuid. This is what a job ROLLUP
-    * must count: [[runJobs]]' post-merge state repeats every untouched
+    * must count: a post-merge state would repeat every untouched
     * pre-existing store row under each config's uuid, so aggregating THAT
     * reports store size, not job work — on a store with N tags, a due
     * config whose expansion matched nothing would "report" an N-row job
-    * instead of the reference's (SUCCEEDED, 0 tasks) no-op.
+    * instead of the reference's (SUCCEEDED, 0 tasks) no-op. However many
+    * configs are due, the tick costs one expansion job plus one
+    * downstream action (TagEngineSpec pins the job-count invariance).
     */
   def runJobsProduced(spark: SparkSession, configs: Seq[(String, TagConfig)],
                       catalog: DataFrame, existingTags: DataFrame): DataFrame =
     balancedUnion(perConfigIncoming(spark, configs, catalog, existingTags)
       .map { case (id, incoming) => incoming.withColumn("config_uuid", lit(id)) })
 
-  /** Shared tick pass: ONE catalog expansion for every config, then each
-    * config's incoming MERGE set. Backbone of [[runJobs]] (post-merge
-    * states) and [[runJobsProduced]] (the jobs' own rows).
+  /** Shared tick pass: ONE catalog expansion for every config (one
+    * balanced union of the per-config include−exclude expansions, ONE
+    * collect of metadata-scale rows), then each config's incoming MERGE
+    * set assembled lazily over its pre-expanded assets. Backbone of
+    * [[runJobsProduced]] and the family store's tick terminal
+    * (`TagFamilyStore.runTick`).
+    *
+    * Intra-tick isolation: every job's overwrite=false filter reads the
+    * SAME pre-tick `existingTags` snapshot — sibling jobs' writes within
+    * the tick are invisible to each other, so two due configs sharing a
+    * template and an untagged asset can both emit it in one tick where
+    * strictly serialized jobs would make the second skip. That is the
+    * deterministic batch rendering of the reference's behavior (cloud
+    * tasks run CONCURRENTLY against Firestore; their read/write
+    * interleaving is unordered, so same-tick winners are arbitrary
+    * there); a caller needing serialized semantics commits one job per
+    * config, each reading the state the previous one published.
     */
   private[operators] def perConfigIncoming(spark: SparkSession,
                                 configs: Seq[(String, TagConfig)],
                                 catalog: DataFrame,
                                 existingTags: DataFrame)
       : Seq[(String, DataFrame)] = {
-    require(configs.nonEmpty, "runJobs: no configs to run")
+    require(configs.nonEmpty, "perConfigIncoming: no configs to run")
     val expandFrames = configs.map { case (id, cfg) =>
       Expander.expand(catalog, cfg.includedUris, cfg.excludedUris)
         .select(lit(id).as("__cfg"), col("project"), col("dataset"),
@@ -426,10 +359,10 @@ object TagEngine {
 
   /** The incoming set a job MERGEs: computed rows, minus (when
     * `overwrite=false`) assets already tagged with this config's template
-    * (DataCatalogController.py:230–243). ONE definition shared by
-    * [[runJob]] and [[runJobs]] so the overwrite semantics cannot diverge
-    * between the single-job path and the batch tick whose equivalence
-    * TagEngineSpec pins.
+    * (DataCatalogController.py:230–243). ONE definition shared by the
+    * single-job terminal (`TagFamilyStore.commitComputed`) and the batch
+    * tick ([[perConfigIncoming]]) so the overwrite semantics cannot
+    * diverge between them.
     */
   private[operators] def incomingFor(config: TagConfig, computed: DataFrame,
                                      existingTags: DataFrame): DataFrame =

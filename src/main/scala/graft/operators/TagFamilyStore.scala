@@ -57,8 +57,10 @@ import graft.sources.{AtomicStore, StoreCut}
   * (one LIST + one create + one atomic claim). The job lease serializes
   * only the COMMIT section (metadata ops + batch-sized writes), not
   * evaluation; config evaluation runs before the lease in
-  * [[commitJob]]'s callers and the whole-tick batch path stays on
-  * `TagEngine.runJobs`.
+  * [[commitJob]]'s callers. The evaluated terminals ([[commitComputed]]
+  * per job, [[runTick]] per scheduler tick) are the one exception: they
+  * evaluate under the lease so the `overwrite=false` read and the commit
+  * see one serialization point.
   */
 object TagFamilyStore {
 
@@ -112,30 +114,22 @@ object TagFamilyStore {
     * (`incoming` in the unified tag-row shape — upserts plus the
     * delete-when-all-empty trigger, exactly [[TagStore.mergeDelta]]'s
     * encoding), its history rows (must carry `event_time`; the
-    * `event_date` day column is derived here, same rule as
-    * [[Sinks.writeHistory]]) and optionally its report rows (must carry
-    * `export_time`). All parts land as separate table commits and become
-    * visible together via ONE cut publish — or not at all.
+    * `event_date` day column is derived here by
+    * [[Sinks.withHistoryPartition]]) and optionally its report rows (must
+    * carry `export_time`). All parts land as separate table commits and
+    * become visible together via ONE cut publish — or not at all: a
+    * one-job [[commitTick]].
     *
     * `incoming` is consumed more than once (the delta build and the
     * tombstone split) — callers producing it from an expensive
-    * evaluation should localCheckpoint first ([[runJob]] does).
+    * evaluation should localCheckpoint first ([[commitComputed]] does).
     */
   def commitJob(spark: SparkSession, root: String, incoming: DataFrame,
                 history: DataFrame, reports: Option[DataFrame] = None,
                 leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
                 compactAboveBatches: Int = 64): Map[String, Long] =
-    withJobLease(spark, root, leaseTtlMs) {
-      commitJobLocked(spark, root, incoming, history, reports,
-        compactAboveBatches)
-    }
-
-  private def commitJobLocked(spark: SparkSession, root: String,
-                              incoming: DataFrame, history: DataFrame,
-                              reports: Option[DataFrame],
-                              compactAboveBatches: Int): Map[String, Long] =
-    commitTickLocked(spark, root,
-      Seq(JobBatch("job", incoming, history, reports)), compactAboveBatches)
+    commitTick(spark, root, Seq(JobBatch("job", incoming, history, reports)),
+      leaseTtlMs, compactAboveBatches)
 
   /** One job's write family in batch form — the unit [[commitTick]]
     * chains: the tag MERGE change set (`incoming`,
@@ -164,11 +158,11 @@ object TagFamilyStore {
     * pin's files plus configs `0..i`'s batches, so per-config batch
     * identity (history attribution, latest-wins order — a later config
     * in the tick wins conflicts, the deterministic rendering of
-    * `TagEngine.runJobs`' intra-tick semantics) is preserved while the
-    * tick's visibility stays all-or-nothing. Scale: the tick publish is
-    * ONE metadata file regardless of N; per-config cost is the same
-    * 2–3 batch commits a lone [[commitJob]] pays; the final cut CAS is
-    * the only coordination point.
+    * `TagEngine.perConfigIncoming`'s intra-tick isolation) is preserved
+    * while the tick's visibility stays all-or-nothing. Scale: the tick
+    * publish is ONE metadata file regardless of N; per-config cost is
+    * the same 2–3 batch commits a lone [[commitJob]] pays; the final cut
+    * CAS is the only coordination point.
     *
     * Returns the final per-part versions plus the published cut
     * (`"manifest"`). Crash hooks fire as `"<part>"` and `"<part>@<i>"`
@@ -672,43 +666,27 @@ object TagFamilyStore {
       folded
     }
 
-  // ------------------------------------------------------ the full job
+  // ------------------------------------------------ the evaluated job
 
-  /** `TagEngine.runJob` with the family-cut terminal: evaluate the
-    * config over the catalog, apply the `overwrite=false` restriction
-    * against the CUT-PINNED tag state, derive the history rows
-    * (`TagEngine.historyRows` — the written instances only, the
-    * reference's create/update rule) and commit tags + history as ONE
-    * atomic family publish. Runs entirely under the job lease so the
-    * overwrite filter's read and the commit see one serialization
-    * point; evaluation cost under the lease is the incoming batch's
-    * own evaluation, exactly the work the job must do anyway.
-    */
-  def runJob(spark: SparkSession, config: TagConfig, catalog: DataFrame,
-             root: String,
-             eventTime: Column = current_timestamp(),
-             jobUuid: Column = lit(""),
-             leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] =
-    commitComputed(spark, root, config,
-      TagEngine.applyDynamicTableConfig(spark, config, catalog),
-      eventTime, jobUuid, leaseTtlMs)
-
-  /** [[runJob]] for a PRE-EVALUATED tag-row set — the terminal the
-    * event-driven re-tag stream needs (`Streams.retagCommitBatch`):
+  /** The job terminal for a PRE-EVALUATED tag-row set — what
+    * `ConfigDispatch.applyConfig`, `TagEngine.applyDynamicTableConfig` or
+    * the event-driven re-tag stream (`Streams.retagCommitBatch`) produce:
     * `computed` is the job's computed rows in the unified shape (lazy —
-    * evaluation runs under the lease at the one materialization point);
-    * the `overwrite=false` restriction, the history pivot and the
-    * atomic family publish are exactly [[runJob]]'s.
+    * evaluation runs under the lease at the one materialization point).
+    * Applies the `overwrite=false` restriction against the CUT-PINNED tag
+    * state (DataCatalogController.py:230–243), derives the history rows
+    * from the written instances (DataCatalogController.py:324–327) and
+    * publishes tags + history (+ reports) as ONE atomic family commit.
     *
     * `idempotencyPin` makes a CHECKPOINT-REPLAYED commit exactly-once:
     * `Some(key -> n)` publishes `key=n` into the job's cut (max-merged,
     * so a monotonic micro-batch id fits the cut's contract), and a
     * later call whose cut already carries `key >= n` SKIPS the commit
-    * entirely (returns Map.empty). The check runs under the job lease,
-    * so a replayed `foreachBatch` wave after a crash-after-publish
-    * cannot double its history rows — the family sibling of the ingest
-    * path's content-hash replay idempotence, at O(1) metadata cost
-    * (one cut read the commit pays anyway) instead of a history scan.
+    * (returns Map.empty). The check runs under the job lease, so a
+    * replayed `foreachBatch` wave after a crash-after-publish cannot
+    * double its history rows — the family sibling of the ingest path's
+    * content-hash replay idempotence, at O(1) metadata cost (one cut
+    * read the commit pays anyway) instead of a history scan.
     */
   def commitComputed(spark: SparkSession, root: String, config: TagConfig,
                      computed: DataFrame,
@@ -717,133 +695,92 @@ object TagFamilyStore {
                      leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
                      idempotencyPin: Option[(String, Long)] = None)
       : Map[String, Long] =
-    withJobLease(spark, root, leaseTtlMs) {
-      val replayed = idempotencyPin.exists { case (k, n) =>
-        StoreCut.cut(spark, root).exists(_.get(k).exists(_ >= n))
-      }
-      if (replayed) Map.empty
-      else {
-        val existing = readTagsOr(spark, root, TagEngine.emptyTagRows(spark))
-        // one materialization: the incoming set feeds the delta build,
-        // the tombstone split AND the history pivot — and history must
-        // never record values that differ from the batch actually merged
-        val incoming = TagEngine.incomingFor(config, computed, existing)
-          .localCheckpoint()
-        commitTickLocked(spark, root,
-          Seq(evaluatedBatch("job", config, incoming, eventTime, jobUuid)),
-          compactAboveBatches = 64, extraPins = idempotencyPin.toMap)
-      }
-    }
+    commitEvaluated(spark, root, eventTime, leaseTtlMs, idempotencyPin) {
+      existing =>
+        Seq(("job", config, TagEngine.incomingFor(config, computed, existing),
+          jobUuid))
+    }._1
 
-  /** One evaluated config's [[JobBatch]]: the history pivot over the
-    * WRITTEN instances (create/update only — an all-empty instance fires
-    * the delete trigger and must not leave a phantom history row) and,
-    * when the config asks for export ([[graft.model.TagConfig.exportTags]]),
-    * the A12 report rows for the same written set
-    * ([[TagEngine.reportRowsFor]]) — so the report lands as the THIRD
-    * part of the batch, under the same cut as the tags+history it
-    * describes (round-19 verdict #1: previously only a hand-built
-    * JobBatch could carry reports through the tick terminal, leaving the
-    * evaluated scheduler paths' report export OUTSIDE the atomicity
-    * domain). Shared by [[commitComputed]] and [[runTickDetailed]] so
-    * the job and tick grains cannot diverge on what a batch contains.
-    */
-  private def evaluatedBatch(jobId: String, config: TagConfig,
-                             incoming: DataFrame, eventTime: Column,
-                             jobUuid: Column): JobBatch = {
-    val written = TagStore.dropAllEmptyTags(incoming)
-    JobBatch(jobId, incoming,
-      TagEngine.historyRows(written, config, eventTime, jobUuid),
-      reports =
-        if (config.exportTags)
-          Some(TagEngine.reportRowsFor(written, eventTime))
-        else None)
-  }
-
-  /** The WHOLE scheduler tick with the family-cut terminal —
-    * `TagEngine.runJobs`' evaluation (ONE catalog expansion for every
-    * due config, each config's merge set derived against the SAME
-    * pre-tick cut-pinned tag state: sibling jobs' writes invisible to
-    * each other, `runJobs`' documented intra-tick isolation) committed
-    * through [[commitTick]]'s one-cut-per-tick publish. A crash
-    * anywhere — mid-config or between configs — leaves the pre-tick
-    * state serving everywhere; the re-run lands every config exactly
-    * once. Runs entirely under the job lease, so the overwrite
-    * filters' read and the tick's commits see one serialization point;
-    * evaluation cost under the lease is the due configs' own
-    * evaluation, exactly the work the tick must do anyway.
+  /** The WHOLE scheduler tick with the family-cut terminal:
+    * [[TagEngine.perConfigIncoming]]'s evaluation (ONE catalog expansion
+    * for every due config, each config's merge set derived against the
+    * SAME pre-tick cut-pinned tag state — the intra-tick isolation
+    * documented there) committed through [[commitTick]]'s
+    * one-cut-per-tick publish. A crash anywhere — mid-config or between
+    * configs — leaves the pre-tick state serving everywhere; the re-run
+    * lands every config exactly once.
     *
+    * Returns the versions and the committed [[JobBatch]]es — each
+    * batch's `incoming` is localCheckpoint'd, so a caller can roll the
+    * tick up (per-job counts over the PRODUCED rows, the
+    * `Streams.schedulerTickCommit` contract) without re-evaluating
+    * anything or mis-counting store rows the jobs never touched.
     * `jobUuidOf` names each config's job in its history rows (the
     * scheduler's convention is `md5(config_uuid|version)` — see
-    * `Streams.schedulerTick`); the default labels by config uuid.
+    * `Streams.schedulerTickCommit`); the default labels by config uuid.
+    *
+    * `idempotencyPin` is [[commitComputed]]'s contract at the TICK
+    * grain: a replayed tick (a `foreachBatch` wave re-fired from its
+    * checkpoint, or a re-run after the caller LOST the config-store
+    * advance while the family publish survived) cannot double every
+    * config's history under the same `md5(uuid|version)` job_uuid. On a
+    * skip the batches are still evaluated and returned (the caller's
+    * rollup/advance must re-emit so the lost config-store merge can
+    * complete); with the window being a crashed tick's immediate re-run,
+    * the re-evaluation sees the same data — and `overwrite=true` configs
+    * (the scheduler-batch shape) re-derive identical rows regardless of
+    * the already-landed commit.
     */
   def runTick(spark: SparkSession, configs: Seq[(String, TagConfig)],
               catalog: DataFrame, root: String,
               eventTime: Column = current_timestamp(),
               jobUuidOf: String => Column = id => lit(id),
               leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
-              idempotencyPin: Option[(String, Long)] = None): Map[String, Long] =
-    runTickDetailed(spark, configs, catalog, root, eventTime, jobUuidOf,
-      leaseTtlMs, idempotencyPin)._1
-
-  /** [[runTick]] returning the committed [[JobBatch]]es too — each
-    * batch's `incoming` is localCheckpoint'd, so a caller can roll the
-    * tick up (per-job counts over the PRODUCED rows, the
-    * `Streams.schedulerTickCommit` contract) without re-evaluating
-    * anything or mis-counting store rows the jobs never touched.
-    *
-    * `idempotencyPin` is [[commitComputed]]'s contract at the TICK
-    * grain (round-19 advice): `Some(key -> n)` publishes `key=n` into
-    * the tick's cut (max-merged — a monotonic tick id fits the cut
-    * contract), and a later call whose cut already carries `key >= n`
-    * SKIPS the whole commit (versions Map.empty) — so a replayed tick
-    * (a `foreachBatch` wave re-fired from its checkpoint, or a re-run
-    * after the caller LOST the config-store advance while the family
-    * publish survived) cannot double every config's history under the
-    * same `md5(uuid|version)` job_uuid. The check runs under the job
-    * lease, at O(1) metadata cost. On a skip the batches are still
-    * evaluated and returned (the caller's rollup/advance must re-emit
-    * so the lost config-store merge can complete); with the window
-    * being a crashed tick's immediate re-run, the re-evaluation sees
-    * the same data — and `overwrite=true` configs (the scheduler-batch
-    * shape) re-derive identical rows regardless of the already-landed
-    * commit.
-    */
-  def runTickDetailed(spark: SparkSession, configs: Seq[(String, TagConfig)],
-                      catalog: DataFrame, root: String,
-                      eventTime: Column = current_timestamp(),
-                      jobUuidOf: String => Column = id => lit(id),
-                      leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
-                      idempotencyPin: Option[(String, Long)] = None)
+              idempotencyPin: Option[(String, Long)] = None)
       : (Map[String, Long], Seq[JobBatch]) =
     if (configs.isEmpty) (Map.empty, Seq.empty)
-    else withJobLease(spark, root, leaseTtlMs) {
+    else commitEvaluated(spark, root, eventTime, leaseTtlMs, idempotencyPin) {
+      existing =>
+        TagEngine.perConfigIncoming(spark, configs, catalog, existing)
+          .zip(configs).map { case ((id, inc), (_, cfg)) =>
+            (id, cfg, inc, jobUuidOf(id))
+          }
+    }
+
+  /** The ONE body of both evaluated terminals, entirely under the job
+    * lease so the overwrite filters' read and the commit see one
+    * serialization point: check the idempotency pin, read the cut-pinned
+    * tag state once, derive each job's `(jobId, config, incoming,
+    * jobUuid)` from it, checkpoint every incoming set, build the batches
+    * and commit them under one cut — unless the pin marks a replay.
+    *
+    * One materialization per job: the incoming set feeds the delta
+    * build, the tombstone split, the history pivot AND the report
+    * flatten — and history/reports must never record values that differ
+    * from the batch actually merged. The checkpoints are independent
+    * READS of pre-commit state, so they run concurrently
+    * ([[Par.ckptAll]]); the sequential section stays the chained
+    * per-part commits the protocol demands.
+    */
+  private def commitEvaluated(spark: SparkSession, root: String,
+                              eventTime: Column, leaseTtlMs: Long,
+                              idempotencyPin: Option[(String, Long)])(
+      jobsOf: DataFrame => Seq[(String, TagConfig, DataFrame, Column)])
+      : (Map[String, Long], Seq[JobBatch]) =
+    withJobLease(spark, root, leaseTtlMs) {
       val replayed = idempotencyPin.exists { case (k, n) =>
         StoreCut.cut(spark, root).exists(_.get(k).exists(_ >= n))
       }
-      val existing = readTagsOr(spark, root, TagEngine.emptyTagRows(spark))
-      // one materialization per config: the incoming set feeds the
-      // delta build, the tombstone split, the history pivot AND the
-      // report flatten — and history/reports must never record values
-      // that differ from the batch actually merged. The N checkpoints
-      // are independent READS of pre-tick state (intra-tick isolation),
-      // so they run concurrently (optimization guide §2.6: overlap
-      // independent jobs) — the tick's sequential section stays just
-      // the chained per-part commits below, which the protocol demands.
-      val ckpts = {
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(
-          Future.sequence(
-            TagEngine.perConfigIncoming(spark, configs, catalog, existing)
-              .map { case (id, inc0) =>
-                Future(blocking((id, inc0.localCheckpoint())))
-              }),
-          Duration.Inf)
-      }
-      val batches = ckpts.zip(configs).map { case ((id, inc), (_, cfg)) =>
-        evaluatedBatch(id, cfg, inc, eventTime, jobUuidOf(id))
+      val jobs = jobsOf(readTagsOr(spark, root, TagEngine.emptyTagRows(spark)))
+      val batches = jobs.zip(Par.ckptAll(jobs.map(_._3): _*)).map {
+        case ((id, cfg, _, uuid), inc) =>
+          // history and the A12 report rows (when the config exports)
+          // describe the WRITTEN instances only: an all-empty instance
+          // fires the delete trigger and must leave no phantom row
+          val written = TagStore.dropAllEmptyTags(inc)
+          JobBatch(id, inc, TagEngine.historyRows(written, cfg, eventTime, uuid),
+            Option.when(cfg.exportTags)(
+              TagEngine.reportRowsFor(written, eventTime)))
       }
       if (replayed) (Map.empty, batches)
       else (commitTickLocked(spark, root, batches, compactAboveBatches = 64,

@@ -491,15 +491,17 @@ object CoreQueries3 {
       |ORDER BY asset_uri, field_id""".stripMargin
 
   /** A11 wired through the job lifecycle (DataCatalogController.py:324–327
-    * → BigQueryUtils.py:391–440): a tag_history=true dynamic config run via
-    * `TagEngine.runJob` appends day-partitioned history rows — this query
-    * reads BACK what the sink wrote (singular-segment asset name, typed
-    * field columns, event_date partition), so the append + partition layout
-    * themselves are under the oracle gate.
+    * → BigQueryUtils.py:391–440): a tag_history=true dynamic config run
+    * through the job terminal (`TagFamilyStore.commitComputed`) appends
+    * its history rows to the family store's history part under the job's
+    * cut — this query reads BACK what the commit published
+    * (singular-segment asset name, typed field columns, the UTC
+    * event_date day column), so the atomic history append itself is
+    * under the oracle gate.
     */
   def q31JobHistory(spark: SparkSession, dir: String): DataFrame = {
     import graft.model.{FieldSpec, TagConfig}
-    import graft.operators.TagEngine
+    import graft.operators.{TagEngine, TagFamilyStore}
     Lake.registerAll(spark, dir)
     val catalog = {
       import spark.implicits._
@@ -514,16 +516,12 @@ object CoreQueries3 {
       includedUris = Seq("bigquery/project/p/dataset/lake/region",
         "bigquery/project/p/dataset/lake/nation"),
       tagHistory = true)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "asset_uri string, column string, template_id string, " +
-        "field_id string, field_value string"))
-    // unique dir per invocation: the sink is append-mode by contract
-    CoreQueries.withTempDir(spark, "graft_hist") { histPath =>
-      TagEngine.runJob(spark, config, catalog, empty, Some(histPath.toString),
+    // unique root per invocation: every job appends to the store's history
+    CoreQueries.withTempDir(spark, "graft_hist") { root =>
+      TagFamilyStore.commitComputed(spark, root.toString, config,
+        TagEngine.applyDynamicTableConfig(spark, config, catalog),
         lit("2024-03-01 12:00:00").cast("timestamp"), lit("job-1"))
-      spark.read.parquet(histPath.toString)
+      TagFamilyStore.readHistory(spark, root.toString)
         .select("event_time", "asset_name", "job_uuid", "n_rows", "env",
           "event_date")
         .orderBy("asset_name")

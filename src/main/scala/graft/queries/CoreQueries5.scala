@@ -137,15 +137,16 @@ object CoreQueries5 {
 
   /** The WHOLE `/scheduled_auto_updates` tick composed end-to-end
     * (main.py:3075–3110 → §3.1): H1 selects the due configs, ALL due
-    * configs compile into ONE batched job pass ([[TagEngine.runJobs]] —
-    * one catalog expansion for every config, lazy set-based evaluate +
-    * MERGE per config, one unioned result), and the output is the
+    * configs compile into ONE batched job pass
+    * ([[TagEngine.runJobsProduced]] — one catalog expansion for every
+    * config, lazy set-based evaluation of each job's produced rows, one
+    * unioned result), and the output is the
     * q12-style per-job rollup JOINED to the advanced scheduler state
     * (H2) — job identity, terminal status, asset/tag-row counts, a
     * data-dependent field sum, and the post-tick next_run/version, all
     * from ONE tick. Due configs are catalog METADATA (the reference's own
     * loop bound), and the tick's job count is INVARIANT to how many are
-    * due (TagEngineSpec pins it) — the round-7 per-config `runJob`
+    * due (TagEngineSpec pins it) — the round-7 per-config job
     * dispatch loop serialized a full driver round-trip per config.
     */
   def q40SchedulerTickJobs(spark: SparkSession, dir: String): DataFrame = {

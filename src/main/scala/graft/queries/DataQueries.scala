@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Lake
 import graft.functions.TextFns
-import graft.operators.{Bloom, Dedup, Multimodal, Similarity}
+import graft.operators.{Bloom, Dedup, Multimodal, Par, Similarity}
 import graft.streaming.Streams
 import graft.queries.CoreQueries.Q
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
-import graft.operators.{Bpe, Dedup, Similarity}
+import graft.operators.{Bpe, Dedup, Par, Similarity}
 import graft.queries.CoreQueries.Q
 
 /** Rounds 7–9 beyond-parity queries: the bucketed near-dup RECALL

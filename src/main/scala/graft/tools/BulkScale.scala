@@ -96,13 +96,17 @@ object BulkScale {
       val dtCommit = (System.nanoTime() - t1) / 1e9
       println(f"BULKSCALE_COMMIT assets=$n%7d full_state wall=$dtCommit%6.1fs " +
         f"cut=$c0 store_bytes=${Fs.dirBytes(store)}")
-      if (n == 1000000) {
-        // steady state at the 1M envelope: a 1k-asset incremental job on
-        // top of the full state — committed bytes must scale with the
-        // BATCH, not the table (the 100 TB write-path contract)
+      if (n >= 2000) {
+        // steady state: a 1k-asset incremental job on top of the full
+        // state — committed bytes must scale with the BATCH, not the
+        // table (the 100 TB write-path contract). Assets events_<0..999>
+        // sort below the zero-padded name of asset 1000 at every n.
         val seeded = Fs.dirBytes(store)
         val inc = out.filter(col("asset_uri") <
-          "bigquery/project/p/dataset/lake/events_0000999")
+          s"bigquery/project/p/dataset/lake/events_${"0" * (pad - 4)}1000")
+        val incAssets = inc.select("asset_uri").distinct().count()
+        require(incAssets == 1000L,
+          s"BulkScale: the 1k-asset batch holds $incAssets assets at n=$n")
         val t3 = System.nanoTime()
         commit(inc)
         val dtApp = (System.nanoTime() - t3) / 1e9

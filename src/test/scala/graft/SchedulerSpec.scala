@@ -53,7 +53,7 @@ class SchedulerSpec extends SparkSpec {
     val catalog = Seq(("p", "lake", "region")).toDF("project", "dataset", "table")
     spark.sql("CREATE OR REPLACE TEMP VIEW region AS SELECT 1 AS r_regionkey")
     // a NONEMPTY store: 3 pre-existing tags from earlier ticks. The
-    // rollup must NOT count them — runJobs' post-merge state repeats the
+    // rollup must NOT count them — a post-merge state repeats the
     // whole store under each config's uuid, so aggregating that would report
     // n_tag_rows=4/3 (store + produced) and cMiss's no-op job would
     // "report" the store instead of (SUCCEEDED, 0, 0)

@@ -4,29 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Sinks
 
-/** A11/A12: day-partitioned sinks — append vs truncate modes, partition
-  * layout, and partition pruning on read-back.
-  */
+/** A12: the day-partitioned report sink — append vs truncate modes. */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
-
-  test("history append is day-partitioned and prunes on read") {
-    val dir = Files.createTempDirectory("hist").toString
-    val rows = Seq(
-      ("2024-02-01 10:00:00", "a1", "j1"),
-      ("2024-02-02 10:00:00", "a2", "j1"))
-      .toDF("et", "asset_name", "job_uuid")
-      .withColumn("event_time", to_timestamp($"et")).drop("et")
-    Sinks.writeHistory(rows, dir)
-    Sinks.writeHistory(rows.filter($"asset_name" === "a1"), dir) // append
-    assert(new java.io.File(s"$dir/event_date=2024-02-01").isDirectory)
-    val read = spark.read.parquet(dir).filter($"event_date" === "2024-02-01")
-    assert(read.count() === 2) // original + appended
-    // partition filter reaches the scan as a PartitionFilter (pruning)
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("event_date"), plan)
-  }
 
   test("report truncate replaces, append accumulates") {
     val dir = Files.createTempDirectory("rep").toString

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
-import graft.operators.{ConfigDispatch, EngineInputs, GroupedEval, TagEngine}
+import graft.operators.{ConfigDispatch, EngineInputs, GroupedEval, TagEngine,
+  TagFamilyStore}
 
 /** §3.1 end-to-end job semantics: overwrite gate + merge into state. */
 class TagEngineSpec extends SparkSpec {
@@ -28,26 +29,35 @@ class TagEngineSpec extends SparkSpec {
     assert(out.count() === 0)
   }
 
-  test("runJob with overwrite=false skips already-tagged assets") {
-    Lake.registerAll(spark, sf)
-    val existing = Seq(
-      ("bigquery/project/p/dataset/lake/region", "", "gov", "n_rows", "999"))
-      .toDF("asset_uri", "column", "template_id", "field_id", "field_value")
-    val out = TagEngine.runJob(spark, config.copy(overwrite = false),
-        catalog, existing)
+  /** One job of `cfg` through the family store's job terminal, on a
+    * store seeded with region=999 under the config's template; returns
+    * the resulting tag state as asset_uri -> field_value.
+    */
+  private def jobOnSeededStore(cfg: TagConfig): Map[String, String] = {
+    val root = java.nio.file.Files.createTempDirectory("graft_tagjob").toString
+    val seed = Seq(("bigquery/project/p/dataset/lake/region", "", "gov",
+        "n_rows", "double", "999"))
+      .toDF("asset_uri", "column", "template_id", "field_id", "field_type",
+        "field_value")
+    TagFamilyStore.commitJob(spark, root, seed,
+      TagEngine.historyRows(seed, cfg, current_timestamp(), lit("seed")))
+    TagFamilyStore.commitComputed(spark, root, cfg,
+      TagEngine.applyDynamicTableConfig(spark, cfg, catalog))
+    TagFamilyStore.readTags(spark, root)
       .select("asset_uri", "field_value").as[(String, String)].collect().toMap
+  }
+
+  test("a job with overwrite=false skips already-tagged assets") {
+    Lake.registerAll(spark, sf)
+    val out = jobOnSeededStore(config.copy(overwrite = false))
     // region keeps the old value (skip); nation gets computed count 25
     assert(out("bigquery/project/p/dataset/lake/region") === "999")
     assert(out("bigquery/project/p/dataset/lake/nation") === "25")
   }
 
-  test("runJob with overwrite=true recomputes tagged assets") {
+  test("a job with overwrite=true recomputes tagged assets") {
     Lake.registerAll(spark, sf)
-    val existing = Seq(
-      ("bigquery/project/p/dataset/lake/region", "", "gov", "n_rows", "999"))
-      .toDF("asset_uri", "column", "template_id", "field_id", "field_value")
-    val out = TagEngine.runJob(spark, config, catalog, existing)
-      .select("asset_uri", "field_value").as[(String, String)].collect().toMap
+    val out = jobOnSeededStore(config)
     assert(out("bigquery/project/p/dataset/lake/region") === "5")
   }
 
@@ -87,7 +97,7 @@ class TagEngineSpec extends SparkSpec {
     assert(out.head.isNullAt(2), "empty field value must be NULL in history")
   }
 
-  test("runJobs == per-config runJob loop, one expansion for all configs") {
+  test("runJobsProduced batched over all configs == per-config runJobsProduced") {
     Lake.registerAll(spark, sf)
     val cfgB = config.copy(templateId = "ops",
       includedUris = Seq("bigquery/project/p/dataset/lake/supplier",
@@ -95,16 +105,16 @@ class TagEngineSpec extends SparkSpec {
     val existing = Seq(
       ("bigquery/project/p/dataset/lake/region", "", "gov", "n_rows", "999"))
       .toDF("asset_uri", "column", "template_id", "field_id", "field_value")
-    val batched = TagEngine.runJobs(spark,
-        Seq("cA" -> config, "cB" -> cfgB), catalog, existing)
-      .select("config_uuid", "asset_uri", "field_value")
-      .as[(String, String, String)].collect().toSet
-    val looped = Seq("cA" -> config, "cB" -> cfgB).flatMap { case (id, c) =>
-      TagEngine.runJob(spark, c, catalog, existing)
-        .select(lit(id), col("asset_uri"), col("field_value"))
-        .as[(String, String, String)].collect()
-    }.toSet
-    assert(batched === looped)
+    val cfgs = Seq("cA" -> config.copy(overwrite = false), "cB" -> cfgB)
+    def produced(cs: Seq[(String, TagConfig)]): Set[(String, String)] =
+      TagEngine.runJobsProduced(spark, cs, catalog, existing)
+        .select("config_uuid", "asset_uri").as[(String, String)].collect().toSet
+    val batched = produced(cfgs)
+    assert(batched === cfgs.flatMap(c => produced(Seq(c))).toSet)
+    // cA's overwrite=false filter skips the already-tagged region
+    assert(batched === Set("cA" -> "nation", "cB" -> "supplier",
+      "cB" -> "part").map { case (c, t) =>
+        c -> s"bigquery/project/p/dataset/lake/$t" })
   }
 
   test("scheduler-tick job count does NOT grow with #due configs") {
@@ -125,7 +135,7 @@ class TagEngineSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        TagEngine.runJobs(spark, cfgs(n), catalog, emptyTags)
+        TagEngine.runJobsProduced(spark, cfgs(n), catalog, emptyTags)
           .write.mode("overwrite").format("noop").save()
         Thread.sleep(500)
         counter.get()

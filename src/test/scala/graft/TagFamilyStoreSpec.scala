@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
-import graft.operators.TagFamilyStore
+import graft.operators.{TagEngine, TagFamilyStore}
 import graft.sources.{AtomicStore, StoreCut}
 
 /** The tag-engine FAMILY cut (round 18): tags + history (+ reports)
@@ -186,7 +186,7 @@ class TagFamilyStoreSpec extends SparkSpec {
     assert(tagSet(TagFamilyStore.readTags(spark, root)).size === 3)
   }
 
-  test("runJob: the config-evaluation path lands tags+history atomically with runJob-identical semantics") {
+  test("commitComputed: an evaluated config lands tags+history atomically") {
     Lake.registerAll(spark, sf)
     val catalog = Lake.tableNames.map(t => ("p", "lake", t))
       .toDF("project", "dataset", "table")
@@ -197,7 +197,8 @@ class TagFamilyStoreSpec extends SparkSpec {
       includedUris = Seq("bigquery/project/p/dataset/lake/region",
         "bigquery/project/p/dataset/lake/nation"))
     val root = freshRoot()
-    TagFamilyStore.runJob(spark, config, catalog, root,
+    TagFamilyStore.commitComputed(spark, root, config,
+      TagEngine.applyDynamicTableConfig(spark, config, catalog),
       eventTime = to_timestamp(lit("2026-01-05 00:00:00")),
       jobUuid = lit("job-1"))
     val tags = TagFamilyStore.readTags(spark, root)
@@ -214,8 +215,10 @@ class TagFamilyStoreSpec extends SparkSpec {
     // job still commits (cut advances — the reference's SUCCEEDED no-op
     // job) but produces zero new tag rows and zero history rows
     val cutBefore = TagFamilyStore.currentCutVersion(spark, root).get
-    TagFamilyStore.runJob(spark, config.copy(overwrite = false), catalog,
-      root, eventTime = to_timestamp(lit("2026-01-06 00:00:00")),
+    val noOverwrite = config.copy(overwrite = false)
+    TagFamilyStore.commitComputed(spark, root, noOverwrite,
+      TagEngine.applyDynamicTableConfig(spark, noOverwrite, catalog),
+      eventTime = to_timestamp(lit("2026-01-06 00:00:00")),
       jobUuid = lit("job-2"))
     assert(TagFamilyStore.currentCutVersion(spark, root).get > cutBefore)
     assert(tagSet(TagFamilyStore.readTags(spark, root)) ===
