@@ -28,8 +28,9 @@ import graft.sources.{AtomicStore, StoreCut}
   * step is idempotent). The refresh lease (single-writer swaps) and the
   * model-version fence (straggler append batches dropped at load) close
   * the CONCURRENCY seams on top. Stores written before the manifest
-  * existed load through the legacy current-version path and acquire a
-  * manifest on their next write/append/refresh.
+  * existed load every table at its current version (fenced by the
+  * params row) and acquire a manifest on their next
+  * write/append/refresh.
   *
   * Scale notes: the assignment tables are bytes per corpus row (two
   * longs), the codes table a few small ints per row; centroids are
@@ -54,9 +55,6 @@ object AnnIndexStore {
 
   /** Manifest key for the served model generation (the fence value). */
   private val GenKey = "model_generation"
-
-  private def cut(spark: SparkSession, root: String): Option[Map[String, Long]] =
-    StoreCut.cut(spark, root)
 
   /** The current cut VERSION — the handle [[loadAt]] accepts, so an eval
     * can pin an index cut and re-read it bit-identically later (within
@@ -101,14 +99,13 @@ object AnnIndexStore {
     // writer's intent (and while the lease is held, appendVectors'
     // refusal keeps appends from landing mid-rebuild, which is the same
     // protection the refresh path gets)
-    val lease = AtomicStore.claimLease(spark, refreshLeasePath(root),
+    AtomicStore.withLease(spark, refreshLeasePath(root),
       AtomicStore.DefaultLeaseTtlMs,
-      "AnnIndexStore.write (exclusive multi-table rebuild)")
-    try {
+      "AnnIndexStore.write (exclusive multi-table rebuild)") {
       val versions = writeComponents(root, c)
       val cutV = StoreCut.advance(spark, root, versions)
       versions + ("manifest" -> cutV)
-    } finally AtomicStore.releaseLease(spark, lease)
+    }
   }
 
   private def writeComponents(root: String, c: Components): Map[String, Long] = {
@@ -126,22 +123,11 @@ object AnnIndexStore {
       "sigs" -> c.sigs.select("vec_id", "bucket_sig"))
     // the five component tables are independent stores (the CUT, not
     // table order, is what makes the multi-table state atomic), so their
-    // snapshot commits run concurrently (guide §2.6) — under the lease
-    // nothing else writes them, and the cut advance below still happens
-    // only after every commit returned. blocking{}: each future blocks on
-    // a Spark action, so the shared global pool must be told to grow past
-    // its CPU-count cap instead of deadlocking under nested fan-outs.
-    // Failure note: if one commit throws, Await rethrows while sibling
-    // futures finish committing in the background — table versions can
-    // advance after the reported failure, but the CUT never does, so
-    // readers stay on the old state and the orphans age out under vacuum.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(
-      Future.sequence(parts.map(p => Future(blocking(
-        p -> AtomicStore.commitSnapshot(frames(p), s"$root/$p"))))),
-      Duration.Inf).toMap
+    // snapshot commits run concurrently ([[Par]]) — under the lease
+    // nothing else writes them, and the caller's cut advance still
+    // happens only after every commit returned
+    Par.all(parts.map(p => () =>
+      p -> AtomicStore.commitSnapshot(frames(p), s"$root/$p"))).toMap
   }
 
   /** Load the persisted components — every table resolved through ONE
@@ -166,21 +152,7 @@ object AnnIndexStore {
     * never pins.
     */
   def load(spark: SparkSession, root: String): Components =
-    cut(spark, root) match {
-      case None => loadLegacy(spark, root)
-      case Some(pins) =>
-        try loadPinned(spark, root, pins)
-        catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-          // a pinned table version vacuumed between the cut read and the
-          // component resolve — the store moved on; re-resolve once at
-          // the freshest cut (readPinned's own fallback covers a single
-          // table aging out; this covers the whole-cut case)
-          cut(spark, root) match {
-            case Some(p2) => loadPinned(spark, root, p2)
-            case None => loadLegacy(spark, root)
-          }
-        }
-    }
+    StoreCut.atCut(spark, root)(loadPinned(spark, root, _))
 
   /** A Components view of one resolved cut (shared by [[load]] and
     * [[loadAt]] — the latter passes `strict`, failing loudly on an
@@ -190,7 +162,8 @@ object AnnIndexStore {
     * predate GenKey stamping fall back to the PINNED params row when
     * the cut pins one (never the live table — a crashed writeModel's
     * orphaned generation must not leak into the fence); a cut pinning
-    * neither (appends-only on a legacy store) keeps the legacy live
+    * neither (appends-only on a legacy store, or no cut at all —
+    * `pins` empty, every table read at current) keeps the legacy live
     * read, i.e. pre-manifest semantics until the first completed
     * writeModel/refresh publishes the generation.
     */
@@ -214,23 +187,6 @@ object AnnIndexStore {
     }
     Components(StoreCut.readPinned(spark, root, "centroids", pins, strict),
       perRow("assigned"), perRow("assigned_multi"),
-      perRow("codes"), perRow("sigs"))
-  }
-
-  /** Pre-manifest load path, byte-for-byte the old semantics: every
-    * table at its own current version, fence against the params row.
-    */
-  private def loadLegacy(spark: SparkSession, root: String): Components = {
-    def t(p: String) = AtomicStore.read(spark, s"$root/$p")
-    lazy val current = paramsGeneration(spark, root)
-    def perRow(p: String): DataFrame = {
-      val df = t(p)
-      if (!df.columns.contains("model_version")) df
-      else df.filter(col("model_version").isNull ||
-          col("model_version") === current)
-        .drop("model_version")
-    }
-    Components(t("centroids"), perRow("assigned"), perRow("assigned_multi"),
       perRow("codes"), perRow("sigs"))
   }
 
@@ -259,7 +215,7 @@ object AnnIndexStore {
     * every stamped row (stamps are ≥ 1).
     */
   def currentModelVersion(spark: SparkSession, root: String): Long =
-    cut(spark, root).flatMap(_.get(GenKey))
+    StoreCut.cut(spark, root).flatMap(_.get(GenKey))
       .getOrElse(paramsGeneration(spark, root))
 
   /** The generation in the params TABLE's current row — the MINT source
@@ -388,15 +344,7 @@ object AnnIndexStore {
     * codebook/hyperplanes stay lazy frames for the batch-side joins.
     */
   def loadModel(spark: SparkSession, root: String): Model =
-    cut(spark, root) match {
-      case None => loadModelPinned(spark, root, Map.empty)
-      case Some(pins) =>
-        try loadModelPinned(spark, root, pins)
-        catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-          loadModelPinned(spark, root,
-            cut(spark, root).getOrElse(Map.empty))
-        }
-    }
+    StoreCut.atCut(spark, root)(loadModelPinned(spark, root, _))
 
   private def loadModelPinned(spark: SparkSession, root: String,
                               pins: Map[String, Long],
@@ -419,6 +367,61 @@ object AnnIndexStore {
   def loadModelAt(spark: SparkSession, root: String, cutVersion: Long): Model =
     loadModelPinned(spark, root, StoreCut.cutAt(spark, root, cutVersion),
       strict = true)
+
+  private def refreshLeasePath(root: String) = s"$root/.refresh_lease"
+
+  /** TEST-ONLY crash seam for the multi-table swap: invoked with a
+    * stage label after each commit group inside [[refreshIndex]]
+    * ("components" — component snapshots landed; "model" — model tables
+    * landed; both BEFORE the single cut publish). A spec that throws
+    * here simulates a crash partway through the swap and asserts the
+    * previous cut still serves. Production never sets it.
+    */
+  @volatile private[graft] var testMidSwapHook: String => Unit = _ => ()
+
+  /** ATOMIC MODEL REFRESH — the "retrain + rewrite" operation the s18
+    * staleness eval gates: new centroids (and codebook/hyperplanes/
+    * params) plus the re-derived per-row components, committed table by
+    * table and then published as ONE manifest cut. Concurrency: the
+    * refresh runs under an exclusive lease ([[AtomicStore.withLease]])
+    * and [[appendVectors]] REFUSES loudly while it is held; the one
+    * append the lease cannot exclude — already past its lease check and
+    * mid-commit when the refresh claims — lands an old-model batch that
+    * the model-version FENCE drops at load (its stamp predates the new
+    * cut's generation; [[compact]] purges the bytes; the straggler's
+    * vectors are simply absent until re-appended, which an ingest that
+    * keeps a served-set check repairs in one pass).
+    *
+    * Interruption: a refresh that crashes ANYWHERE before its single
+    * cut publish leaves the previous cut serving — every partial table
+    * commit is invisible to readers (they resolve through the cut) and
+    * to appenders (the chain-extension check refuses to build on
+    * unpublished snapshots). Re-run the refresh to completion; every
+    * step is an idempotent snapshot and the re-run's cut adopts only
+    * its own commits. (This replaces the pre-manifest KNOWN RESIDUAL,
+    * where the eight-commit swap could strand tables across two
+    * generations with previously appended rows serving against replaced
+    * centroids.)
+    */
+  def refreshIndex(root: String, c: Components, m: Model,
+                   leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] = {
+    val spark = c.centroids.sparkSession
+    AtomicStore.withLease(spark, refreshLeasePath(root), leaseTtlMs,
+        "AnnIndexStore.refreshIndex (exclusive model swap)") {
+      // writeComponents, not write(): the public write refuses model-ful
+      // stores unconditionally — this lease-holding swap is the one
+      // legitimate rewrite path. Tables first, cut LAST: the new
+      // generation and the new snapshots become visible together or not
+      // at all.
+      val componentVersions = writeComponents(root, c)
+      testMidSwapHook("components")
+      val (modelVersions, gen) = writeModelVersions(root, m)
+      testMidSwapHook("model")
+      val cutV = StoreCut.advance(spark, root,
+        componentVersions ++ modelVersions + (GenKey -> gen))
+      componentVersions ++ modelVersions + ("manifest" -> cutV)
+    }
+  }
 
   /** Incremental index maintenance — the ingest-wave path that was
     * missing while [[write]] was the only way to change the store (a
@@ -449,62 +452,6 @@ object AnnIndexStore {
     * DocIndexStore append contract (exactly-once sits with the ingest
     * commit protocol, `Ingest.ingestBatchCommit`).
     */
-  private def refreshLeasePath(root: String) = s"$root/.refresh_lease"
-
-  /** TEST-ONLY crash seam for the multi-table swap: invoked with a
-    * stage label after each commit group inside [[refreshIndex]]
-    * ("components" — component snapshots landed; "model" — model tables
-    * landed; both BEFORE the single cut publish). A spec that throws
-    * here simulates a crash partway through the swap and asserts the
-    * previous cut still serves. Production never sets it.
-    */
-  @volatile private[graft] var testMidSwapHook: String => Unit = _ => ()
-
-  /** ATOMIC MODEL REFRESH — the "retrain + rewrite" operation the s18
-    * staleness eval gates: new centroids (and codebook/hyperplanes/
-    * params) plus the re-derived per-row components, committed table by
-    * table and then published as ONE manifest cut. Concurrency: the
-    * refresh runs under an exclusive lease ([[AtomicStore.claimLease]])
-    * and [[appendVectors]] REFUSES loudly while it is held; the one
-    * append the lease cannot exclude — already past its lease check and
-    * mid-commit when the refresh claims — lands an old-model batch that
-    * the model-version FENCE drops at load (its stamp predates the new
-    * cut's generation; [[compact]] purges the bytes; the straggler's
-    * vectors are simply absent until re-appended, which an ingest that
-    * keeps a served-set check repairs in one pass).
-    *
-    * Interruption: a refresh that crashes ANYWHERE before its single
-    * cut publish leaves the previous cut serving — every partial table
-    * commit is invisible to readers (they resolve through the cut) and
-    * to appenders (the chain-extension check refuses to build on
-    * unpublished snapshots). Re-run the refresh to completion; every
-    * step is an idempotent snapshot and the re-run's cut adopts only
-    * its own commits. (This replaces the pre-manifest KNOWN RESIDUAL,
-    * where the eight-commit swap could strand tables across two
-    * generations with previously appended rows serving against replaced
-    * centroids.)
-    */
-  def refreshIndex(root: String, c: Components, m: Model,
-                   leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] = {
-    val spark = c.centroids.sparkSession
-    val lease = AtomicStore.claimLease(spark, refreshLeasePath(root),
-      leaseTtlMs, "AnnIndexStore.refreshIndex (exclusive model swap)")
-    try {
-      // writeComponents, not write(): the public write refuses model-ful
-      // stores unconditionally — this lease-holding swap is the one
-      // legitimate rewrite path. Tables first, cut LAST: the new
-      // generation and the new snapshots become visible together or not
-      // at all.
-      val componentVersions = writeComponents(root, c)
-      testMidSwapHook("components")
-      val (modelVersions, gen) = writeModelVersions(root, m)
-      testMidSwapHook("model")
-      val cutV = StoreCut.advance(spark, root,
-        componentVersions ++ modelVersions + (GenKey -> gen))
-      componentVersions ++ modelVersions + ("manifest" -> cutV)
-    } finally AtomicStore.releaseLease(spark, lease)
-  }
-
   def appendVectors(root: String, newEmb: DataFrame,
                     compactAboveDirs: Int = 64): Map[String, Long] = {
     val spark = newEmb.sparkSession
@@ -527,55 +474,6 @@ object AnnIndexStore {
     appendEncoded(root, newEmb, loadModel(spark, root), compactAboveDirs)
   }
 
-  /** Resolve the store's cut and require every per-row table's CURRENT
-    * chain to EXTEND its pin ([[StoreCut.extendsPin]]) — refusing to
-    * build an append on a crashed swap's unpublished snapshot, which
-    * the append's own cut advance would otherwise adopt into the served
-    * cut (for a crashed refresh: new components under the OLD
-    * generation, with unstamped snapshot rows the fence cannot drop).
-    * Transient gaps (a sibling's commit→advance window, a live fold)
-    * clear in milliseconds and are retried through; a persistent gap
-    * under a held refresh lease is a live swap mid-flight (retryable
-    * busy, same signal as the lease check); with no lease it is a
-    * crashed swap — loud stop with the re-run remedy.
-    */
-  /** Retry budget for the transient chain-gap window (a sibling's
-    * commit→advance, a live fold) before the gap is declared a crashed
-    * swap — `private[graft]` so the crash-injection specs don't pay the
-    * full ~10 s production backoff to reach the loud path.
-    */
-  @volatile private[graft] var chainRetryBudget: Int = 12
-
-  private def consistentCutForAppend(spark: SparkSession,
-                                     root: String): Map[String, Long] = {
-    var attempt = 0
-    while (true) {
-      val pins = cut(spark, root).getOrElse(Map.empty)
-      val gaps = perRowParts.filterNot(p =>
-        StoreCut.chainExtendsCut(spark, root, p, pins))
-      if (gaps.isEmpty) return pins
-      attempt += 1
-      if (attempt > chainRetryBudget) {
-        if (AtomicStore.leaseHeld(spark, refreshLeasePath(root)))
-          throw new java.util.ConcurrentModificationException(
-            s"appendVectors: a model refresh is mid-swap at $root " +
-              s"(tables ${gaps.mkString(", ")} committed ahead of the " +
-              "cut under the refresh lease); retry after it completes")
-        throw new IllegalStateException(
-          s"appendVectors: tables ${gaps.mkString(", ")} at $root carry " +
-            "snapshots the store manifest never published — a multi-table " +
-            "swap (refreshIndex / write / a crashed maintenance pass) " +
-            "died between its table commits and its cut publish. Re-run " +
-            "the interrupted operation to completion (every step is " +
-            "idempotent; its cut publish repairs the store) before " +
-            "appending — building on an orphaned snapshot would adopt it " +
-            "into the served cut")
-      }
-      Thread.sleep(math.min(250L * attempt, 1000L))
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** The encode-and-commit half of [[appendVectors]], against a model
     * the CALLER already resolved — `private[graft]` so the residual-
     * window spec can force the exact interleaving the lease cannot
@@ -589,7 +487,13 @@ object AnnIndexStore {
                                    m: Model,
                                    compactAboveDirs: Int): Map[String, Long] = {
     val spark = newEmb.sparkSession
-    val pins = consistentCutForAppend(spark, root)
+    // every per-row table's chain must extend its pin: for a crashed
+    // refresh, building on its orphan would publish new components under
+    // the OLD generation, with unstamped snapshot rows the fence cannot
+    // drop ([[StoreCut.awaitChain]]; a gap under the refresh lease is a
+    // live swap and ends busy, like the lease check above)
+    val (pins, _) = StoreCut.awaitChain(spark, root, perRowParts,
+      "appendVectors", refreshLeasePath(root))
     // centroids at the CUT, not at current: after a partially-crashed
     // swap the current centroid table may be an unpublished orphan
     // snapshot — encoding against it while stamping the served
@@ -638,32 +542,31 @@ object AnnIndexStore {
       val newSigs = Similarity.hyperplaneSignatures(batch, m.hyperplanes)
       requireSchema(newSigs, "sigs",
         "the store's signature table was written with a non-canonical shape")
+      // one thunk per table: commit the batch (errors HERE propagate —
+      // nothing landed yet), then self-fold past the dir threshold, fold
+      // adoption included, best-effort (the fold half of
+      // [[StoreCut.publishAppend]]). `df` is by-name: the assign passes
+      // read their centroids eagerly, and that job belongs in the fan-out.
+      def append(part: String, df: => DataFrame): () => (String, Long) =
+        () => part -> {
+          val table = s"$root/$part"
+          val v = AtomicStore.commitAppend(stamped(df), table)
+          AtomicStore.compactIfAbove(spark, table, v, compactAboveDirs,
+            fold = () => StoreCut.foldAndAdvance(spark, root, part))
+            .getOrElse(v)
+        }
       // four independent encode+commit passes over four independent
-      // tables — run them concurrently (guide §2.6): the persisted batch
-      // is the shared input, each append CASes only its own table, and
-      // the cut advance below still waits for all four. blocking{} +
-      // failure note: see writeComponents — siblings of a failed commit
-      // finish in the background, the cut never adopts them.
-      val versions = {
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future(blocking("assigned" -> appendCompacting(root,
-            stamped(Similarity.ivfAssign(batch, centroids)
-              .select("vec_id", "centroid_id")),
-            "assigned", compactAboveDirs))),
-          Future(blocking("assigned_multi" -> appendCompacting(root,
-            stamped(Similarity.ivfAssignMulti(batch, centroids, m.nprobe)
-              .select("vec_id", "centroid_id")),
-            "assigned_multi", compactAboveDirs))),
-          Future(blocking("codes" -> appendCompacting(root,
-            stamped(newCodes),
-            "codes", compactAboveDirs))),
-          Future(blocking("sigs" -> appendCompacting(root,
-            stamped(newSigs),
-            "sigs", compactAboveDirs))))), Duration.Inf).toMap
-      }
+      // tables — run them concurrently ([[Par]]): the persisted batch is
+      // the shared input, each append CASes only its own table, and the
+      // cut advance below still waits for all four
+      val versions = Par.all(Seq(
+        append("assigned", Similarity.ivfAssign(batch, centroids)
+          .select("vec_id", "centroid_id")),
+        append("assigned_multi",
+          Similarity.ivfAssignMulti(batch, centroids, m.nprobe)
+            .select("vec_id", "centroid_id")),
+        append("codes", newCodes),
+        append("sigs", newSigs))).toMap
       // publish the batch into the served cut: one monotone advance,
       // restricted to tables whose committed version still EXTENDS the
       // cut pin. The restriction closes the one window the up-front
@@ -690,7 +593,7 @@ object AnnIndexStore {
       // append/fold on the table adopts its files, and compact()
       // publishes it too.
       try {
-        val cutNow = cut(spark, root).getOrElse(Map.empty)
+        val cutNow = StoreCut.cut(spark, root).getOrElse(Map.empty)
         val publishable = versions.filter { case (p, v) =>
           cutNow.get(p).forall(pin =>
             StoreCut.extendsPin(spark, s"$root/$p", pin, v))
@@ -700,26 +603,6 @@ object AnnIndexStore {
       } catch { case scala.util.control.NonFatal(_) => () }
       versions
     } finally batch.unpersist()
-  }
-
-  /** Commit the batch (errors HERE propagate — nothing landed yet),
-    * then self-fold past the dir threshold, fold adoption included,
-    * best-effort ([[StoreCut.publishAppend]]'s fold half; the collective
-    * cut advance for all four tables happens once in [[appendEncoded]]).
-    */
-  private def appendCompacting(root: String, batch: DataFrame, part: String,
-                               aboveDirs: Int): Long = {
-    val spark = batch.sparkSession
-    val table = s"$root/$part"
-    val v = AtomicStore.commitAppend(batch, table)
-    val folded =
-      try {
-        if (aboveDirs > 0 &&
-            AtomicStore.filesAt(spark, table, v).size > aboveDirs)
-          StoreCut.foldAndAdvance(spark, root, part)
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    folded.getOrElse(v)
   }
 
   /** Periodic maintenance, the [[DocIndexStore.compact]] sibling: fold
@@ -750,26 +633,16 @@ object AnnIndexStore {
     // live swap just wastes its materialization to a lost CAS
     if (AtomicStore.leaseHeld(spark, refreshLeasePath(root)))
       return (parts ++ modelParts).map(_ -> (None: Option[Long])).toMap
-    val folded = parts.map(p =>
+    // model tables are snapshot-only (never >1 data dir), so their fold
+    // is structurally None and runs for its vacuum only — floored at the
+    // RETAINED cuts' pins: stacked crashed writeModels leave the table
+    // versions ahead of the cut, and a keep-2 vacuum could otherwise
+    // reclaim a pinned (served, or time-travel readable) model version
+    val folded = (parts ++ modelParts).map(p =>
       p -> StoreCut.foldAndAdvance(spark, root, p, graceMs)).toMap
-    // model tables are snapshot-only (never >1 data dir), so the fold is
-    // structurally None — run compact for its vacuum only, with the
-    // RETAINED cuts' pins as an absolute retention floor: stacked
-    // crashed writeModels leave the table versions ahead of the cut, and
-    // a keep-2 vacuum could reclaim a pinned (served, or time-travel
-    // readable) model version out from under a retained cut. The chain
-    // check doubles as the cut-governance authorization compact now
-    // requires.
-    val pins = cut(spark, root).getOrElse(Map.empty)
-    val modelFolded = modelParts.map { p =>
-      p -> AtomicStore.compact(spark, s"$root/$p", graceMs = graceMs,
-        keepFloor = StoreCut.retentionFloor(spark, root, p, pins),
-        chainCheck = Some(v => pins.get(p).forall(pin =>
-          StoreCut.extendsPin(spark, s"$root/$p", pin, v))))
-    }.toMap
     purgeFenced(spark, root)
     StoreCut.vacuumCuts(spark, root, graceMs = graceMs)
-    folded ++ modelFolded
+    folded
   }
 
   /** Drop rows the model-version fence permanently hides — a straggler
@@ -804,7 +677,7 @@ object AnnIndexStore {
     try {
       if (AtomicStore.leaseHeld(spark, refreshLeasePath(root))) return
       val v = currentModelVersion(spark, root)
-      val pins = cut(spark, root).getOrElse(Map.empty)
+      val pins = StoreCut.cut(spark, root).getOrElse(Map.empty)
       perRowParts.foreach { p =>
         try {
           val t = s"$root/$p"

@@ -36,6 +36,16 @@ object DocIndexStore {
       simhash: DataFrame,     // (doc_id, simhash)
       minhashSigs: DataFrame) // (doc_id, mh_0..mh_7, band_0, band_1)
 
+  /** The rebuild lease: [[write]] is a multi-table swap, and two
+    * UN-serialized concurrent rebuilds can interleave so the cut's
+    * per-key max-merge publishes simhash from one rebuild and
+    * minhash/spec from the other — a consistent-LOOKING cut that was
+    * never any writer's intent (each table internally coherent, the
+    * pair mixed). The lease serializes whole rebuilds, the same
+    * single-writer contract refreshIndex enforces on the ANN side.
+    */
+  private def writeLeasePath(root: String) = s"$root/_write_lease"
+
   /** Write both components (and the spec declaration) as atomic tables
     * under `root`, then publish ONE manifest cut. Returns the committed
     * version per table plus the cut under `"manifest"`.
@@ -60,25 +70,13 @@ object DocIndexStore {
     * rebuilt table with a stale declaration, and none of a rebuild is
     * visible until its single cut publish.
     */
-  /** The rebuild lease: [[write]] is a multi-table swap, and two
-    * UN-serialized concurrent rebuilds can interleave so the cut's
-    * per-key max-merge publishes simhash from one rebuild and
-    * minhash/spec from the other — a consistent-LOOKING cut that was
-    * never any writer's intent (each table internally coherent, the
-    * pair mixed). The lease serializes whole rebuilds, the same
-    * single-writer contract refreshIndex enforces on the ANN side.
-    */
-  private def writeLeasePath(root: String) = s"$root/_write_lease"
-
   def write(root: String, c: Components,
             sigSpec: String = "",
-            leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] = {
-    val spark = c.simhash.sparkSession
-    val lease = AtomicStore.claimLease(spark, writeLeasePath(root),
-      leaseTtlMs, "DocIndexStore.write (exclusive multi-table rebuild)")
-    try writeLocked(root, c, sigSpec)
-    finally AtomicStore.releaseLease(spark, lease)
-  }
+            leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] =
+    AtomicStore.withLease(c.simhash.sparkSession, writeLeasePath(root),
+      leaseTtlMs, "DocIndexStore.write (exclusive multi-table rebuild)") {
+      writeLocked(root, c, sigSpec)
+    }
 
   private def writeLocked(root: String, c: Components,
                           sigSpec: String): Map[String, Long] = {
@@ -98,22 +96,13 @@ object DocIndexStore {
         Map("spec" -> AtomicStore.commitSnapshot(
           Seq("").toDF("sig_spec"), s"$root/spec"))
       else Map.empty
-    // two independent component tables — concurrent commits (guide
-    // §2.6); the cut advance below is still the single atomicity point.
-    // blocking{} + failure note: see AnnIndexStore.writeComponents —
-    // a failed commit's sibling finishes in the background, the cut
-    // never adopts it.
-    val versions = spec ++ {
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence(Seq(
-        Future(blocking("simhash" ->
-          AtomicStore.commitSnapshot(c.simhash, s"$root/simhash"))),
-        Future(blocking("minhash" ->
-          AtomicStore.commitSnapshot(c.minhashSigs, s"$root/minhash"))))),
-        Duration.Inf).toMap
-    }
+    // two independent component tables — concurrent commits ([[Par]]);
+    // the cut advance below is still the single atomicity point
+    val versions = spec ++ Par.all(Seq(
+      () => "simhash" ->
+        AtomicStore.commitSnapshot(c.simhash, s"$root/simhash"),
+      () => "minhash" ->
+        AtomicStore.commitSnapshot(c.minhashSigs, s"$root/minhash")))
     val cutV = StoreCut.advance(spark, root, versions)
     versions + ("manifest" -> cutV)
   }
@@ -125,17 +114,15 @@ object DocIndexStore {
     * undeclared rebuild writes over a stale declaration — reported as
     * None.
     */
-  def loadSpec(spark: SparkSession, root: String): Option[String] = {
-    val pins = StoreCut.cut(spark, root).getOrElse(Map.empty)
-    val declared =
+  def loadSpec(spark: SparkSession, root: String): Option[String] =
+    StoreCut.atCut(spark, root) { pins =>
       if (pins.contains("spec"))
         Some(StoreCut.readPinned(spark, root, "spec", pins)
           .head().getString(0))
       else
         AtomicStore.currentVersion(spark, s"$root/spec")
           .map(_ => AtomicStore.read(spark, s"$root/spec").head().getString(0))
-    declared.filter(_.nonEmpty)
-  }
+    }.filter(_.nonEmpty)
 
   /** Reject an append whose signature definition or schema disagrees
     * with the store's. The schema leg is unconditional (a hash/band
@@ -178,19 +165,11 @@ object DocIndexStore {
   /** Load the persisted components at the store's current cut (legacy
     * stores: each table at its own current version).
     */
-  def load(spark: SparkSession, root: String): Components = {
-    def attempt(pins: Map[String, Long]) = Components(
-      StoreCut.readPinned(spark, root, "simhash", pins),
-      StoreCut.readPinned(spark, root, "minhash", pins))
-    StoreCut.cut(spark, root) match {
-      case None => attempt(Map.empty)
-      case Some(pins) =>
-        try attempt(pins)
-        catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-          attempt(StoreCut.cut(spark, root).getOrElse(Map.empty))
-        }
+  def load(spark: SparkSession, root: String): Components =
+    StoreCut.atCut(spark, root) { pins =>
+      Components(StoreCut.readPinned(spark, root, "simhash", pins),
+        StoreCut.readPinned(spark, root, "minhash", pins))
     }
-  }
 
   /** The current cut version — the [[loadAt]] handle (see
     * [[AnnIndexStore.currentCutVersion]]).
@@ -247,58 +226,34 @@ object DocIndexStore {
     * signature rows carry no model stamp to fence them at load. So the
     * commit is CAS'd against the component-table version the guard
     * validated, that version is first required to EXTEND the cut pin
-    * ([[StoreCut.extendsPin]] — the base must not be a crashed swap's
+    * ([[StoreCut.awaitChain]] — the base must not be a crashed swap's
     * unpublished snapshot, which the append's own advance would adopt
-    * into the served cut), and a lost CAS RE-RUNS both before retrying:
-    * if the table moved because of a rebuild, the re-check waits for
-    * the rebuild's cut (transient) or the re-guard sees its declaration
-    * and rejects; if it moved because of a sibling append, both pass
-    * and the retry lands. Costs one batch rewrite per lost race —
-    * appends race rarely, rebuilds
-    * almost never, and the alternative is silent under-detection
-    * forever. The committed batch is then published by one manifest
-    * advance; a crash between the two leaves the batch invisible until
-    * the next append/fold on the table adopts its files (append parents
-    * resolve physically) — eventual visibility, never a torn cut.
+    * into the served cut; a gap under the held rebuild lease is a live
+    * rebuild and ends busy, a gap with no lease is a crashed one and
+    * ends with the re-run remedy), and a lost CAS RE-RUNS both before
+    * retrying: if the table moved because of a rebuild, the re-check
+    * waits for the rebuild's cut (transient) or the re-guard sees its
+    * declaration and rejects; if it moved because of a sibling append,
+    * both pass and the retry lands. Costs one batch rewrite per lost
+    * race — appends race rarely, rebuilds almost never, and the
+    * alternative is silent under-detection forever. The committed batch
+    * is then published by one manifest advance; a crash between the two
+    * leaves the batch invisible until the next append/fold on the table
+    * adopts its files (append parents resolve physically) — eventual
+    * visibility, never a torn cut.
     */
-  /** Retry budget for the transient chain-gap window before it is
-    * declared a crashed swap (see AnnIndexStore.chainRetryBudget).
-    */
-  @volatile private[graft] var chainRetryBudget: Int = 12
-
   private def appendGuarded(batch: DataFrame, part: String,
                             root: String, declaredSpec: String, what: String,
                             aboveDirs: Int): Long = {
     val spark = batch.sparkSession
     val table = s"$root/$part"
     var committed: Option[Long] = None
-    var attempt = 0
     while (committed.isEmpty) {
-      val pins = StoreCut.cut(spark, root).getOrElse(Map.empty)
-      val base = AtomicStore.currentVersion(spark, table)
-      val chainOk = pins.get(part).forall(pin =>
-        base.exists(b => StoreCut.extendsPin(spark, table, pin, b)))
-      if (!chainOk) {
-        // a live rebuild/fold's commit→advance window (ms) or a crashed
-        // one (permanent): bounded retry, then the re-run remedy
-        attempt += 1
-        if (attempt > chainRetryBudget)
-          // unlike AnnIndexStore there is no lease to tell a LIVE slow
-          // rebuild from a crashed one — say so, rather than advising an
-          // unconditional re-run that could start a second concurrent
-          // rebuild over one still in flight
-          throw new IllegalStateException(
-            s"$what: $table carries a snapshot the store manifest never " +
-              "published — a write()/compact() either crashed between its " +
-              "table commits and its cut publish, or is still in flight. " +
-              "Wait for it to publish its cut; if it crashed, re-run the " +
-              "interrupted operation to completion (idempotent; its cut " +
-              "publish repairs the store) before appending")
-        Thread.sleep(math.min(250L * attempt, 1000L))
-      } else {
-        guardAppend(batch, table, root, declaredSpec, what)
-        committed = AtomicStore.commitAppendIfUnchanged(batch, table, base)
-      }
+      val (_, current) = StoreCut.awaitChain(spark, root, Seq(part), what,
+        writeLeasePath(root))
+      guardAppend(batch, table, root, declaredSpec, what)
+      committed =
+        AtomicStore.commitAppendIfUnchanged(batch, table, current.get(part))
     }
     val v = committed.get
     // post-commit publication (+ self-fold) is best-effort: the batch is
@@ -330,22 +285,13 @@ object DocIndexStore {
     */
   def compact(spark: SparkSession, root: String,
               graceMs: Long = 15 * 60 * 1000L): Map[String, Option[Long]] = {
-    val folded = Seq("simhash", "minhash").map(p =>
+    // the spec table is snapshot-only when present: its fold never fires
+    // (one data dir), so it runs for the vacuum — with the retained
+    // cuts' pins as the absolute floor — and returns None harmlessly for
+    // a store without one
+    val folded = Seq("simhash", "minhash", "spec").map(p =>
       p -> StoreCut.foldAndAdvance(spark, root, p, graceMs)).toMap
-    // the spec table is snapshot-only when present — compact for its
-    // vacuum (returns None harmlessly for a store without one), with
-    // the RETAINED cuts' pins as an absolute retention floor (stacked
-    // crashed rebuilds leave the table ahead of the cut; the pinned
-    // declarations — the live cut's AND every time-travel cut's — must
-    // survive their vacuum). The chain check doubles as the
-    // cut-governance authorization compact now requires.
-    val pins = StoreCut.cut(spark, root).getOrElse(Map.empty)
-    val specFolded = Map(
-      "spec" -> AtomicStore.compact(spark, s"$root/spec", graceMs = graceMs,
-        keepFloor = StoreCut.retentionFloor(spark, root, "spec", pins),
-        chainCheck = Some(v => pins.get("spec").forall(pin =>
-          StoreCut.extendsPin(spark, s"$root/spec", pin, v)))))
     StoreCut.vacuumCuts(spark, root, graceMs = graceMs)
-    folded ++ specFolded
+    folded
   }
 }

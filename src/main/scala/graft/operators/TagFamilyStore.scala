@@ -100,13 +100,8 @@ object TagFamilyStore {
   private def fireHook(root: String, stage: String): Unit =
     Option(testHooks.get(root)).foreach(_(stage))
 
-  private def withJobLease[T](spark: SparkSession, root: String,
-                              ttlMs: Long)(body: => T): T = {
-    val lease = AtomicStore.claimLease(spark, leasePath(root), ttlMs,
-      "TagFamilyStore job commit (exclusive multi-table publish)")
-    try body
-    finally AtomicStore.releaseLease(spark, lease)
-  }
+  private val JobLeaseWhat =
+    "TagFamilyStore job commit (exclusive multi-table publish)"
 
   // ------------------------------------------------------------ writes
 
@@ -173,7 +168,8 @@ object TagFamilyStore {
                  leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
                  compactAboveBatches: Int = 64): Map[String, Long] =
     if (jobs.isEmpty) Map.empty
-    else withJobLease(spark, root, leaseTtlMs) {
+    else AtomicStore.withLease(spark, leasePath(root), leaseTtlMs,
+        JobLeaseWhat) {
       commitTickLocked(spark, root, jobs, compactAboveBatches)
     }
 
@@ -386,22 +382,13 @@ object TagFamilyStore {
     * floor keeps every retained cut's pins resolvable — so strictness
     * costs nothing and converts a protocol violation into a loud
     * error). A pin vacuumed between the cut read and the resolve (the
-    * store moved on mid-read) retries once at the freshest cut; the
-    * strict failure's cause chain carries the race, so the retry guard
-    * sees it.
+    * store moved on mid-read) retries once at the freshest cut
+    * ([[StoreCut.atCut]]).
     */
   private def pinnedPart(spark: SparkSession, root: String,
-                         part: String): Option[DataFrame] = {
-    def attempt(pins: Map[String, Long]): Option[DataFrame] =
-      pins.get(part).map(_ =>
-        StoreCut.readPinned(spark, root, part, pins, strict = true))
-    StoreCut.cut(spark, root).flatMap { pins =>
-      try attempt(pins)
-      catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-        attempt(StoreCut.cut(spark, root).getOrElse(Map.empty))
-      }
-    }
-  }
+                         part: String): Option[DataFrame] =
+    StoreCut.atCut(spark, root)(pins => pins.get(part).map(_ =>
+      StoreCut.readPinned(spark, root, part, pins, strict = true)))
 
   private def noCut(root: String, part: String): Nothing =
     throw new IllegalStateException(
@@ -431,8 +418,8 @@ object TagFamilyStore {
     * a consistent pair however late they are collected. Same strict +
     * one-retry discipline as [[pinnedPart]].
     */
-  def readFamily(spark: SparkSession, root: String): Family = {
-    def attempt(pins: Map[String, Long]): Family = {
+  def readFamily(spark: SparkSession, root: String): Family =
+    StoreCut.atCut(spark, root) { pins =>
       if (!pins.contains(TagsPart)) noCut(root, TagsPart)
       if (!pins.contains(HistoryPart)) noCut(root, HistoryPart)
       Family(
@@ -440,13 +427,6 @@ object TagFamilyStore {
           StoreCut.readPinned(spark, root, TagsPart, pins, strict = true)),
         StoreCut.readPinned(spark, root, HistoryPart, pins, strict = true))
     }
-    val pins = StoreCut.cut(spark, root)
-      .getOrElse(noCut(root, TagsPart))
-    try attempt(pins)
-    catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-      attempt(StoreCut.cut(spark, root).getOrElse(Map.empty))
-    }
-  }
 
   /** [[readTags]], or an empty frame in `schemaLike`'s schema for a
     * store no job ever committed to (the fresh-store read every first
@@ -659,7 +639,7 @@ object TagFamilyStore {
               graceMs: Long = 15 * 60 * 1000L,
               leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs)
       : Map[String, Option[Long]] =
-    withJobLease(spark, root, leaseTtlMs) {
+    AtomicStore.withLease(spark, leasePath(root), leaseTtlMs, JobLeaseWhat) {
       val folded = Seq(TagsPart, HistoryPart, ReportsPart)
         .map(p => p -> foldPartLocked(spark, root, p, graceMs)).toMap
       StoreCut.vacuumCuts(spark, root, graceMs = graceMs)
@@ -767,7 +747,7 @@ object TagFamilyStore {
                               idempotencyPin: Option[(String, Long)])(
       jobsOf: DataFrame => Seq[(String, TagConfig, DataFrame, Column)])
       : (Map[String, Long], Seq[JobBatch]) =
-    withJobLease(spark, root, leaseTtlMs) {
+    AtomicStore.withLease(spark, leasePath(root), leaseTtlMs, JobLeaseWhat) {
       val replayed = idempotencyPin.exists { case (k, n) =>
         StoreCut.cut(spark, root).exists(_.get(k).exists(_ >= n))
       }

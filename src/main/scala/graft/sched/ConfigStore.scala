@@ -221,33 +221,33 @@ object ConfigStore {
     import org.apache.hadoop.fs.Path
     val fs = new Path(logPath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val lease = graft.sources.AtomicStore.claimLease(spark,
-      logPath + ".__compact_lease", leaseTtlMs,
-      "ConfigStore.compact (single-writer rename-swap recovery)")
-    try {
+    graft.sources.AtomicStore.withLease(spark,
+        logPath + ".__compact_lease", leaseTtlMs,
+        "ConfigStore.compact (single-writer rename-swap recovery)") {
       recoverCompact(spark, logPath)
       // nothing ever appended (and no crashed swap to recover) -> nothing
       // to fold: a maintenance tick on a never-seeded store is a quiet
       // no-op, not an AnalysisException from reading a nonexistent path
       val live = new Path(logPath)
-      if (!fs.exists(live)) return
-      write(readLatest(spark, logPath), snapshotPath)
-      val tmp = new Path(logPath + ".__compact_tmp")
-      val trash = new Path(logPath + ".__compact_old")
-      fs.delete(tmp, true); fs.delete(trash, true)
-      appendDelta(read(spark, snapshotPath), tmp.toString, batchId = 0L)
-      if (fs.exists(live) && !fs.rename(live, trash))
-        throw new java.io.IOException(s"compact: cannot move $live aside")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(trash, live) // roll back: old log restored intact
-        throw new java.io.IOException(s"compact: cannot publish $tmp")
+      if (fs.exists(live)) {
+        write(readLatest(spark, logPath), snapshotPath)
+        val tmp = new Path(logPath + ".__compact_tmp")
+        val trash = new Path(logPath + ".__compact_old")
+        fs.delete(tmp, true); fs.delete(trash, true)
+        appendDelta(read(spark, snapshotPath), tmp.toString, batchId = 0L)
+        if (fs.exists(live) && !fs.rename(live, trash))
+          throw new java.io.IOException(s"compact: cannot move $live aside")
+        if (!fs.rename(tmp, live)) {
+          fs.rename(trash, live) // roll back: old log restored intact
+          throw new java.io.IOException(s"compact: cannot publish $tmp")
+        }
+        // The trash copy is deliberately NOT deleted here: a reader that
+        // [[readablePath]] routed to the trash path during the swap may
+        // still be mid-scan. It is reclaimed by the NEXT compact's delete
+        // above — the same bounded-grace discipline as AtomicStore.vacuum
+        // (one stale copy on disk; a reader must stay in flight a full
+        // compact cycle to race the reclaim).
       }
-      // The trash copy is deliberately NOT deleted here: a reader that
-      // [[readablePath]] routed to the trash path during the swap may
-      // still be mid-scan. It is reclaimed by the NEXT compact's delete
-      // above — the same bounded-grace discipline as AtomicStore.vacuum
-      // (one stale copy on disk; a reader must stay in flight a full
-      // compact cycle to race the reclaim).
-    } finally graft.sources.AtomicStore.releaseLease(spark, lease)
+    }
   }
 }

@@ -1344,4 +1344,15 @@ object AtomicStore {
       case None => fs.delete(lease, false)
     }
   }
+
+  /** Run `body` holding the lease at `path` ([[claimLease]]; busy is a
+    * `ConcurrentModificationException` naming `what`), released on
+    * every exit.
+    */
+  def withLease[T](spark: SparkSession, path: String, ttlMs: Long,
+                   what: String)(body: => T): T = {
+    val lease = claimLease(spark, path, ttlMs, what)
+    try body
+    finally releaseLease(spark, lease)
+  }
 }

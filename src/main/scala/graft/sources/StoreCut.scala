@@ -2,8 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The STORE-LEVEL MANIFEST shared by the multi-table index stores
-  * (`graft.operators.AnnIndexStore`, `graft.operators.DocIndexStore`) —
+/** The STORE-LEVEL MANIFEST shared by the cut-governed stores
+  * (`graft.operators.AnnIndexStore`, `graft.operators.DocIndexStore`,
+  * `graft.operators.TagFamilyStore`) —
   * the Iceberg snapshot-of-snapshots shape on top of [[AtomicStore]]:
   * one [[AtomicStore.advanceKv]] cut per store root (`<root>/manifest`)
   * pinning every component table's version (plus store-specific scalars
@@ -30,6 +31,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    committed only after their own chain check — so [[extendsPin]]
   *    accepts a fold-replaced chain (row-preserving by construction)
   *    while still refusing a writer's half-published rewrite.
+  *
+  * The protocol steps every store shares live here once, as plain
+  * functions: [[atCut]] (the pinned read with its one vacuum-race
+  * retry), [[awaitChain]] (the chain-gap wait before an append),
+  * [[foldAndAdvance]] / [[fold]] (maintenance folds, snapshot-only
+  * vacuums included) and [[publishAppend]]. The stores keep only what
+  * differs between them: the fold policy, the ANN generation fence, the
+  * doc-index spec guard and the family's orphan accounting.
   *
   * Cost model (the 100 TB argument): resolving a whole cut is one LIST +
   * one open of a metadata file — cheaper than the per-table version
@@ -62,6 +71,21 @@ object StoreCut {
   /** The cut at a pinned version (time travel). */
   def cutAt(spark: SparkSession, root: String, version: Long): Map[String, Long] =
     AtomicStore.readKvAt(spark, manifestRoot(root), version)
+
+  /** Run `read` against the store's current cut (`Map.empty` when the
+    * store has none). A pinned table version vacuumed between the cut
+    * read and the resolve means the store moved on mid-read: the cut is
+    * re-resolved and `read` re-run ONCE ([[readPinned]]'s own fallback
+    * covers a single non-strict table aging out; this covers the whole
+    * cut, strict reads included — their failure's cause chain carries
+    * the race). A second race, or any other failure, propagates.
+    */
+  def atCut[T](spark: SparkSession, root: String)(
+      read: Map[String, Long] => T): T = {
+    def pins = cut(spark, root).getOrElse(Map.empty)
+    try read(pins)
+    catch { case e: Throwable if AtomicStore.isVacuumRace(e) => read(pins) }
+  }
 
   /** Merge `pins` into the cut monotonically (see
     * [[AtomicStore.advanceKv]]). `maxAttempts` bounds the CAS loop for
@@ -143,15 +167,61 @@ object StoreCut {
       } catch { case e: Throwable if AtomicStore.isVacuumRace(e) => true }
     })
 
-  /** [[extendsPin]] against the table's CURRENT version (true when the
-    * cut does not pin `part` — nothing to contradict).
+  /** Retry budget for the transient chain-gap window (a sibling's
+    * commit→advance, a live fold) before [[awaitChain]] declares the gap
+    * a swap — `private[graft]` so the crash-injection specs don't pay the
+    * full ~10 s production backoff to reach the loud path.
     */
-  def chainExtendsCut(spark: SparkSession, root: String, part: String,
-                      pins: Map[String, Long]): Boolean =
-    pins.get(part).forall { pin =>
-      AtomicStore.currentVersion(spark, s"$root/$part")
-        .exists(cur => extendsPin(spark, s"$root/$part", pin, cur))
+  @volatile private[graft] var chainRetryBudget: Int = 12
+
+  /** Resolve the store's cut and require every table in `parts` to have
+    * a CURRENT chain that EXTENDS its pin ([[extendsPin]]) before an
+    * append builds on it — an append on a crashed swap's unpublished
+    * snapshot would have its own cut advance adopt the orphan into the
+    * served cut. Returns the cut pins and each part's current version
+    * (absent = the table has no commits yet), the base the caller's
+    * append resolved against.
+    *
+    * Transient gaps (a sibling's commit→advance window, a live fold)
+    * clear in milliseconds and are retried through with a backoff, up
+    * to [[chainRetryBudget]] times. A gap that outlives the budget while
+    * `leasePath` is held is a LIVE multi-table swap mid-flight
+    * (retryable busy, `ConcurrentModificationException`); with no lease
+    * held it is a CRASHED swap — a loud stop with the re-run remedy.
+    */
+  def awaitChain(spark: SparkSession, root: String, parts: Seq[String],
+                 what: String, leasePath: String)
+      : (Map[String, Long], Map[String, Long]) = {
+    var attempt = 0
+    while (true) {
+      val pins = cut(spark, root).getOrElse(Map.empty)
+      val current = parts.flatMap(p =>
+        AtomicStore.currentVersion(spark, s"$root/$p").map(p -> _)).toMap
+      val gaps = parts.filterNot(p => pins.get(p).forall(pin =>
+        current.get(p).exists(extendsPin(spark, s"$root/$p", pin, _))))
+      if (gaps.isEmpty) return (pins, current)
+      attempt += 1
+      if (attempt > chainRetryBudget) {
+        val tables = gaps.map(p => s"$root/$p").mkString(", ")
+        if (AtomicStore.leaseHeld(spark, leasePath))
+          throw new java.util.ConcurrentModificationException(
+            s"$what: a multi-table swap holding $leasePath is mid-flight " +
+              s"($tables committed ahead of the cut); retry after it " +
+              "publishes its cut")
+        throw new IllegalStateException(
+          s"$what: $tables carry snapshots the store manifest never " +
+            "published and no swap holds its lease — a multi-table swap " +
+            "(a rebuild, a refresh or a maintenance pass) crashed between " +
+            "its table commits and its cut publish. Re-run is the repair: " +
+            "re-run the interrupted operation to completion (every step " +
+            "is idempotent; its cut publish repairs the store) before " +
+            "appending — building on an orphaned snapshot would adopt it " +
+            "into the served cut")
+      }
+      Thread.sleep(math.min(250L * attempt, 1000L))
     }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** The ABSOLUTE vacuum floor for one component table: the OLDEST
     * version any RETAINED cut (the last `lastCuts` manifest versions —

@@ -394,7 +394,7 @@ object AnnStoreScale {
 
     // (2) appends refuse loudly on the crashed state (bounded budget so
     // the gate doesn't pay the full production backoff)
-    AnnIndexStore.chainRetryBudget = 3
+    graft.sources.StoreCut.chainRetryBudget = 3
     val refused =
       try {
         AnnIndexStore.appendVectors(root,
@@ -404,7 +404,7 @@ object AnnStoreScale {
       } catch {
         case e: IllegalStateException
             if e.getMessage.contains("never published") => true
-      } finally AnnIndexStore.chainRetryBudget = 12
+      } finally graft.sources.StoreCut.chainRetryBudget = 12
 
     // (3) re-run to completion repairs
     val tR = System.nanoTime()

@@ -596,6 +596,42 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(stamps("assigned") === Set(3L))
   }
 
+  test("a manifest-less store loads every table at current, stamped rows fenced by the params generation") {
+    // a store written table by table before the manifest existed: no
+    // cut, so load reads each component at its current version and the
+    // fence compares stamps against the params row's generation
+    import spark.implicits._
+    val store = graft.sources.AtomicStore
+    val root = java.nio.file.Files.createTempDirectory("graft_annidx_nocut")
+      .toString
+    val base = sComponents(sEmb((0L until 6L).toSeq))
+    store.commitSnapshot(base.centroids, s"$root/centroids")
+    store.commitSnapshot(base.assigned, s"$root/assigned")
+    store.commitSnapshot(base.assignedMulti, s"$root/assigned_multi")
+    store.commitSnapshot(base.codes, s"$root/codes")
+    store.commitSnapshot(base.sigs, s"$root/sigs")
+    store.commitSnapshot(Seq((2, 2, 2L)).toDF("nprobe", "num_sub",
+      "model_version"), s"$root/params")
+    // one batch stamped with the params generation, one stale straggler
+    def stampedBatch(id: Long, gen: Long) =
+      Similarity.ivfAssign(sEmb(Seq(id)), sCents)
+        .select("vec_id", "centroid_id")
+        .withColumn("model_version", lit(gen))
+    store.commitAppend(stampedBatch(100L, 2L), s"$root/assigned")
+    store.commitAppend(stampedBatch(101L, 1L), s"$root/assigned")
+    assert(graft.sources.StoreCut.cut(spark, root).isEmpty)
+
+    val loaded = AnnIndexStore.load(spark, root)
+    assert(loaded.assigned.columns.toSeq === Seq("vec_id", "centroid_id"))
+    assert(loaded.assigned.select("vec_id").as[Long].collect().toSet ===
+      ((0L until 6L).toSet + 100L))
+    assert(setOf(loaded.centroids) === setOf(base.centroids))
+    assert(setOf(loaded.sigs) === setOf(base.sigs))
+    assert(AnnIndexStore.currentModelVersion(spark, root) === 2L)
+    assert(graft.sources.StoreCut.cut(spark, root).isEmpty,
+      "a load must not publish a cut")
+  }
+
   test("a bare write() on a model-ful store is refused — refreshIndex is the swap") {
     // rewriting centroids without bumping the generation leaves
     // previously appended rows stamped with the STILL-CURRENT generation
@@ -750,11 +786,11 @@ class AnnIndexStoreSpec extends SparkSpec {
     // the crash released it — so the orphan snapshots read as a crashed
     // swap, with the re-run remedy in the message), instead of silently
     // adopting the orphans into the served cut
-    AnnIndexStore.chainRetryBudget = 2
+    graft.sources.StoreCut.chainRetryBudget = 2
     val e =
       try intercept[IllegalStateException] {
         AnnIndexStore.appendVectors(root, sEmb(Seq(60L)))
-      } finally AnnIndexStore.chainRetryBudget = 12
+      } finally graft.sources.StoreCut.chainRetryBudget = 12
     assert(e.getMessage.contains("Re-run"), e.getMessage)
 
     // the remedy: re-run the refresh to completion — its cut adopts its
@@ -965,10 +1001,10 @@ class AnnIndexStoreSpec extends SparkSpec {
           case 0 => // ingest wave — refused while a crashed swap stands
             val ids = fresh(1 + rnd.nextInt(3))
             if (crashPending) {
-              AnnIndexStore.chainRetryBudget = 1
+              graft.sources.StoreCut.chainRetryBudget = 1
               try intercept[IllegalStateException] {
                 AnnIndexStore.appendVectors(root, sEmb(ids))
-              } finally AnnIndexStore.chainRetryBudget = 12
+              } finally graft.sources.StoreCut.chainRetryBudget = 12
               repair()
             }
             AnnIndexStore.appendVectors(root, sEmb(ids))

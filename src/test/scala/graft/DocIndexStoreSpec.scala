@@ -455,11 +455,11 @@ class DocIndexStoreSpec extends SparkSpec {
 
     // appends refuse loudly with the re-run remedy — building on the
     // orphan snapshots would adopt them into the served cut
-    DocIndexStore.chainRetryBudget = 2
+    graft.sources.StoreCut.chainRetryBudget = 2
     val e =
       try intercept[IllegalStateException] {
         DocIndexStore.appendSimhash(root, sim(Seq(11L)), sigSpec = "specA")
-      } finally DocIndexStore.chainRetryBudget = 12
+      } finally graft.sources.StoreCut.chainRetryBudget = 12
     assert(e.getMessage.contains("re-run the interrupted operation"),
       e.getMessage)
 
@@ -517,6 +517,38 @@ class DocIndexStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("aged out"), e.getMessage)
     assert(DocIndexStore.load(spark, root).simhash
       .select("doc_id").as[Long].collect().toSet === Set(50L))
+  }
+
+  test("an append tells a live rebuild (lease held: busy) from a crashed one (re-run)") {
+    import spark.implicits._
+    val store = graft.sources.AtomicStore
+    val root = java.nio.file.Files.createTempDirectory("graft_docidx_live")
+      .toString
+    def sim(ids: Seq[Long]) =
+      ids.map(id => (id, id * 7L)).toDF("doc_id", "simhash")
+    val mh = Seq((0L, 0L, 1L, 0L, 0L)).toDF(
+      "doc_id", "mh_0", "mh_1", "band_0", "band_1")
+    DocIndexStore.write(root, DocIndexStore.Components(sim(Seq(0L, 1L)), mh))
+    // a rebuild holding the write lease has committed its simhash
+    // snapshot and not yet published its cut
+    val lease = store.claimLease(spark, s"$root/_write_lease",
+      store.DefaultLeaseTtlMs, "live rebuild")
+    store.commitSnapshot(sim(Seq(100L)), s"$root/simhash")
+    graft.sources.StoreCut.chainRetryBudget = 1
+    try {
+      try intercept[java.util.ConcurrentModificationException] {
+        DocIndexStore.appendSimhash(root, sim(Seq(2L)))
+      } finally store.releaseLease(spark, lease)
+      // the holder is gone and the gap stays: a crashed rebuild
+      val e = intercept[IllegalStateException] {
+        DocIndexStore.appendSimhash(root, sim(Seq(2L)))
+      }
+      assert(e.getMessage.contains("re-run the interrupted operation"),
+        e.getMessage)
+    } finally graft.sources.StoreCut.chainRetryBudget = 12
+    // neither refusal landed a row: the served cut is the original store
+    assert(DocIndexStore.load(spark, root).simhash.select("doc_id")
+      .as[Long].collect().toSet === Set(0L, 1L))
   }
 
   test("write is lease-serialized: concurrent rebuilds cannot interleave into a mixed cut") {

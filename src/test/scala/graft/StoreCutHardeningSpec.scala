@@ -61,6 +61,49 @@ class StoreCutHardeningSpec extends SparkSpec {
     assert(AtomicStore.currentVersion(spark, table).contains(v2 + 1))
   }
 
+  test("atCut: no manifest reads Map.empty; a vacuum race re-runs once at a fresh cut; a second race or any other failure propagates") {
+    val root = freshRoot("cut_atcut")
+    assert(StoreCut.atCut(spark, root)(identity) === Map.empty)
+    val v0 = AtomicStore.commitSnapshot(rows(0, 3), s"$root/t")
+    StoreCut.advance(spark, root, Map("t" -> v0))
+
+    // the first read races a vacuum while the store moves on: exactly
+    // one re-run, against the freshly resolved cut
+    var seen = Vector.empty[Map[String, Long]]
+    var v1 = -1L
+    val got = StoreCut.atCut(spark, root) { pins =>
+      seen :+= pins
+      if (seen.size == 1) {
+        v1 = AtomicStore.commitSnapshot(rows(3, 6), s"$root/t")
+        StoreCut.advance(spark, root, Map("t" -> v1))
+        throw new java.io.FileNotFoundException("vacuumed mid-read")
+      }
+      pins("t")
+    }
+    assert(got === v1)
+    assert(seen === Vector(Map("t" -> v0), Map("t" -> v1)))
+
+    // a second race propagates
+    var calls = 0
+    intercept[java.io.FileNotFoundException] {
+      StoreCut.atCut(spark, root) { _ =>
+        calls += 1
+        throw new java.io.FileNotFoundException("vacuumed again")
+      }
+    }
+    assert(calls === 2)
+
+    // a non-race failure propagates without a re-run
+    calls = 0
+    intercept[IllegalArgumentException] {
+      StoreCut.atCut(spark, root) { _ =>
+        calls += 1
+        throw new IllegalArgumentException("not a vacuum race")
+      }
+    }
+    assert(calls === 1)
+  }
+
   test("bare AtomicStore.compact on a cut-governed table refuses with the foldAndAdvance remedy") {
     val root = freshRoot("cut_governed")
     val table = s"$root/t"

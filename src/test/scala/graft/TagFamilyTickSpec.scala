@@ -245,7 +245,7 @@ class TagFamilyTickSpec extends SparkSpec {
     assert(fam.tags.count() === 3L)
   }
 
-  test("runTick == the per-config runJobs evaluation, committed under one cut") {
+  test("runTick lands every due config's evaluated rows and history under one cut") {
     Lake.registerAll(spark, sf)
     val catalog = Lake.tableNames.map(t => ("p", "lake", t))
       .toDF("project", "dataset", "table")
