@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Coerce
+import graft.sources.AtomicStore
 
 /** History / report sinks (SURVEY.md §2 A11–A13).
   *
@@ -11,9 +12,9 @@ import graft.functions.Coerce
   * sink is [[withHistoryPartition]]'s UTC `event_date` day column plus the
   * history part of the tag-family store ([[TagFamilyStore]]), appended
   * under the same cut as the job's tags. Reports have the same family
-  * append and, for `write_option` truncate, the standalone
-  * [[writeReport]]: a plain partitioned parquet write whose
-  * `partitionBy(<day>)` buys partition pruning on every downstream read.
+  * append and the standalone [[writeReport]], an [[AtomicStore]] table
+  * (append, or a truncating snapshot). Both carry the `export_date` day
+  * column; readers prune on it through parquet statistics.
   */
 object Sinks {
 
@@ -77,15 +78,17 @@ object Sinks {
     rows.withColumn("export_date", utcDay(col("export_time")))
 
   /** Report write: `write_option` truncate vs append
-    * (BigQueryUtils.py:35–50) → overwrite vs append mode, day-partitioned.
+    * (BigQueryUtils.py:35–50) → an [[AtomicStore]] snapshot vs append
+    * commit. BigQuery WRITE_TRUNCATE replaces the WHOLE table, which a
+    * snapshot commit does without ever deleting the previous copy before
+    * the new one is published; the vacuum keeps one previous version for
+    * in-flight readers (as [[graft.sched.ConfigStore.write]] does).
     */
-  def writeReport(rows: DataFrame, path: String, truncate: Boolean): Unit =
-    withReportPartition(rows)
-      .write.mode(if (truncate) "overwrite" else "append")
-      // BigQuery WRITE_TRUNCATE replaces the WHOLE table: pin static
-      // overwrite on this writer, or a session configured with dynamic
-      // partition-overwrite would keep any partition absent from this
-      // batch — a "truncated" report silently serving stale days
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("export_date").parquet(path)
+  def writeReport(rows: DataFrame, path: String, truncate: Boolean): Unit = {
+    val out = withReportPartition(rows)
+    if (truncate) {
+      AtomicStore.commitSnapshot(out, path)
+      AtomicStore.vacuum(rows.sparkSession, path, keepVersions = 2)
+    } else AtomicStore.commitAppend(out, path)
+  }
 }

@@ -100,20 +100,19 @@ object ConfigStore {
       coalesce(col("config_status") =!= "INACTIVE", lit(true)))
   }
 
-  /** Persist / recover the store as a full SNAPSHOT (the compaction form —
-    * see [[appendDelta]] for the incremental path; this snapshot is what
-    * [[compact]] periodically folds the delta log back into). Snapshots
-    * go through [[graft.sources.AtomicStore]]'s manifest commit — a
-    * plain `mode("overwrite")` deletes the old files BEFORE the new ones
-    * land, so a crashed writer destroys the only copy of the store; the
+  /** Persist / recover the store as a full SNAPSHOT (see [[appendDelta]]
+    * for the incremental path). Snapshots go through
+    * [[graft.sources.AtomicStore]]'s manifest commit — a plain
+    * `mode("overwrite")` deletes the old files BEFORE the new ones land,
+    * so a crashed writer destroys the only copy of the store; the
     * commit-log swap never exposes a partial state.
     */
   def write(store: DataFrame, path: String): Unit = {
     graft.sources.AtomicStore.commitSnapshot(store, path)
-    // bound long-run growth: a periodic compact loop calls this every
-    // cycle, and each snapshot is a full copy of the store — retain the
-    // previous version for in-flight readers, vacuum the rest (the grace
-    // window protects concurrent not-yet-published commits)
+    // bound long-run growth: a caller may snapshot every cycle, and each
+    // snapshot is a full copy of the store — retain the previous version
+    // for in-flight readers, vacuum the rest (the grace window protects
+    // concurrent not-yet-published commits)
     graft.sources.AtomicStore.vacuum(store.sparkSession, path,
       keepVersions = 2)
   }
@@ -130,124 +129,57 @@ object ConfigStore {
     * not the table — a whole-table overwrite rewrites the full state per
     * job, which at 100 TB of tag state is the write amplification that
     * kills the job cadence. On a real lake the identical contract is a
-    * Delta/Iceberg `MERGE INTO` (the log here is exactly a manual delta
-    * log); [[compact]] is the checkpoint analogue. Deletes are full-schema
-    * TOMBSTONE rows (`config_status = 'DELETED'`, [[tombstone]]), so the
-    * log keeps ONE schema and the reference's hard-delete
-    * (TagEngineStoreHandler.py delete path) becomes latest-wins filtering.
+    * Delta/Iceberg `MERGE INTO`; here the log is an
+    * [[graft.sources.AtomicStore]] table and [[compact]] is the checkpoint
+    * analogue. Deletes are full-schema TOMBSTONE rows
+    * (`config_status = 'DELETED'`, [[tombstone]]), so the log keeps ONE
+    * schema and the reference's hard-delete (TagEngineStoreHandler.py
+    * delete path) becomes latest-wins filtering.
+    *
+    * A blind [[graft.sources.AtomicStore.commitAppend]]: a delta never
+    * derives from the log's state, so a lost publish race just
+    * republishes the same batch; a crashed append is never published and
+    * stays invisible.
     */
   def appendDelta(delta: DataFrame, path: String, batchId: Long): Unit =
-    delta.withColumn("__batch", lit(batchId))
-      .write.mode("append").parquet(path)
+    graft.sources.AtomicStore.commitAppend(
+      delta.withColumn("__batch", lit(batchId)), path)
 
   /** Tombstone rows for a config — appended, never rewritten. */
   def tombstone(current: DataFrame, configUuid: String): DataFrame =
     current.filter(col("config_uuid") === configUuid)
       .withColumn("config_status", lit("DELETED"))
 
-  /** Latest-wins compaction view: newest batch (ties: highest version) per
-    * config_uuid; tombstones dropped. One window over the log — and the
-    * log is the store's CHANGE VOLUME, periodically folded into a snapshot
-    * by [[compact]], so the window never scans unbounded history.
+  /** Latest-wins view of a log: newest batch (ties: highest version) per
+    * config_uuid; tombstones dropped. Keeps `__batch`, so a [[compact]]
+    * fold of this view still loses to any later append.
     */
-  def readLatest(spark: SparkSession, path: String): DataFrame = {
+  private def latest(log: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("config_uuid")
       .orderBy(col("__batch").desc, col("version").desc)
-    spark.read.parquet(readablePath(spark, path))
-      .withColumn("__rn", row_number().over(w))
+    log.withColumn("__rn", row_number().over(w))
       // null-safe tombstone test: a NULL config_status is NOT a delete —
       // same rule as purge()'s keep side
       .filter(col("__rn") === 1 &&
         coalesce(col("config_status") =!= "DELETED", lit(true)))
-      .drop("__rn", "__batch")
+      .drop("__rn")
   }
 
-  /** If a previous [[compact]] crashed between its two renames (live
-    * moved to trash, temp not yet promoted), promote the intact trash
-    * copy back to the live path. WRITE-side recovery only — called at
-    * [[compact]] start (compaction is single-writer by contract); a
-    * READER that renamed could race an in-flight compact and move the
-    * trash copy INTO the freshly promoted live dir, so [[readLatest]]
-    * instead just READS the trash path when the live one is missing.
+  /** The current configs: [[latest]] over the published log. One window
+    * over the log — and the log is the store's CHANGE VOLUME,
+    * periodically folded by [[compact]], so the window never scans
+    * unbounded history.
     */
-  private def recoverCompact(spark: SparkSession, logPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(logPath)
-    val trash = new Path(logPath + ".__compact_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(trash)) fs.rename(trash, live)
-  }
+  def readLatest(spark: SparkSession, path: String): DataFrame =
+    latest(graft.sources.AtomicStore.read(spark, path)).drop("__batch")
 
-  /** The path [[readLatest]] should read: the live log, or — mid-crash /
-    * mid-swap — the intact trash copy. Pure read-side resolution, no
-    * mutation (see [[recoverCompact]] for why readers must not rename).
+  /** Fold the log into one latest-wins snapshot (checkpoint) through
+    * [[graft.sources.AtomicStore.compact]]: a CAS commit, so an append
+    * racing the fold makes it re-read and re-fold instead of being lost,
+    * and superseded batches are vacuumed past the grace window. A
+    * never-appended log is a quiet no-op.
     */
-  private def readablePath(spark: SparkSession, logPath: String): String = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(logPath)
-    val trash = new Path(logPath + ".__compact_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(trash)) trash.toString else logPath
-  }
-
-  // the exclusive compaction lease lives at `logPath.__compact_lease` —
-  // claimed through the shared AtomicStore CAS primitive (fail-if-exists
-  // create; a crashed holder's lease is TTL-broken; a live one throws
-  // ConcurrentModificationException)
-
-  /** Fold the delta log into a fresh snapshot + empty log (checkpoint):
-    * after compaction the log restarts from the snapshot as batch 0.
-    *
-    * Atomicity: the re-seeded batch-0 log is fully WRITTEN to a sibling
-    * temp dir first, then swapped in with two filesystem renames (old →
-    * trash, temp → live) — a crash anywhere leaves a complete copy of
-    * the log on disk, and the brief live-path gap between the renames
-    * self-heals: [[recoverCompact]] promotes the trash copy back when a
-    * crash (or an unluckily timed reader) finds the live path missing.
-    * The pre-fix delete-then-rewrite instead destroyed the only copy.
-    *
-    * Single-writer ENFORCED, not assumed: the rename-swap recovery is
-    * only safe with one compactor (two concurrent swaps can promote a
-    * stale trash copy over the winner's fresh log), so the whole fold
-    * runs under a CAS-claimed lease ([[claimLease]]) — a second
-    * concurrent compactor fails loudly instead of corrupting recovery; a
-    * crashed holder's lease is broken after `leaseTtlMs`.
-    */
-  def compact(spark: SparkSession, logPath: String,
-              snapshotPath: String,
-              leaseTtlMs: Long =
-                graft.sources.AtomicStore.DefaultLeaseTtlMs): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(logPath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    graft.sources.AtomicStore.withLease(spark,
-        logPath + ".__compact_lease", leaseTtlMs,
-        "ConfigStore.compact (single-writer rename-swap recovery)") {
-      recoverCompact(spark, logPath)
-      // nothing ever appended (and no crashed swap to recover) -> nothing
-      // to fold: a maintenance tick on a never-seeded store is a quiet
-      // no-op, not an AnalysisException from reading a nonexistent path
-      val live = new Path(logPath)
-      if (fs.exists(live)) {
-        write(readLatest(spark, logPath), snapshotPath)
-        val tmp = new Path(logPath + ".__compact_tmp")
-        val trash = new Path(logPath + ".__compact_old")
-        fs.delete(tmp, true); fs.delete(trash, true)
-        appendDelta(read(spark, snapshotPath), tmp.toString, batchId = 0L)
-        if (fs.exists(live) && !fs.rename(live, trash))
-          throw new java.io.IOException(s"compact: cannot move $live aside")
-        if (!fs.rename(tmp, live)) {
-          fs.rename(trash, live) // roll back: old log restored intact
-          throw new java.io.IOException(s"compact: cannot publish $tmp")
-        }
-        // The trash copy is deliberately NOT deleted here: a reader that
-        // [[readablePath]] routed to the trash path during the swap may
-        // still be mid-scan. It is reclaimed by the NEXT compact's delete
-        // above — the same bounded-grace discipline as AtomicStore.vacuum
-        // (one stale copy on disk; a reader must stay in flight a full
-        // compact cycle to race the reclaim).
-      }
-    }
-  }
+  def compact(spark: SparkSession, logPath: String): Unit =
+    graft.sources.AtomicStore.compact(spark, logPath, reduce = latest)
 }

@@ -419,10 +419,10 @@ object AtomicStore {
   /** Commit `df` as the ENTIRE next table state. Retry-on-conflict bumps
     * the version and republishes the SAME snapshot — last-writer-wins,
     * correct ONLY when `df` does not derive from the current table state
-    * (a from-scratch snapshot, e.g. [[graft.sched.ConfigStore.write]]'s
-    * compaction fold of its own log). State that IS derived from a read
-    * of the table (a MERGE) must use [[commitSnapshotIfUnchanged]] and
-    * recompute on conflict, or the retry silently drops the racing
+    * (a from-scratch snapshot, e.g. a truncating
+    * [[graft.operators.Sinks.writeReport]]). State that IS derived from a
+    * read of the table (a MERGE) must use [[commitSnapshotIfUnchanged]]
+    * and recompute on conflict, or the retry silently drops the racing
     * winner's changes.
     */
   def commitSnapshot(df: DataFrame, root: String): Long =
@@ -467,9 +467,9 @@ object AtomicStore {
 
   /** Reclaim a known-unpublished loser batch dir immediately (no grace
     * window needed — the manifest never referenced it). Shared by the CAS
-    * commit paths here and TagStore's merge loop, so every lost race
-    * frees its materialized batch instead of leaving full-size orphans
-    * for a vacuum that may never be scheduled. Best-effort: a failed
+    * commit paths here and the family store's tick commit, so every lost
+    * race frees its materialized batch instead of leaving full-size
+    * orphans for a vacuum that may never be scheduled. Best-effort: a failed
     * delete leaves an orphan for vacuum, never fails the caller.
     */
   private[graft] def reclaimData(spark: SparkSession, root: String,
@@ -526,8 +526,8 @@ object AtomicStore {
     * from task failure, AnalysisException from spark.read on a vanished
     * path), so the whole cause chain is walked and the path-not-found
     * AnalysisException class is matched by message. Owned here because
-    * vacuum is what creates the race; TagStore's log folds and [[compact]]
-    * share it.
+    * vacuum is what creates the race; [[compact]] and the store-cut
+    * readers share it.
     */
   private[graft] def isVacuumRace(e: Throwable): Boolean = {
     var c: Throwable = e
@@ -563,11 +563,14 @@ object AtomicStore {
     * (file sizes re-binned by the scan's `maxPartitionBytes` packing), so
     * post-compaction probe cost is flat in wave count.
     *
-    * Correct for any store whose visible state IS its row multiset (the
-    * append-only stores above): the fold preserves rows exactly. Stores
-    * with REDUCIBLE log semantics have their own folds that also shrink
-    * the state (`TagFamilyStore.compact`, `ConfigStore.compact`); this is
-    * the row-preserving primitive underneath.
+    * With the default `reduce = identity` the fold preserves rows exactly
+    * — correct for any store whose visible state IS its row multiset (the
+    * append-only stores above). A log with REDUCIBLE semantics passes its
+    * read view as `reduce`, applied to the folded state before the CAS
+    * commit: [[graft.sched.ConfigStore.compact]] folds its config log to
+    * the latest-wins view (keeping each row's batch stamp, so later
+    * appends still win). The tag-family store folds through its own cut
+    * protocol (`StoreCut.TruncateToPin`), not through this call.
     *
     * Concurrency: the fold DERIVES from a read of the store, so it
     * commits via CAS ([[commitSnapshotIfUnchanged]]) — a racing appender
@@ -601,7 +604,8 @@ object AtomicStore {
               graceMs: Long = 15 * 60 * 1000L,
               maxAttempts: Int = 8,
               keepFloor: Option[Long] = None,
-              chainCheck: Option[Long => Boolean] = None): Option[Long] = {
+              chainCheck: Option[Long => Boolean] = None,
+              reduce: DataFrame => DataFrame = identity): Option[Long] = {
     if (chainCheck.isEmpty) requireNotCutGoverned(spark, root)
     // vacuum is best-effort on EVERY exit: a fold that committed must
     // never be reported as a failure because reclamation hiccuped (an
@@ -641,9 +645,10 @@ object AtomicStore {
             // lack — a sampled-file schema would silently DROP them from
             // the whole store (readDirs falls back to the stock mergeSchema
             // read whenever the per-dir schemas differ)
-            val state = readDirs(spark, files)
-            // fold-marked (FoldPrefix): the snapshot preserves the row
-            // set of the chain it folds. Tables governed by a store cut
+            val state = reduce(readDirs(spark, files))
+            // fold-marked (FoldPrefix): the snapshot preserves the
+            // served view of the chain it folds (its rows, or their
+            // `reduce`d read view). Tables governed by a store cut
             // must reach this through their store's compact /
             // fold-and-advance (which verify the chain extends the cut
             // first) — the mark attests that verification.
@@ -1137,8 +1142,8 @@ object AtomicStore {
     * younger than its holder's TTL throws
     * ConcurrentModificationException; a crashed holder's lease is broken
     * once older. Shared by maintenance operations whose safety argument
-    * is single-writer (ConfigStore.compact's rename-swap recovery,
-    * AnnIndexStore.refreshIndex's multi-table model swap) — enforcing
+    * is single-writer (AnnIndexStore.refreshIndex's multi-table model
+    * swap, the doc-index rebuild, the tag-family job commit) — enforcing
     * the contract instead of assuming it. Release with [[releaseLease]]
     * in a finally.
     *

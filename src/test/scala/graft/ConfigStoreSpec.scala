@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sched.ConfigStore
+import graft.sources.AtomicStore
 
 /** A14 store CRUD: md5 identity, supersede, delete/purge, persistence. */
 class ConfigStoreSpec extends SparkSpec {
@@ -63,12 +64,13 @@ class ConfigStoreSpec extends SparkSpec {
 
   test("append-log: deltas append (existing files untouched), latest wins") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cfg_log").toString
+    // every batch's parquet files, under the log's data/<batch dir>/
     def files: Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(s => s.getPath.getName -> ((s.getLen, s.getModificationTime)))
+      fs.globStatus(new org.apache.hadoop.fs.Path(dir, "data/*/*.parquet"))
+        .map(s => s"${s.getPath.getParent.getName}/${s.getPath.getName}" ->
+          ((s.getLen, s.getModificationTime)))
         .toMap
     }
     ConfigStore.appendDelta(store, dir, batchId = 0L)
@@ -90,14 +92,15 @@ class ConfigStoreSpec extends SparkSpec {
       .as[(String, String, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
     assert(latest === Map("c1" -> (("u1b", 2L)), "c3" -> (("u3", 1L))))
-    // compact folds the log into a snapshot + batch-0 log, same view
-    val snap = java.nio.file.Files.createTempDirectory("graft_cfg_snap").toString
-    ConfigStore.compact(spark, dir, snap)
+    // compact folds the log into one latest-wins snapshot, same view
+    ConfigStore.compact(spark, dir)
     val compacted = ConfigStore.readLatest(spark, dir)
       .select("config_uuid", "included_uris", "version")
       .as[(String, String, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
       .toMap
     assert(compacted === latest)
+    // the fold kept only the latest-wins rows
+    assert(AtomicStore.read(spark, dir).count() === latest.size)
   }
 
   test("readLatest: a NULL config_status row is not a tombstone") {
@@ -112,102 +115,76 @@ class ConfigStoreSpec extends SparkSpec {
       .select("config_uuid").as[String].collect().toSeq === Seq("c1"))
   }
 
-  test("compact: the live log is never empty mid-fold (rename swap)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_atomic").toString
-    val snap = java.nio.file.Files.createTempDirectory("graft_cfg_asnap").toString
+  private def view(dir: String): Map[String, (String, Long)] =
+    ConfigStore.readLatest(spark, dir)
+      .select("config_uuid", "included_uris", "version")
+      .as[(String, String, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
+      .toMap
+
+  // the number of data dirs the log's current manifest lists
+  private def batchDirs(dir: String): Int =
+    AtomicStore.filesAt(spark, dir,
+      AtomicStore.currentVersion(spark, dir).get).size
+
+  test("an append racing a compact is never lost") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_rac").toString
     ConfigStore.appendDelta(store, dir, batchId = 0L)
-    // Crash-injection: make the publish rename fail by pre-seeding the
-    // temp path as an unrenameable target is filesystem-dependent, so
-    // instead pin the OBSERVABLE contract — after a compact the live dir
-    // exists with a complete batch-0 log and the temp sibling is gone.
-    // The trash copy DELIBERATELY survives as the reader grace copy (a
-    // reader readablePath routed to it during the swap may still be
-    // mid-scan); the NEXT compact reclaims it.
-    ConfigStore.compact(spark, dir, snap)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__compact_tmp")))
-    // grace copy on disk, but the LIVE path wins resolution
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    // second compact: reclaims the previous grace copy, leaves its own
-    val snap2 = java.nio.file.Files.createTempDirectory("graft_cfg_asnap2").toString
-    ConfigStore.compact(spark, dir, snap2)
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
+    ConfigStore.appendDelta(
+      mk(Seq(("c1", "DYNAMIC_TAG_TABLE", "gov", "u1b", "ACTIVE", 2L))),
+      dir, batchId = 1L)
+    val before = view(dir)
+    assert(before === Map("c1" -> (("u1b", 2L)), "c2" -> (("u2", 1L))))
+    val c4 = mk(Seq(("c4", "STATIC_TAG_ASSET", "ops", "u4", "ACTIVE", 1L)))
+    // the append lands after the fold read the log and before it
+    // publishes: the fold's CAS must lose, re-read and re-fold
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    AtomicStore.testPrePublishHook = () =>
+      if (fired.compareAndSet(false, true))
+        ConfigStore.appendDelta(c4, dir, batchId = 2L)
+    try ConfigStore.compact(spark, dir)
+    finally AtomicStore.testPrePublishHook = () => ()
+    assert(fired.get)
+    assert(view(dir) === before + ("c4" -> (("u4", 1L))))
+    // the re-fold took the racing batch in: one snapshot dir
+    assert(batchDirs(dir) === 1)
+    // folded rows keep their batch stamp: a later append still wins
+    ConfigStore.appendDelta(
+      mk(Seq(("c4", "STATIC_TAG_ASSET", "ops", "u4b", "ACTIVE", 1L))),
+      dir, batchId = 3L)
+    assert(view(dir)("c4") === (("u4b", 1L)))
   }
 
-  test("compact crash between renames self-heals on the next read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_heal").toString
+  test("a crashed append is invisible") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_crash").toString
     ConfigStore.appendDelta(store, dir, batchId = 0L)
-    // simulate the crash state: live moved aside, replacement never
-    // promoted — the log survives only at <dir>.__compact_old
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".__compact_old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    // a READER serves from the trash copy without renaming (a reader
-    // rename could race an in-flight compact's own promote)
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    // the next WRITE-side compact promotes the copy back and proceeds
-    // (leaving its OWN aside copy as the reader grace copy — the live
-    // path wins resolution)
-    val snap = java.nio.file.Files.createTempDirectory("graft_cfg_hsnap").toString
-    ConfigStore.compact(spark, dir, snap)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-  }
-
-  test("compact: a held lease makes a second compactor fail loudly, store intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_lease").toString
-    ConfigStore.appendDelta(store, dir, batchId = 0L)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val lease = new org.apache.hadoop.fs.Path(dir + ".__compact_lease")
-    fs.create(lease, false).close() // a live concurrent compactor
-    val snap = java.nio.file.Files.createTempDirectory("graft_cfg_lsnap").toString
-    intercept[java.util.ConcurrentModificationException] {
-      ConfigStore.compact(spark, dir, snap)
-    }
-    // the loser touched nothing: log intact, no half-swap residue
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__compact_tmp")))
-    // holder releases → the next compact proceeds and releases its own
-    fs.delete(lease, false)
-    ConfigStore.compact(spark, dir, snap)
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    assert(!fs.exists(lease), "winner must release the lease")
-  }
-
-  test("compact: a crashed holder's stale lease is broken after TTL") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_ttl").toString
-    ConfigStore.appendDelta(store, dir, batchId = 0L)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val lease = new org.apache.hadoop.fs.Path(dir + ".__compact_lease")
-    fs.create(lease, false).close()
-    fs.setTimes(lease, System.currentTimeMillis() - 60000L, -1L)
-    val snap = java.nio.file.Files.createTempDirectory("graft_cfg_tsnap").toString
-    // TTL 1s: the minute-old lease is a crash residue, not a holder
-    ConfigStore.compact(spark, dir, snap, leaseTtlMs = 1000L)
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    assert(!fs.exists(lease))
+    ConfigStore.appendDelta(
+      mk(Seq(("c3", "DYNAMIC_TAG_COLUMN", "prof", "u3", "ACTIVE", 1L))),
+      dir, batchId = 1L)
+    val before = view(dir)
+    // a writer that died after writing its batch and before publishing it
+    AtomicStore.writeData(
+      mk(Seq(("c9", "STATIC_TAG_ASSET", "ops", "u9", "ACTIVE", 1L)))
+        .withColumn("__batch", lit(2L)), dir)
+    assert(view(dir) === before)
+    // and the fold reads the published log only
+    ConfigStore.compact(spark, dir)
+    assert(batchDirs(dir) === 1)
+    assert(view(dir) === before)
   }
 
   test("racing compactors: any overlap loses loudly, store intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cfg_race").toString
     ConfigStore.appendDelta(store, dir, batchId = 0L)
-    val snaps = Seq(
-      java.nio.file.Files.createTempDirectory("graft_cfg_rsnap1").toString,
-      java.nio.file.Files.createTempDirectory("graft_cfg_rsnap2").toString)
+    ConfigStore.appendDelta(
+      mk(Seq(("c3", "DYNAMIC_TAG_COLUMN", "prof", "u3", "ACTIVE", 1L))),
+      dir, batchId = 1L)
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val outcomes =
       new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Unit]]()
-    val threads = snaps.map { snap =>
+    val threads = Seq.fill(2) {
       new Thread(() => {
         barrier.await()
-        try { ConfigStore.compact(spark, dir, snap); outcomes.add(Right(())) }
+        try { ConfigStore.compact(spark, dir); outcomes.add(Right(())) }
         catch { case t: Throwable => outcomes.add(Left(t)) }
       })
     }
@@ -216,18 +193,18 @@ class ConfigStoreSpec extends SparkSpec {
     val results = scala.jdk.CollectionConverters
       .CollectionHasAsScala(outcomes).asScala.toSeq
     assert(results.size === 2)
-    val losers = results.collect { case Left(t) => t }
-    // the ONLY legal failure is the lease conflict — never a swap error
-    // or corrupted-log read; serialized runs (both win) are legal too
-    losers.foreach(t => assert(
-      t.isInstanceOf[java.util.ConcurrentModificationException],
-      s"unexpected failure class: $t"))
-    assert(results.count(_.isRight) >= 1, "at least one compactor must win")
-    // the store survived the race intact, and no lease is left behind
-    assert(ConfigStore.readLatest(spark, dir).count() === 2)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__compact_lease")))
+    // the fold's CAS serializes the compactors: neither throws
+    results.collect { case Left(t) => t }.foreach(t =>
+      fail(s"a racing compactor threw: $t"))
+    assert(ConfigStore.readLatest(spark, dir).count() === 3)
+    // no side paths next to the log
+    val parent = new java.io.File(dir).getParentFile
+    val name = new java.io.File(dir).getName
+    assert(parent.list().filter(_.startsWith(name + ".__compact_")).isEmpty)
+    // a maintenance tick on a never-appended log is a quiet no-op
+    val empty = java.nio.file.Files.createTempDirectory("graft_cfg_none").toString
+    ConfigStore.compact(spark, empty)
+    assert(AtomicStore.currentVersion(spark, empty).isEmpty)
   }
 
   test("write/read round-trips the store as a lake table") {

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Sinks
+import graft.sources.AtomicStore
 
-/** A12: the day-partitioned report sink — append vs truncate modes. */
+/** A12: the report sink — append vs truncate commits. */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,9 +17,9 @@ class SinksSpec extends SparkSpec {
       to_timestamp(lit("2024-02-01 00:00:00")))
     Sinks.writeReport(rep("v1"), dir, truncate = false)
     Sinks.writeReport(rep("v2"), dir, truncate = false)
-    assert(spark.read.parquet(dir).count() === 2)
+    assert(AtomicStore.read(spark, dir).count() === 2)
     Sinks.writeReport(rep("v3"), dir, truncate = true)
-    assert(spark.read.parquet(dir).select("tag_value").as[String].collect()
+    assert(AtomicStore.read(spark, dir).select("tag_value").as[String].collect()
       .toSeq === Seq("v3"))
   }
 }
