@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.obs.{Signals, SparkWork}
 
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, ONE JSON line on stdout.
@@ -28,9 +29,20 @@ import org.apache.spark.sql.SparkSession
   * now declares itself instead of waiting to be adjudicated.
   *
   * A query that throws is a FAILURE, never a sample: it is listed under
-  * `"failed"` in the contract line and both side files, and only its
+  * `"failed"` in the contract line and the side files, and only its
   * successful runs (if any) are timed — a query that never succeeds
   * contributes no time to the total.
+  *
+  * Every sample also counts its Spark work ([[graft.obs.SparkWork]]):
+  * `BENCH_PROFILE.json` holds each query's fastest sample as
+  * `{wall_s, jobs, tasks, task_s, sql_executions}`, plus the store
+  * signals under `"store"`. Job and task counts do not depend on box
+  * load, so they compare across runs that walls cannot.
+  *
+  * `runMain graft.Bench [query…]`: trailing query names (or ids: `q58`)
+  * run only those queries; such a run prints the contract line and one
+  * `PROF,<query>,<wall_s>,<jobs>,<tasks>,<task_s>` line per query, and
+  * writes no side file (those describe full-suite runs).
   */
 object Bench {
 
@@ -49,12 +61,42 @@ object Bench {
     }
   }
 
+  /** One timed run of `body` under [[SparkWork.during]] (the clock stops
+    * before the listener bus is drained), kept in `fastest` when it is
+    * `name`'s fastest so far. A throw yields no sample and no profile
+    * row.
+    */
+  private[graft] def sample(spark: SparkSession, name: String,
+                            failed: scala.collection.mutable.Set[String],
+                            fastest: scala.collection.mutable.Map[String, (Double, SparkWork)])(
+                            body: => Unit): Option[Double] = {
+    val (wall, work) = SparkWork.during(spark)(timeRun(name, failed)(body))
+    wall.foreach(w => if (fastest.get(name).forall(_._1 > w)) fastest(name) = (w, work))
+    wall
+  }
+
+  /** The `"queries"` member of `BENCH_PROFILE.json`, names sorted. */
+  private[graft] def profileJson(
+      fastest: collection.Map[String, (Double, SparkWork)]): String =
+    fastest.toSeq.sortBy(_._1)
+      .map { case (k, (wall, work)) => s"\"$k\":${work.json(wall)}" }
+      .mkString("{", ",", "}")
+
   /** The `"failed":[…]` member, names sorted. */
   private[graft] def failedJson(failed: Iterable[String]): String =
     failed.toSeq.sorted.map(n => s"\"$n\"").mkString("\"failed\":[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val only = args.toSet
+    // a trailing arg selects the query it names or whose id it is
+    // (`q58` selects `q58_tick_reports`)
+    def names(arg: String, query: String): Boolean =
+      query == arg || query.startsWith(arg + "_")
+    def selected(query: String): Boolean =
+      only.isEmpty || only.exists(names(_, query))
+    val unknown = only.filterNot(a => SparkEntry.queries.keys.exists(names(a, _)))
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(" ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -77,13 +119,14 @@ object Bench {
         graft.Lake.table(spark, sfDir, t).limit(1).count())
     } catch { case _: Throwable => () }
     val failed = scala.collection.mutable.Set.empty[String]
+    val fastest = scala.collection.mutable.Map.empty[String, (Double, SparkWork)]
     def once(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[Double] = {
       // noop sink: fully evaluates every output column. A bare count()
       // would let Catalyst PRUNE the computed projections of narrow
       // row-local queries and time little more than the scan.
-      val t = timeRun(name, failed) {
+      val t = sample(spark, name, failed, fastest) {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       }
       spark.sharedState.cacheManager.clearCache() // keep every run cold
@@ -98,7 +141,8 @@ object Bench {
     // t01 that measured [82 s, 125 s] back-to-back vs 1.0 s quiet-box),
     // while two passes separated by the whole suite give every query one
     // sample outside any sub-suite-length spike.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.queries.toSeq
+      .filter { case (name, _) => selected(name) }.sortBy(_._1)
     val pass1 = ordered.map { case (name, fn) => once(name, fn) }
     val pass2 = ordered.map { case (name, fn) => once(name, fn) }
     val sampled = ordered.zipWithIndex.flatMap { case ((name, fn), i) =>
@@ -206,12 +250,19 @@ object Bench {
     def writeJson(p: java.nio.file.Path, body: String): Unit =
       try java.nio.file.Files.write(p, body.getBytes("UTF-8"))
       catch { case e: java.io.IOException => System.err.println(s"$p write failed: $e") }
-    val qsFull = results.map { case (k, v, _) => s"\"$k\":${fmt(v)}" }
-      .mkString("{", ",", "}")
-    writeJson(fullPath,
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"queries":$qsFull}""")
-    writeJson(samplesPath,
-      s"""{"sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"samples":$samplesJson}""")
+    if (only.nonEmpty) results.foreach { case (k, _, _) =>
+      val (wall, w) = fastest(k)
+      println(f"PROF,$k,$wall%.3f,${w.jobs},${w.tasks},${w.taskS}%.2f")
+    } else {
+      val qsFull = results.map { case (k, v, _) => s"\"$k\":${fmt(v)}" }
+        .mkString("{", ",", "}")
+      writeJson(fullPath,
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"queries":$qsFull}""")
+      writeJson(samplesPath,
+        s"""{"sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"samples":$samplesJson}""")
+      writeJson(repoRoot.resolve("BENCH_PROFILE.json"),
+        s"""{"sf":"$sfDir",$statusJson,"queries":${profileJson(fastest)},"store":${Signals.json}}""")
+    }
     spark.stop()
   }
 }

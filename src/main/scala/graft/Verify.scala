@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.obs.{Json, Signals}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -27,84 +28,44 @@ object Verify {
       }
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     gatesFreshnessCheck(outDir)
     storeCutHealth(outDir)
     spark.stop()
   }
 
-  /** Surface the store-cut layer's silent-swallow ops signal (see
-    * `StoreCut.swallowedAdvances`): a best-effort cut advance abandoned
-    * after a durable commit is correct but previously invisible — a
-    * store whose EVERY advance fails (IAM break, throttle storm) would
-    * silently lag its cut forever. The verify run is the round's one
-    * always-executed porcelain, so the totals land here, loud when
-    * non-zero, machine-readable either way.
+  /** The store layer's signals (`graft.obs.Signals`) as
+    * `storecut_health.json`, one line per non-empty signal. The verify
+    * run is the one always-executed porcelain, so a store that lags its
+    * cut, a degraded governance guard or an orphan-suffix leak shows up
+    * here. A dump error is printed, never fatal; an orphan-suffix
+    * violation fails the run: a family store served more crash residue
+    * than its recovery contract allows.
     */
-  private def storeCutHealth(outDir: String): Unit = try {
-    val n = graft.sources.StoreCut.swallowedAdvances.get()
-    val last = graft.sources.StoreCut.lastSwallow.getOrElse("")
-    val byRoot = graft.sources.StoreCut.swallowedByRoot
-    val governFails = graft.sources.AtomicStore.cutGovernProbeFailures.get()
-    if (n > 0)
-      println(s"[verify] storecut: $n swallowed best-effort cut " +
-        s"advance(s) this run — committed batches were left unpublished " +
-        s"(adopted by the next append/fold); last: $last; by root: " +
-        byRoot.map { case (r, c) => s"$r=$c" }.mkString(", "))
-    else println("[verify] storecut: 0 swallowed cut advances")
-    if (governFails > 0)
-      println(s"[verify] storecut: $governFails cut-governance probe " +
-        "failure(s) — the standalone-writer guard was degraded (fails " +
-        "open) for those calls; check store IO health")
-    // truncated JSON keys get a hash suffix: two roots sharing a
-    // 200-char prefix must not collapse into one duplicate key that
-    // silently drops an entry for JSON consumers (round-19 advice)
-    def keyq(s: String): String =
-      if (s.length <= 200) q(s)
-      else q(s.take(200) + f"#${s.hashCode}%08x")
-    val byRootJson = byRoot.toSeq.sortBy(_._1)
-      .map { case (r, c) => s"${keyq(r)}: $c" }
-      .mkString("{", ", ", "}")
-    // the family porcelain: every family store this run committed,
-    // with where its last cut landed (per-part versions + job count)
-    val families = graft.operators.TagFamilyStore.publishedFamilies
-    val familiesJson = families.toSeq.sortBy(_._1)
-      .map { case (r, s) => s"${keyq(r)}: ${q(s.take(300))}" }
-      .mkString("{", ", ", "}")
-    if (families.nonEmpty)
-      println(s"[verify] storecut: ${families.size} family store(s) " +
-        "published this run (see storecut_health.json family_cuts)")
-    // the orphan-suffix bound, as an ASSERTION (round-19 verdict #7): a
-    // family suffix larger than what crashed attempts committed means
-    // the truncation contract leaked — fail the run, don't just print
-    val orphanViolations =
-      graft.operators.TagFamilyStore.orphanSuffixViolations
-    val violationsJson = orphanViolations.toSeq.sortBy(_._1)
-      .map { case (r, s) => s"${keyq(r)}: ${q(s.take(300))}" }
-      .mkString("{", ", ", "}")
-    Files.writeString(Paths.get(s"$outDir/storecut_health.json"),
-      s"""{
-         |  "swallowed_advances": $n,
-         |  "swallowed_by_root": $byRootJson,
-         |  "govern_probe_failures": $governFails,
-         |  "family_cuts": $familiesJson,
-         |  "orphan_suffix_violations": $violationsJson,
-         |  "last": ${q(last.take(400))}
-         |}
-         |""".stripMargin)
-    if (orphanViolations.nonEmpty)
+  private def storeCutHealth(outDir: String): Unit = {
+    try {
+      Files.writeString(Paths.get(s"$outDir/storecut_health.json"),
+        Signals.json + "\n")
+      Signals.signals.foreach { s =>
+        val counts = Signals.counts(s)
+        val keys = counts.keySet ++ Signals.notes(s).keySet
+        if (keys.nonEmpty)
+          println(s"[verify] storecut: $s at ${keys.size} key(s)" +
+            (if (counts.nonEmpty) s", count ${counts.values.sum}" else "") +
+            " (see storecut_health.json)")
+      }
+    } catch { case scala.util.control.NonFatal(e) =>
+      println(s"[verify] storecut: health dump errored: $e")
+    }
+    val violations = Signals.notes(Signals.OrphanSuffixViolations)
+    if (violations.nonEmpty)
       throw new IllegalStateException(
         s"[verify] ORPHAN-SUFFIX BOUND VIOLATED at " +
-          s"${orphanViolations.keys.toSeq.sorted.mkString(", ")} — a " +
+          s"${violations.keys.toSeq.sorted.mkString(", ")} — a " +
           "family store served more crash residue than its recovery " +
           "contract allows (see storecut_health.json)")
-  } catch {
-    case e: IllegalStateException
-        if e.getMessage != null && e.getMessage.contains("ORPHAN-SUFFIX") =>
-      throw e // the one storecut condition that must FAIL the run
-    case scala.util.control.NonFatal(e) =>
-      println(s"[verify] storecut: health dump errored: $e")
   }
 
   /** Failure-injection gate freshness (runs every Verify, i.e. every
@@ -120,27 +81,11 @@ object Verify {
     * it. Diagnostic, not fatal: correctness dumping must not be held
     * hostage by gate housekeeping, the judge reads the verdict.
     */
-  /** JSON string escape (emits the surrounding quotes): backslash,
-    * quote, and ALL control chars (<0x20) — a tab or CR in
-    * builder-authored SQL would otherwise make the driver's json.load
-    * fail and silently zero the round's correctness. Shared by the
-    * oracle dump and the gates-freshness artifact.
-    */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def gatesFreshnessCheck(outDir: String): Unit = try {
     // truncate BEFORE escaping: a cut landing inside an escape pair
     // would leave a trailing lone backslash that swallows the closing
     // quote and makes the whole file unparseable
-    def jq(s: String): String = q(s.take(400))
+    def jq(s: String): String = Json.quote(s.take(400))
     def emit(verdict: String, gatesFile: String, gitHead: String,
              detail: String): Unit = {
       println(s"[verify] gates: $verdict — " +

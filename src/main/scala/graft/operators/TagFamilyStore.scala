@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.TagConfig
+import graft.obs.Signals
 import graft.sources.{AtomicStore, StoreCut}
 
 /** The CONSISTENT-CUT form of the tag-engine write family — tags,
@@ -362,7 +363,7 @@ object TagFamilyStore {
         Seq(TagsPart, HistoryPart, ReportsPart)
           .foreach(p => expectedOrphans.merge(s"$root/$p", 1L, (a, b) => a + b))
       }
-    lastPublish.put(root, s"cut=v$cutV jobs=${jobs.size} " +
+    Signals.note(Signals.FamilyCuts, root, s"cut=v$cutV jobs=${jobs.size} " +
       versions.toSeq.sortBy(_._1)
         .map { case (p, v) => s"$p=v$v" }.mkString(" "))
     versions + ("manifest" -> cutV)
@@ -533,23 +534,6 @@ object TagFamilyStore {
     FamilyHealth(cutV, pins, current, orphans, retained)
   }
 
-  /** LAST-PUBLISH registry, the Verify-facing porcelain: every family
-    * publish records a one-line summary per root (JVM-global, zero
-    * extra IO — the versions are in hand at publish time), so a Verify
-    * run's `storecut_health.json` can list which family stores this
-    * process committed and where their cuts landed, without re-probing
-    * stores whose temp dirs are already gone.
-    */
-  private val lastPublish =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def publishedFamilies: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    lastPublish.asScala.toMap
-  }
-
-  private[graft] def resetPublishRegistry(): Unit = lastPublish.clear()
-
   /** ORPHAN-SUFFIX accounting (round-19 verdict #7 — the porcelain's
     * "bounded by the recovery contract" claim turned into a checked
     * invariant): within one process, every version above the cut pin
@@ -560,31 +544,21 @@ object TagFamilyStore {
     * entry compares the OBSERVED suffix (current table version − pin)
     * against that expectation. An over-bound suffix means the store's
     * truncation contract leaked — an out-of-protocol writer, or a chain
-    * parented on current instead of the pin — and is recorded here
-    * (plus one stderr line); Verify turns a non-empty registry into a
-    * failed run. Recording, not throwing, at the store layer: the
-    * serving cut is still correct (readers resolve through pins), so
-    * the commit itself must not be held hostage by the diagnostic.
+    * parented on current instead of the pin — and is noted under
+    * `Signals.OrphanSuffixViolations` (plus one stderr line); Verify
+    * fails a run that noted one. Recording, not throwing, at the store
+    * layer: the serving cut is still correct (readers resolve through
+    * pins), so the commit itself must not be held hostage by the
+    * diagnostic.
     */
   private val expectedOrphans =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private val suffixViolations =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   // the expectation is only complete for roots THIS process has already
   // published to: a fresh process re-running a KILLED commit (the gate
   // tools' regime) legitimately finds residue it never recorded, so the
   // first commit at a root only arms the check for later ones
   private val seenRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def orphanSuffixViolations: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    suffixViolations.asScala.toMap
-  }
-
-  private[graft] def resetOrphanAccounting(): Unit = {
-    expectedOrphans.clear(); suffixViolations.clear(); seenRoots.clear()
-  }
 
   private def checkOrphanBound(spark: SparkSession, root: String,
                                pins: Map[String, Long]): Unit =
@@ -597,7 +571,7 @@ object TagFamilyStore {
         if (observed > allowed) {
           val msg = s"observed=$observed allowed=$allowed (pin=" +
             s"${pins.get(p).map(_.toString).getOrElse("none")} current=$cur)"
-          suffixViolations.put(s"$root/$p", msg)
+          Signals.note(Signals.OrphanSuffixViolations, s"$root/$p", msg)
           System.err.println(s"[tagfamily] ORPHAN-SUFFIX BOUND VIOLATION " +
             s"at $root/$p: $msg — versions above the pin exceed what " +
             "crashed attempts in this process committed; an " +

@@ -5,6 +5,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.obs.Signals
 
 /** ACID-ish table protocol for the MUTABLE stores (tags, configs,
   * history) — the commit-log design Delta/Iceberg implement, reduced to
@@ -706,7 +707,7 @@ object AtomicStore {
     * failure (after one retry) means "not provably governed" (a table named like
     * a component but outside any cut store must not be bricked by a
     * stray sibling file) — but it is COUNTED
-    * ([[cutGovernProbeFailures]]) and logged, so a guard that can't see
+    * (`Signals.GovernProbeFailures`) and logged, so a guard that can't see
     * is distinguishable from one that never fires. Cost: one LIST
     * (+ one tiny open when a manifest exists) on the first guarded call
     * per table; positive results are cached (governance is permanent
@@ -729,7 +730,7 @@ object AtomicStore {
       // merely NAMED like a component, sitting outside any cut store on
       // a flaky filesystem, must not be bricked by its name.
       def probe(): Boolean = {
-        cutGovernProbes.incrementAndGet()
+        Signals.count(Signals.GovernProbes, root)
         readKv(spark, new Path(parent, "manifest").toString)
           .exists(_._2.contains(p.getName))
       }
@@ -738,7 +739,7 @@ object AtomicStore {
         catch { case scala.util.control.NonFatal(_) =>
           try probe()
           catch { case scala.util.control.NonFatal(e2) =>
-            cutGovernProbeFailures.incrementAndGet()
+            Signals.count(Signals.GovernProbeFailures, root)
             System.err.println(s"[atomicstore] cut-governance probe at " +
               s"$root failed twice (guard degraded to not-governed for " +
               s"this call): ${e2.getClass.getSimpleName}: " +
@@ -758,14 +759,6 @@ object AtomicStore {
     }
   }
 
-  /** Ops counters for the governance guard: total probes actually paid
-    * (cache misses) and probes that failed even after the retry. The
-    * failure count is the "guard can't see" signal Verify surfaces.
-    */
-  private[graft] val cutGovernProbes =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val cutGovernProbeFailures =
-    new java.util.concurrent.atomic.AtomicLong(0L)
   private val governedCache =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.obs.Signals
 
 /** The STORE-LEVEL MANIFEST shared by the cut-governed stores
   * (`graft.operators.AnnIndexStore`, `graft.operators.DocIndexStore`,
@@ -390,55 +391,25 @@ object StoreCut {
 
   /** OPS SIGNAL for the best-effort publication paths: a swallowed cut
     * advance is correct (the batch is durably committed and adopted by
-    * the next append/fold) but was previously INVISIBLE — a store whose
-    * every advance fails persistently (an IAM break, a throttle storm,
-    * an out-of-band manifest-dir deletion) would silently lag its cut
-    * forever with nothing to diagnose from. Each abandoned publication
-    * bumps the counter, records the last failure, and logs one stderr
-    * line; `graft.Verify` surfaces the totals as
-    * `storecut_health.json`. JVM-wide by design (the stores are
-    * objects); reset is test-only.
+    * the next append/fold) but would otherwise be INVISIBLE — a store
+    * whose every advance fails persistently (an IAM break, a throttle
+    * storm, an out-of-band manifest-dir deletion) would silently lag its
+    * cut forever. Each abandoned publication is counted per root under
+    * `Signals.SwallowedAdvances` with its error as the note, and logs
+    * one stderr line.
     */
-  val swallowedAdvances = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile var lastSwallow: Option[String] = None
-
-  /** PER-ROOT swallow attribution (round-18 verdict nit): the JVM-global
-    * counter says "something is lagging" but one flaky store masks WHICH
-    * — with a fleet of family/index stores in one driver, the per-root
-    * split is the difference between a diagnosis and a grep. The global
-    * counter stays (it is the cheap any-problem probe Verify gates on).
-    */
-  private val swallowsPerRoot =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-
-  /** Snapshot of the per-root swallow counts (empty when healthy). */
-  def swallowedByRoot: Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    swallowsPerRoot.asScala.map { case (k, v) => k -> v.get() }.toMap
-  }
-
-  /** Test-only reset (the counters are JVM-global ops signals). */
-  private[graft] def resetSwallowCounters(): Unit = {
-    swallowedAdvances.set(0L); lastSwallow = None; swallowsPerRoot.clear()
-  }
-
   private def recordSwallow(root: String, e: Throwable): Unit = {
-    swallowedAdvances.incrementAndGet()
-    swallowsPerRoot
-      .computeIfAbsent(root,
-        _ => new java.util.concurrent.atomic.AtomicLong(0L))
-      .incrementAndGet()
-    val what = s"$root: ${e.getClass.getSimpleName}: " +
+    val n = Signals.count(Signals.SwallowedAdvances, root)
+    val what = s"${e.getClass.getSimpleName}: " +
       Option(e.getMessage).getOrElse("").take(200)
-    lastSwallow = Some(what)
+    Signals.note(Signals.SwallowedAdvances, root, what)
     System.err.println(s"[storecut] swallowed best-effort cut advance " +
-      s"(#${swallowedAdvances.get()}) — the committed batch stays " +
-      s"unpublished until the next append/fold adopts it: $what")
+      s"(#$n at this root) — the committed batch stays " +
+      s"unpublished until the next append/fold adopts it: $root: $what")
   }
 
   /** [[advance]] with bounded retries, swallowing (but counting — see
-    * [[swallowedAdvances]]) a persistent failure — for publication steps
+    * [[recordSwallow]]) a persistent failure — for publication steps
     * that run AFTER a durable commit (see [[publishAppend]] for why
     * those must not throw). Each inner advance is itself attempt-capped:
     * an advance whose every CAS loses permanently (out-of-band manifest

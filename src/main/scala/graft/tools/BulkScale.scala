@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
+import graft.obs.SparkWork
 import graft.operators.{ConfigDispatch, EngineInputs, TagEngine, TagFamilyStore,
   TagStore}
 
@@ -26,15 +27,6 @@ object BulkScale {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            counter.incrementAndGet()
-          case _ => ()
-        }
-    })
     val fields = Seq(
       FieldSpec("n_rows", "double", Some("select count(*) from $table")),
       FieldSpec("n_users", "double",
@@ -58,23 +50,23 @@ object BulkScale {
         includedUris = Seq("bigquery/project/p/dataset/lake/events_*"))
       val shard = concat(lit("events_"),
         lpad((col("event_id") % n).cast("string"), pad, "0"))
-      counter.set(0)
-      val t0 = System.nanoTime()
       // the production entry point: dispatch expands, counts, and routes
       // set-based past the threshold (499 here so every point takes the
       // sharded path and the series stays comparable)
       val noTags = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq()))
-      val out = ConfigDispatch.applyConfig(spark, config,
-        EngineInputs(catalog, noTags,
-          shardedSource = Some((events, shard)),
-          shardRouteThreshold = 499L))
-      out.write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener events are async
+      val ((out, dt), work) = SparkWork.during(spark) {
+        val t0 = System.nanoTime()
+        val out = ConfigDispatch.applyConfig(spark, config,
+          EngineInputs(catalog, noTags,
+            shardedSource = Some((events, shard)),
+            shardRouteThreshold = 499L))
+        out.write.mode("overwrite").format("noop").save()
+        (out, (System.nanoTime() - t0) / 1e9)
+      }
       println(f"BULKSCALE assets=$n%7d rows=${n * fields.length}%8d " +
-        f"wall=$dt%6.1fs sql_executions=${counter.get()}")
+        f"wall=$dt%6.1fs sql_executions=${work.sqlExecutions}")
 
       // END-TO-END: the same tag rows through the write path the engine
       // persists with — compute + the family store's job commit (tag

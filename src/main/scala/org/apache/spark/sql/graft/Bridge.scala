@@ -37,4 +37,12 @@ object Bridge {
     */
   def asNullable(s: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = s.asNullable
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`); `graft.obs.SparkWork`
+    * drains it so its counts are exact without sleeping. Throws
+    * `TimeoutException` if the bus is still busy after 10 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

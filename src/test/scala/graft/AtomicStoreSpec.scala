@@ -253,23 +253,10 @@ class AtomicStoreSpec extends SparkSpec {
     // and resolving the frame costs NO Spark job (the whole point):
     // schema comes from the driver-side footer cache, not a
     // mergeSchemasInParallel job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, work) = graft.obs.SparkWork.during(spark) {
       AtomicStore.read(spark, r).schema // resolve only, no action
-      // listener bus is async; bounded drain (JobProfile's discipline)
-      var spins = 0
-      var prev = -1
-      while (prev != jobs.get && spins < 20) {
-        prev = jobs.get; Thread.sleep(50); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() === 0,
+    }
+    assert(work.jobs === 0,
       "resolving a same-schema chain must not launch a schema-merge job")
   }
 

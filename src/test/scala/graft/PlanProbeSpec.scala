@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.obs.SparkWork
 import graft.sources.PlanProbe
 
 /** The non-executing partition probe's contract (round-20 verdict #1):
@@ -19,24 +19,9 @@ class PlanProbeSpec extends SparkSpec {
   import spark.implicits._
 
   /** Count Spark jobs submitted while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      // listener bus is async — drain until stable across two reads
-      var prev = -1
-      var cur = n.get()
-      var spins = 0
-      while (prev != cur && spins < 40) {
-        Thread.sleep(50); prev = cur; cur = n.get(); spins += 1
-      }
-      (r, cur)
-    } finally spark.sparkContext.removeSparkListener(l)
+  private def jobsDuring[T](f: => T): (T, Long) = {
+    val (r, work) = SparkWork.during(spark)(f)
+    (r, work.jobs)
   }
 
   private def shuffleBearing(): DataFrame =

@@ -108,22 +108,12 @@ class PlanSpec extends SparkSpec {
     // AQE may stage one execution into several jobs, so the invariant is
     // execution count: the r2 form ran one blocking count() action PER
     // table; the fix submits a single query execution for all tables
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            counter.incrementAndGet()
-          case _ => ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, work) = graft.obs.SparkWork.during(spark) {
       CoreQueries2.q17EntryStats(spark, sf)
         .write.mode("overwrite").format("noop").save()
-      Thread.sleep(500) // listener events are async
-      assert(counter.get() === 1, s"expected 1 execution, saw ${counter.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(work.sqlExecutions === 1,
+      s"expected 1 execution, saw ${work.sqlExecutions}")
   }
 
   test("d02: minhash signatures are a narrow projection (zero shuffle)") {

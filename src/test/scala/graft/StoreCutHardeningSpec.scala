@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import graft.obs.Signals
 import graft.sources.{AtomicStore, StoreCut}
 
 /** Round-18 hardening of the store-cut layer: the two round-17
@@ -123,13 +124,15 @@ class StoreCutHardeningSpec extends SparkSpec {
 
   test("advanceBestEffort swallows a persistently failing advance but counts and records it") {
     val root = freshRoot("cut_swallow")
-    val before = StoreCut.swallowedAdvances.get()
+    def swallowed = Signals.counts(Signals.SwallowedAdvances).values.sum
+    val before = swallowed
     AtomicStore.testPreKvPublishHook =
       () => throw new RuntimeException("injected IAM break")
     try StoreCut.advanceBestEffort(spark, root, Map("t" -> 0L)) // must not throw
     finally AtomicStore.testPreKvPublishHook = () => ()
-    assert(StoreCut.swallowedAdvances.get() === before + 1)
-    assert(StoreCut.lastSwallow.exists(_.contains("injected IAM break")))
+    assert(swallowed === before + 1)
+    assert(Signals.notes(Signals.SwallowedAdvances).get(root)
+      .exists(_.contains("injected IAM break")))
     // and the store self-heals: the next (working) advance publishes
     assert(StoreCut.advance(spark, root, Map("t" -> 0L)) === 0L)
     assert(StoreCut.cut(spark, root).get === Map("t" -> 0L))
@@ -186,8 +189,9 @@ class StoreCutHardeningSpec extends SparkSpec {
   test("swallowed advances are attributed per root, not just globally") {
     val rootA = freshRoot("cut_swallow_a")
     val rootB = freshRoot("cut_swallow_b")
-    val beforeA = StoreCut.swallowedByRoot.getOrElse(rootA, 0L)
-    val beforeB = StoreCut.swallowedByRoot.getOrElse(rootB, 0L)
+    def byRoot = Signals.counts(Signals.SwallowedAdvances)
+    val beforeA = byRoot.getOrElse(rootA, 0L)
+    val beforeB = byRoot.getOrElse(rootB, 0L)
     AtomicStore.testPreKvPublishHook =
       () => throw new RuntimeException("injected IAM break")
     try {
@@ -196,8 +200,8 @@ class StoreCutHardeningSpec extends SparkSpec {
       StoreCut.advanceBestEffort(spark, rootB, Map("t" -> 0L))
     } finally AtomicStore.testPreKvPublishHook = () => ()
     // one flaky store no longer masks which root is lagging
-    assert(StoreCut.swallowedByRoot(rootA) === beforeA + 2)
-    assert(StoreCut.swallowedByRoot(rootB) === beforeB + 1)
+    assert(byRoot(rootA) === beforeA + 2)
+    assert(byRoot(rootB) === beforeB + 1)
   }
 
   test("advanceKvIfBase: None means the cut MOVED (a racing advance), never a transient publish hiccup") {
@@ -269,14 +273,15 @@ class StoreCutHardeningSpec extends SparkSpec {
     AtomicStore.commitAppend(rows(5, 10), table)
     StoreCut.advance(spark, root, Map("t" -> 1L))
     AtomicStore.clearCutGovernCache()
-    val cold = AtomicStore.cutGovernProbes.get()
+    def probes = Signals.counts(Signals.GovernProbes).values.sum
+    val cold = probes
     intercept[IllegalStateException](AtomicStore.compact(spark, table))
-    val afterCold = AtomicStore.cutGovernProbes.get()
+    val afterCold = probes
     assert(afterCold === cold + 1, "a cold guard pays exactly one probe")
     // warm: the positive marker is cached — the refusal still fires but
     // the high-latency-store LIST is not paid again
     intercept[IllegalStateException](AtomicStore.compact(spark, table))
-    assert(AtomicStore.cutGovernProbes.get() === afterCold,
+    assert(probes === afterCold,
       "a warm guard pays zero probes")
 
     // a CORRUPT manifest makes the probe throw: the guard degrades to
@@ -292,10 +297,11 @@ class StoreCutHardeningSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(manCommits)
     java.nio.file.Files.writeString(
       manCommits.resolve("v" + "0" * 20), "garbage-no-equals")
-    val fails = AtomicStore.cutGovernProbeFailures.get()
+    def probeFailures = Signals.counts(Signals.GovernProbeFailures).values.sum
+    val fails = probeFailures
     assert(AtomicStore.compact(spark, table2, graceMs = 0L).isDefined,
       "the degraded guard fails open (compact proceeds)")
-    assert(AtomicStore.cutGovernProbeFailures.get() === fails + 1,
+    assert(probeFailures === fails + 1,
       "the degraded probe must be counted")
   }
 }

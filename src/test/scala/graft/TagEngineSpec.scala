@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
+import graft.obs.SparkWork
 import graft.operators.{ConfigDispatch, EngineInputs, GroupedEval, TagEngine,
   TagFamilyStore}
 
@@ -126,21 +127,10 @@ class TagEngineSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType.fromDDL(
         "asset_uri string, column string, template_id string, " +
           "field_id string, field_value string"))
-    def jobsFor(n: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        TagEngine.runJobsProduced(spark, cfgs(n), catalog, emptyTags)
-          .write.mode("overwrite").format("noop").save()
-        Thread.sleep(500)
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsFor(n: Int): Long = SparkWork.during(spark) {
+      TagEngine.runJobsProduced(spark, cfgs(n), catalog, emptyTags)
+        .write.mode("overwrite").format("noop").save()
+    }._2.jobs
     val j2 = jobsFor(2)
     val j8 = jobsFor(8)
     assert(j8 === j2,
@@ -260,24 +250,12 @@ class TagEngineSpec extends SparkSpec {
   }
 
   test("sharded eval job count does NOT grow with asset count") {
-    def jobsFor(n: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        GroupedEval.applyDynamicTableConfigSharded(spark, shardConfig(n),
-            shardCatalog(n), Lake.table(spark, sf, "events"),
-            concat(lit("ev_"), (col("event_id") % n).cast("string")))
-          .write.mode("overwrite").format("noop").save()
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(500)
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsFor(n: Int): Long = SparkWork.during(spark) {
+      GroupedEval.applyDynamicTableConfigSharded(spark, shardConfig(n),
+          shardCatalog(n), Lake.table(spark, sf, "events"),
+          concat(lit("ev_"), (col("event_id") % n).cast("string")))
+        .write.mode("overwrite").format("noop").save()
+    }._2.jobs
     val j100 = jobsFor(100)
     val j1000 = jobsFor(1000)
     assert(j1000 === j100,
@@ -390,24 +368,13 @@ class TagEngineSpec extends SparkSpec {
   }
 
   test("dynamic-COLUMN grid job count does NOT grow with asset count") {
-    def jobsFor(n: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        GroupedEval.applyDynamicColumnConfigSharded(spark, colGridConfig,
-            shardCatalog(n), Lake.table(spark, sf, "events"),
-            concat(lit("ev_"), (col("event_id") % n).cast("string")),
-            Seq("user_id", "value"))
-          .write.mode("overwrite").format("noop").save()
-        Thread.sleep(500)
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsFor(n: Int): Long = SparkWork.during(spark) {
+      GroupedEval.applyDynamicColumnConfigSharded(spark, colGridConfig,
+          shardCatalog(n), Lake.table(spark, sf, "events"),
+          concat(lit("ev_"), (col("event_id") % n).cast("string")),
+          Seq("user_id", "value"))
+        .write.mode("overwrite").format("noop").save()
+    }._2.jobs
     val j100 = jobsFor(100)
     val j1000 = jobsFor(1000)
     assert(j1000 === j100,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
 import graft.operators.{TagEngine, TagFamilyStore}
+import graft.obs.Signals
 import graft.sources.{AtomicStore, StoreCut}
 
 /** The tag-engine FAMILY cut (round 18): tags + history (+ reports)
@@ -309,7 +310,7 @@ class TagFamilyStoreSpec extends SparkSpec {
     // job's own tags commit is accounted residue) and the job lands once
     TagFamilyStore.commitJob(spark, root, mkIncoming(j2Tags),
       mkHistory("job-2", Seq(("a/orders", "100"))))
-    val violations = TagFamilyStore.orphanSuffixViolations
+    val violations = Signals.notes(Signals.OrphanSuffixViolations)
     assert(violations.contains(s"$root/history"))
     assert(!violations.contains(s"$root/tags"))
     assert(tagSet(TagFamilyStore.readTags(spark, root)) === Set(

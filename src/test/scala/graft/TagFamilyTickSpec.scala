@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{FieldSpec, TagConfig}
+import graft.obs.Signals
 import graft.operators.TagFamilyStore
 import graft.operators.TagFamilyStore.JobBatch
 import graft.sources.StoreCut
@@ -155,8 +156,8 @@ class TagFamilyTickSpec extends SparkSpec {
     assert(healed.orphanSuffix === Map.empty)
     assert(healed.cutVersion === Some(1L))
     assert(healed.retainedCuts === Seq(0L, 1L))
-    // and the publish registry carries the last cut's summary
-    assert(TagFamilyStore.publishedFamilies.get(root)
+    // and the family_cuts signal carries the last cut's summary
+    assert(Signals.notes(Signals.FamilyCuts).get(root)
       .exists(s => s.contains("cut=v1") && s.contains("jobs=3")))
   }
 
