@@ -42,7 +42,8 @@ import graft.obs.{Signals, SparkWork}
   * `runMain graft.Bench [query…]`: trailing query names (or ids: `q58`)
   * run only those queries; such a run prints the contract line and one
   * `PROF,<query>,<wall_s>,<jobs>,<tasks>,<task_s>` line per query, and
-  * writes no side file (those describe full-suite runs).
+  * writes no side file (those describe full-suite runs), so its contract
+  * line's `"queries_file"` is `null`.
   */
 object Bench {
 
@@ -235,8 +236,11 @@ object Bench {
       else java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
     }
     val fullPath = repoRoot.resolve("BENCH_FULL.json")
+    // a subset run writes no BENCH_FULL.json: the last full run's file
+    // would describe other numbers
+    val queriesFile = if (only.nonEmpty) "null" else "\"" + fullPath + "\""
     val samplesPath = repoRoot.resolve("BENCH_SAMPLES.json")
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"n_queries":${results.size},"queries_file":"$fullPath","queries":{"""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","load_avg_start":${fmt(loadStart)},"load_avg_mid":${fmt(loadMid)},"load_avg_end":${fmt(loadEnd)},$statusJson,"n_queries":${results.size},"queries_file":$queriesFile,"queries":{"""
     val tail = "}}"
     val budget = 1700 - head.length - tail.length
     val bySlowest = results.sortBy(-_._2).map { case (k, v, _) => s"\"$k\":${fmt(v)}" }

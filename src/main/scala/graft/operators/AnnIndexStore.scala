@@ -27,10 +27,10 @@ import graft.sources.{AtomicStore, StoreCut}
   * commits are invisible until the swap is re-run to completion (every
   * step is idempotent). The refresh lease (single-writer swaps) and the
   * model-version fence (straggler append batches dropped at load) close
-  * the CONCURRENCY seams on top. Stores written before the manifest
-  * existed load every table at its current version (fenced by the
-  * params row) and acquire a manifest on their next
-  * write/append/refresh.
+  * the CONCURRENCY seams on top. Every read resolves through a
+  * published cut ([[StoreCut.readPinned]]): a store with no cut, or a
+  * part no cut pins, fails loudly instead of reading a table's current
+  * version.
   *
   * Scale notes: the assignment tables are bytes per corpus row (two
   * longs), the codes table a few small ints per row; centroids are
@@ -155,37 +155,24 @@ object AnnIndexStore {
     StoreCut.atCut(spark, root)(loadPinned(spark, root, _))
 
   /** A Components view of one resolved cut (shared by [[load]] and
-    * [[loadAt]] — the latter passes `strict`, failing loudly on an
-    * aged-out pin instead of silently serving newer files). The fence
-    * compares stamps against the CUT's generation, so a time-travel
-    * read fences exactly as the cut did when it was current. Cuts that
-    * predate GenKey stamping fall back to the PINNED params row when
-    * the cut pins one (never the live table — a crashed writeModel's
-    * orphaned generation must not leak into the fence); a cut pinning
-    * neither (appends-only on a legacy store, or no cut at all —
-    * `pins` empty, every table read at current) keeps the legacy live
-    * read, i.e. pre-manifest semantics until the first completed
-    * writeModel/refresh publishes the generation.
+    * [[loadAt]]). The fence compares stamps against the CUT's
+    * `model_generation` pin, so a time-travel read fences exactly as the
+    * cut did when it was current. A cut without that pin (a model-less
+    * store, or a first writeModel that crashed before its cut publish)
+    * serves generation 0: every stamped row is fenced out, since stamps
+    * are ≥ 1 — an unpublished generation never reaches the fence.
     */
   private def loadPinned(spark: SparkSession, root: String,
-                         pins: Map[String, Long],
-                         strict: Boolean = false): Components = {
-    lazy val gen = pins.get(GenKey).getOrElse {
-      if (pins.contains("params")) {
-        val p = StoreCut.readPinned(spark, root, "params", pins, strict)
-        if (p.columns.contains("model_version"))
-          p.head().getAs[Long]("model_version")
-        else 0L
-      } else paramsGeneration(spark, root)
-    }
+                         pins: Map[String, Long]): Components = {
+    val gen = pins.getOrElse(GenKey, 0L)
     def perRow(p: String): DataFrame = {
-      val df = StoreCut.readPinned(spark, root, p, pins, strict)
+      val df = StoreCut.readPinned(spark, root, p, pins)
       if (!df.columns.contains("model_version")) df
       else df.filter(col("model_version").isNull ||
           col("model_version") === gen)
         .drop("model_version")
     }
-    Components(StoreCut.readPinned(spark, root, "centroids", pins, strict),
+    Components(StoreCut.readPinned(spark, root, "centroids", pins),
       perRow("assigned"), perRow("assigned_multi"),
       perRow("codes"), perRow("sigs"))
   }
@@ -203,20 +190,17 @@ object AnnIndexStore {
     * cut fails loudly rather than silently serving newer files.
     */
   def loadAt(spark: SparkSession, root: String, cutVersion: Long): Components =
-    loadPinned(spark, root, StoreCut.cutAt(spark, root, cutVersion),
-      strict = true)
+    loadPinned(spark, root, StoreCut.cutAt(spark, root, cutVersion))
 
   /** The persisted model's SERVED generation — what the load fence
-    * compares append stamps against: the manifest cut's generation when
-    * the store pins one, else (legacy) the params row. 0 for a store
-    * with no model at all. Only the no-params-table case maps to 0 — a
-    * real read failure PROPAGATES, because defaulting the version on a
-    * transient error would make the fence in [[load]] silently drop
-    * every stamped row (stamps are ≥ 1).
+    * compares append stamps against: the current cut's
+    * `model_generation` pin, or 0 when the cut pins none (a store with
+    * no published model). A failure to read the cut PROPAGATES, because
+    * defaulting the version on a transient error would make the fence
+    * in [[load]] silently drop every stamped row (stamps are ≥ 1).
     */
   def currentModelVersion(spark: SparkSession, root: String): Long =
-    StoreCut.cut(spark, root).flatMap(_.get(GenKey))
-      .getOrElse(paramsGeneration(spark, root))
+    StoreCut.cut(spark, root).flatMap(_.get(GenKey)).getOrElse(0L)
 
   /** The generation in the params TABLE's current row — the MINT source
     * for [[writeModel]] (strictly: the highest generation any writer
@@ -226,15 +210,14 @@ object AnnIndexStore {
     * minting from the manifest would re-issue the orphaned number for a
     * DIFFERENT model — appends never saw the orphan (they resolve
     * through the cut), but two models behind one number is exactly the
-    * fence poison the CAS'd mint exists to prevent.
+    * fence poison the CAS'd mint exists to prevent. Never read for
+    * serving: [[load]] and [[loadModel]] take the generation from the
+    * cut. 0 when the params table has no commits yet.
     */
   private def paramsGeneration(spark: SparkSession, root: String): Long =
-    try {
-      val p = AtomicStore.read(spark, s"$root/params")
-      if (p.columns.contains("model_version"))
-        p.head().getAs[Long]("model_version")
-      else 0L
-    } catch {
+    try AtomicStore.read(spark, s"$root/params").head()
+      .getAs[Long]("model_version")
+    catch {
       case e: IllegalStateException if e.getMessage != null &&
           e.getMessage.contains("no commits") => 0L
     }
@@ -347,26 +330,21 @@ object AnnIndexStore {
     StoreCut.atCut(spark, root)(loadModelPinned(spark, root, _))
 
   private def loadModelPinned(spark: SparkSession, root: String,
-                              pins: Map[String, Long],
-                              strict: Boolean = false): Model = {
-    val p = StoreCut.readPinned(spark, root, "params", pins, strict).head()
+                              pins: Map[String, Long]): Model = {
+    val p = StoreCut.readPinned(spark, root, "params", pins).head()
     Model(
-      StoreCut.readPinned(spark, root, "codebook", pins, strict),
-      StoreCut.readPinned(spark, root, "hyperplanes", pins, strict),
+      StoreCut.readPinned(spark, root, "codebook", pins),
+      StoreCut.readPinned(spark, root, "hyperplanes", pins),
       nprobe = p.getInt(p.fieldIndex("nprobe")),
       numSub = p.getInt(p.fieldIndex("num_sub")),
-      version = pins.get(GenKey).getOrElse(
-        if (p.schema.fieldNames.contains("model_version"))
-          p.getLong(p.fieldIndex("model_version"))
-        else 0L))
+      version = pins.getOrElse(GenKey, 0L))
   }
 
   /** [[loadModel]] at a pinned manifest cut — the model the cut's
-    * per-row tables were encoded under (see [[loadAt]]; strict like it).
+    * per-row tables were encoded under (see [[loadAt]]).
     */
   def loadModelAt(spark: SparkSession, root: String, cutVersion: Long): Model =
-    loadModelPinned(spark, root, StoreCut.cutAt(spark, root, cutVersion),
-      strict = true)
+    loadModelPinned(spark, root, StoreCut.cutAt(spark, root, cutVersion))
 
   private def refreshLeasePath(root: String) = s"$root/.refresh_lease"
 
@@ -398,10 +376,7 @@ object AnnIndexStore {
     * to appenders (the chain-extension check refuses to build on
     * unpublished snapshots). Re-run the refresh to completion; every
     * step is an idempotent snapshot and the re-run's cut adopts only
-    * its own commits. (This replaces the pre-manifest KNOWN RESIDUAL,
-    * where the eight-commit swap could strand tables across two
-    * generations with previously appended rows serving against replaced
-    * centroids.)
+    * its own commits.
     */
   def refreshIndex(root: String, c: Components, m: Model,
                    leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs): Map[String, Long] = {
@@ -520,11 +495,11 @@ object AnnIndexStore {
       // would land a codes batch whose columns merge as nulls into every
       // later read (a silently-degraded ADC scan, not an error). Check
       // the batch's code schema against the stored table's before
-      // committing (modulo the model_version stamp, which is load-side
-      // bookkeeping a pre-stamping store legitimately lacks). sigs gets
-      // the same guard: writeComponents canonicalizes its shape now, but
-      // stores written before that canonicalization may persist extra
-      // columns the appended batches lack.
+      // committing (modulo the model_version stamp: it is load-side
+      // bookkeeping, and a table holding only write()/refreshIndex
+      // snapshot rows has no such column yet). sigs gets the same guard:
+      // writeComponents writes its canonical shape, and a table carrying
+      // any other columns would merge them as nulls into every read.
       val newCodes = Similarity.pqEncode(batch, codebook, m.numSub)
       def requireSchema(batchDf: DataFrame, table: String,
                         why: String): Unit = {

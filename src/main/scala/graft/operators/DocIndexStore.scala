@@ -21,14 +21,15 @@ import graft.sources.{AtomicStore, StoreCut}
   * declaration, published atomically after the table commits. Readers
   * and the append guard resolve through the cut, so a [[write]] that
   * crashes partway (any subset of spec/simhash/minhash landed) leaves
-  * the PREVIOUS cut fully serving — the pre-manifest residue (a
-  * declaration describing rows that never landed, or half a rebuild
-  * visible) is gone; re-run the write to completion and its single cut
-  * publish adopts its own commits. Signatures are pure per-row functions
-  * of the text, so incremental ingest is [[appendSimhash]]/
-  * [[appendMinhash]]: the new batch's signature rows land as an appended
-  * batch — commit bytes scale with the BATCH, never the corpus (the same
-  * write-path contract as the tag log of `TagFamilyStore.commitJob`).
+  * the PREVIOUS cut fully serving — no declaration describing rows that
+  * never landed, no half a rebuild visible; re-run the write to
+  * completion and its single cut publish adopts its own commits. Every
+  * read resolves through a published cut ([[StoreCut.readPinned]]).
+  * Signatures are pure per-row functions of the text, so incremental
+  * ingest is [[appendSimhash]]/[[appendMinhash]]: the new batch's
+  * signature rows land as an appended batch — commit bytes scale with
+  * the BATCH, never the corpus (the same write-path contract as the tag
+  * log of `TagFamilyStore.commitJob`).
   */
 object DocIndexStore {
 
@@ -108,20 +109,16 @@ object DocIndexStore {
   }
 
   /** The persisted signature definition, if the store declares one —
-    * resolved through the manifest cut (so an unpublished rebuild's
-    * declaration is invisible); legacy stores read the spec table
-    * directly. The empty string is the "unspecified" sentinel an
-    * undeclared rebuild writes over a stale declaration — reported as
-    * None.
+    * read only through the manifest cut's `spec` pin, so a declaration
+    * no cut published (an unpublished rebuild's, or a spec table
+    * committed without a cut) is None. The empty string is the
+    * "unspecified" sentinel an undeclared rebuild writes over a stale
+    * declaration — reported as None too.
     */
   def loadSpec(spark: SparkSession, root: String): Option[String] =
     StoreCut.atCut(spark, root) { pins =>
-      if (pins.contains("spec"))
-        Some(StoreCut.readPinned(spark, root, "spec", pins)
-          .head().getString(0))
-      else
-        AtomicStore.currentVersion(spark, s"$root/spec")
-          .map(_ => AtomicStore.read(spark, s"$root/spec").head().getString(0))
+      pins.get("spec").map(_ =>
+        StoreCut.readPinned(spark, root, "spec", pins).head().getString(0))
     }.filter(_.nonEmpty)
 
   /** Reject an append whose signature definition or schema disagrees
@@ -162,14 +159,17 @@ object DocIndexStore {
     }
   }
 
-  /** Load the persisted components at the store's current cut (legacy
-    * stores: each table at its own current version).
+  /** Load the persisted components at the store's current cut. A store
+    * whose cut pins either table not at all (no write or append ever
+    * published it) fails loudly ([[StoreCut.readPinned]]).
     */
   def load(spark: SparkSession, root: String): Components =
-    StoreCut.atCut(spark, root) { pins =>
-      Components(StoreCut.readPinned(spark, root, "simhash", pins),
-        StoreCut.readPinned(spark, root, "minhash", pins))
-    }
+    StoreCut.atCut(spark, root)(pinnedComponents(spark, root, _))
+
+  private def pinnedComponents(spark: SparkSession, root: String,
+                               pins: Map[String, Long]): Components =
+    Components(StoreCut.readPinned(spark, root, "simhash", pins),
+      StoreCut.readPinned(spark, root, "minhash", pins))
 
   /** The current cut version — the [[loadAt]] handle (see
     * [[AnnIndexStore.currentCutVersion]]).
@@ -183,15 +183,11 @@ object DocIndexStore {
     * the table folds' vacuum floor ([[StoreCut.retentionFloor]]) keeps
     * every retained cut's pinned table versions, so the whole retained
     * window is actually loadable, not just the manifests. An aged-out
-    * pin fails loudly (strict) rather than silently serving newer files
-    * under the pinned-cut label.
+    * pin fails loudly rather than silently serving newer files under
+    * the pinned-cut label.
     */
-  def loadAt(spark: SparkSession, root: String, cutVersion: Long): Components = {
-    val pins = StoreCut.cutAt(spark, root, cutVersion)
-    Components(
-      StoreCut.readPinned(spark, root, "simhash", pins, strict = true),
-      StoreCut.readPinned(spark, root, "minhash", pins, strict = true))
-  }
+  def loadAt(spark: SparkSession, root: String, cutVersion: Long): Components =
+    pinnedComponents(spark, root, StoreCut.cutAt(spark, root, cutVersion))
 
   /** Append a new ingest batch's simhash signatures: one atomic commit
     * whose bytes scale with the batch, published into the served cut by

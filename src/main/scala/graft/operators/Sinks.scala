@@ -82,7 +82,7 @@ object Sinks {
     * commit. BigQuery WRITE_TRUNCATE replaces the WHOLE table, which a
     * snapshot commit does without ever deleting the previous copy before
     * the new one is published; the vacuum keeps one previous version for
-    * in-flight readers (as [[graft.sched.ConfigStore.write]] does).
+    * in-flight readers.
     */
   def writeReport(rows: DataFrame, path: String, truncate: Boolean): Unit = {
     val out = withReportPartition(rows)

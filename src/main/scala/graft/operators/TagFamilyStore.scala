@@ -371,39 +371,26 @@ object TagFamilyStore {
 
   // ------------------------------------------------------------- reads
 
-  /** Resolve one part at the CURRENT cut. No pin for the part means no
-    * job ever published it — an existing table underneath is crash
-    * residue, and falling back to its current version (readPinned's
-    * legacy contract, right for pre-manifest index stores) would serve
-    * exactly the orphans this store exists to hide. So: pinned read or
-    * None, never current — which is also why the read is STRICT:
-    * readPinned's non-strict arm handles an aged-out pin by reading
-    * the table's current version, the one fallback this store must
-    * never take (in-protocol it is unreachable anyway — the retention
-    * floor keeps every retained cut's pins resolvable — so strictness
-    * costs nothing and converts a protocol violation into a loud
-    * error). A pin vacuumed between the cut read and the resolve (the
-    * store moved on mid-read) retries once at the freshest cut
-    * ([[StoreCut.atCut]]).
+  /** Resolve one part at the CURRENT cut, or None when no cut pins it —
+    * no job ever published it, and a table underneath is crash residue
+    * that stays unreadable. For the empty-on-absent reads
+    * ([[readTagsOr]], [[readReports]]); the others fail loudly through
+    * [[StoreCut.readPinned]]. A pin vacuumed between the cut read and
+    * the resolve (the store moved on mid-read) retries once at the
+    * freshest cut ([[StoreCut.atCut]]).
     */
   private def pinnedPart(spark: SparkSession, root: String,
                          part: String): Option[DataFrame] =
     StoreCut.atCut(spark, root)(pins => pins.get(part).map(_ =>
-      StoreCut.readPinned(spark, root, part, pins, strict = true)))
-
-  private def noCut(root: String, part: String): Nothing =
-    throw new IllegalStateException(
-      s"TagFamilyStore: no published cut pins '$part' at $root — no job " +
-        "ever committed it (crash residue under the table, if any, is " +
-        "deliberately unreadable)")
+      StoreCut.readPinned(spark, root, part, pins)))
 
   /** The current tag state: latest-wins replay of the cut-pinned tag
     * log ([[TagStore.latestStateOf]] — exactly `applyWithDeletes` in
     * batch order).
     */
   def readTags(spark: SparkSession, root: String): DataFrame =
-    pinnedPart(spark, root, TagsPart).map(TagStore.latestStateOf)
-      .getOrElse(noCut(root, TagsPart))
+    TagStore.latestStateOf(StoreCut.atCut(spark, root)(
+      StoreCut.readPinned(spark, root, TagsPart, _)))
 
   /** One job-consistent view of tags AND history. */
   final case class Family(tags: DataFrame, history: DataFrame)
@@ -416,17 +403,15 @@ object TagFamilyStore {
     * consistent, the PAIR not (the concurrent-reader soak caught
     * exactly that). Here the cut resolves once, each part's file list
     * pins eagerly at construction, and the returned (lazy) frames stay
-    * a consistent pair however late they are collected. Same strict +
-    * one-retry discipline as [[pinnedPart]].
+    * a consistent pair however late they are collected. Same pinned
+    * read and one retry as [[pinnedPart]].
     */
   def readFamily(spark: SparkSession, root: String): Family =
     StoreCut.atCut(spark, root) { pins =>
-      if (!pins.contains(TagsPart)) noCut(root, TagsPart)
-      if (!pins.contains(HistoryPart)) noCut(root, HistoryPart)
       Family(
         TagStore.latestStateOf(
-          StoreCut.readPinned(spark, root, TagsPart, pins, strict = true)),
-        StoreCut.readPinned(spark, root, HistoryPart, pins, strict = true))
+          StoreCut.readPinned(spark, root, TagsPart, pins)),
+        StoreCut.readPinned(spark, root, HistoryPart, pins))
     }
 
   /** [[readTags]], or an empty frame in `schemaLike`'s schema for a
@@ -444,7 +429,8 @@ object TagFamilyStore {
     * any crashed job's).
     */
   def readHistory(spark: SparkSession, root: String): DataFrame =
-    pinnedPart(spark, root, HistoryPart).getOrElse(noCut(root, HistoryPart))
+    StoreCut.atCut(spark, root)(
+      StoreCut.readPinned(spark, root, HistoryPart, _))
 
   /** The cut-pinned report table, empty-on-absent like [[readTagsOr]]
     * (reports are optional per job, so "no job ever passed reports" is
@@ -468,28 +454,24 @@ object TagFamilyStore {
   def currentCutVersion(spark: SparkSession, root: String): Option[Long] =
     StoreCut.cutVersion(spark, root)
 
-  private def strictPartAt(spark: SparkSession, root: String, part: String,
-                           cutVersion: Long): DataFrame = {
-    val pins = StoreCut.cutAt(spark, root, cutVersion)
-    if (!pins.contains(part))
-      throw new IllegalStateException(
-        s"TagFamilyStore: cut v$cutVersion at $root pins no '$part'")
-    StoreCut.readPinned(spark, root, part, pins, strict = true)
-  }
+  private def partAt(spark: SparkSession, root: String, part: String,
+                     cutVersion: Long): DataFrame =
+    StoreCut.readPinned(spark, root, part,
+      StoreCut.cutAt(spark, root, cutVersion))
 
   /** TIME TRAVEL: the tag state exactly as cut `cutVersion` served it —
     * the audit/repro read history could only approximate by replay. An
-    * aged-out pin fails loudly (strict), never silently serves newer
-    * files under the pinned label.
+    * aged-out pin fails loudly, never silently serves newer files under
+    * the pinned label.
     */
   def readTagsAt(spark: SparkSession, root: String,
                  cutVersion: Long): DataFrame =
-    TagStore.latestStateOf(strictPartAt(spark, root, TagsPart, cutVersion))
+    TagStore.latestStateOf(partAt(spark, root, TagsPart, cutVersion))
 
   /** TIME TRAVEL: the history table as cut `cutVersion` pinned it. */
   def readHistoryAt(spark: SparkSession, root: String,
                     cutVersion: Long): DataFrame =
-    strictPartAt(spark, root, HistoryPart, cutVersion)
+    partAt(spark, root, HistoryPart, cutVersion)
 
   // -------------------------------------------------------- porcelain
 

@@ -100,26 +100,6 @@ object ConfigStore {
       coalesce(col("config_status") =!= "INACTIVE", lit(true)))
   }
 
-  /** Persist / recover the store as a full SNAPSHOT (see [[appendDelta]]
-    * for the incremental path). Snapshots go through
-    * [[graft.sources.AtomicStore]]'s manifest commit — a plain
-    * `mode("overwrite")` deletes the old files BEFORE the new ones land,
-    * so a crashed writer destroys the only copy of the store; the
-    * commit-log swap never exposes a partial state.
-    */
-  def write(store: DataFrame, path: String): Unit = {
-    graft.sources.AtomicStore.commitSnapshot(store, path)
-    // bound long-run growth: a caller may snapshot every cycle, and each
-    // snapshot is a full copy of the store — retain the previous version
-    // for in-flight readers, vacuum the rest (the grace window protects
-    // concurrent not-yet-published commits)
-    graft.sources.AtomicStore.vacuum(store.sparkSession, path,
-      keepVersions = 2)
-  }
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    graft.sources.AtomicStore.read(spark, path)
-
   // ------------------------------------------------ append-log persistence
 
   /** APPEND-LOG persistence — the scale path for config/tag state: each

@@ -1043,13 +1043,14 @@ object AtomicStore {
 
   // ------------------------------------------------------------- leases
 
-  /** Default lease TTL, the ONE constant both sides of a lease protocol
-    * share: claimers that don't pick their own TTL, and `leaseHeld`
-    * callers probing a lease file old enough to predate TTL persistence.
-    * A lease claimed with a non-default TTL carries it INSIDE the lease
-    * file (`ttl_ms=` line), and every later check honors the holder's
-    * own TTL — a 60-minute retrain can't lose its exclusion at some
-    * other component's hardcoded 15-minute mark.
+  /** Default lease TTL: the TTL of claimers that don't pick their own.
+    * Every lease carries its holder's TTL INSIDE the lease file
+    * (`ttl_ms=` line, always written by [[claimLease]]), and every later
+    * check honors the holder's own TTL — a 60-minute retrain can't lose
+    * its exclusion at some other component's hardcoded 15-minute mark.
+    * An epoch file without that line (not a claimLease product, e.g. a
+    * crash-residue stub) counts with this TTL in both [[claimLease]] and
+    * [[leaseHeld]], so both sides of the protocol agree on it.
     */
   val DefaultLeaseTtlMs: Long = 15 * 60 * 1000L
 
@@ -1063,9 +1064,8 @@ object AtomicStore {
     * protocol files; listing the lease's PARENT would scale with
     * whatever else shares that directory (on an object store, a LIST of
     * a prefix holding thousands of sibling tables per claim/held
-    * check). A bare file at `L` itself — a lease written by the
-    * pre-epoch protocol, or a test simulating a holder — still counts
-    * as epoch 0.
+    * check). The directory is the lease's only on-disk form: nothing at
+    * `L` itself is ever read or written.
     */
   private def leaseDir(lease: Path) =
     new Path(lease.getParent, lease.getName + ".d")
@@ -1079,10 +1079,7 @@ object AtomicStore {
       try fs.listStatus(leaseDir(lease))
       catch { case _: java.io.FileNotFoundException =>
         Array.empty[org.apache.hadoop.fs.FileStatus] }
-    val bare =
-      try Seq((0L, true, fs.getFileStatus(lease)))
-      catch { case _: java.io.FileNotFoundException => Nil }
-    (bare ++ inDir.toSeq.flatMap { s =>
+    (inDir.toSeq.flatMap { s =>
       val n = s.getPath.getName
       if (n.startsWith("e")) n.drop(1).toLongOption.map((_, true, s))
       else if (n.startsWith("r")) n.drop(1).toLongOption.map((_, false, s))
@@ -1094,7 +1091,7 @@ object AtomicStore {
     * the file), if the file carries one. Read to EOF, not one read()
     * call: a short read (legal for any InputStream, plausible on remote
     * filesystems) could truncate the first line so `ttl_ms=` fails to
-    * parse and the check silently falls back to the caller's TTL —
+    * parse and the check silently falls back to [[DefaultLeaseTtlMs]] —
     * exactly the holder-TTL-ignored bug persistence exists to fix.
     * Lease files are a few hundred bytes by construction.
     */
@@ -1103,7 +1100,7 @@ object AtomicStore {
     // a vanished file is the benign protocol race (the epoch was
     // superseded and GC'd between listing and open — the claim loses at
     // its own CAS/verify anyway); any OTHER read error must NOT map to
-    // None: the None fallback substitutes the CHECKER's TTL, so a
+    // None: the None fallback substitutes the default TTL, so a
     // transient IO hiccup reading a 60-minute holder's lease would let
     // a 15-minute-default claimant break a live lease — two concurrent
     // "exclusive" holders, the exact bug TTL persistence closes. Retry
@@ -1194,7 +1191,8 @@ object AtomicStore {
     val released = before.collect { case (n, false, _) => n }.toSet
     before.filter(_._2).lastOption.foreach { case (n, _, s) =>
       if (!released.contains(n)) {
-        val holderTtl = persistedTtlMs(fs, s.getPath).getOrElse(ttlMs)
+        val holderTtl =
+          persistedTtlMs(fs, s.getPath).getOrElse(DefaultLeaseTtlMs)
         if (System.currentTimeMillis() - s.getModificationTime <= holderTtl)
           busy()
       }
@@ -1265,20 +1263,20 @@ object AtomicStore {
   }
 
   /** Is a live lease present at `leasePath`? Live = the highest-epoch
-    * lease file is younger than its holder's OWN persisted TTL (falling
-    * back to `fallbackTtlMs` for lease files that don't carry one). For
-    * operations that must REFUSE while a lease is held without claiming
-    * it themselves (concurrent appends during an index refresh).
+    * file under `leasePath.d/` is unreleased and younger than its
+    * holder's OWN persisted TTL ([[DefaultLeaseTtlMs]] for an epoch
+    * file that carries none). For operations that must REFUSE while a
+    * lease is held without claiming it themselves (concurrent appends
+    * during an index refresh).
     */
-  def leaseHeld(spark: SparkSession, leasePath: String,
-                fallbackTtlMs: Long = DefaultLeaseTtlMs): Boolean = {
+  def leaseHeld(spark: SparkSession, leasePath: String): Boolean = {
     val lease = new Path(leasePath)
     val fs = lease.getFileSystem(hconf(spark))
     val files = leaseFiles(fs, lease)
     val released = files.collect { case (n, false, _) => n }.toSet
     files.filter(_._2).lastOption.exists { case (n, _, s) =>
       !released.contains(n) && {
-        val ttl = persistedTtlMs(fs, s.getPath).getOrElse(fallbackTtlMs)
+        val ttl = persistedTtlMs(fs, s.getPath).getOrElse(DefaultLeaseTtlMs)
         System.currentTimeMillis() - s.getModificationTime <= ttl
       }
     }
@@ -1292,54 +1290,47 @@ object AtomicStore {
     * never regressing (see [[claimLease]]) — freed paths let a stalled
     * claimant re-claim a released number while a later claimant claims
     * above it, and both would believe they hold. The pair is swept by
-    * the next successful claim's GC. Falls back to delete for a path
-    * that doesn't parse as an epoch file (never produced by claimLease;
-    * degrades to the weaker pre-witness behavior instead of leaking a
-    * file that looks held).
+    * the next successful claim's GC. Only claimLease's own epoch paths
+    * (`<lease>.d/e<n>`) are accepted; any other path is a caller bug and
+    * throws `IllegalArgumentException` without touching the filesystem.
     */
   def releaseLease(spark: SparkSession, lease: Path): Unit = {
     val fs = lease.getFileSystem(hconf(spark))
-    val name = lease.getName
-    val epoch =
-      if (name.startsWith("e") && lease.getParent.getName.endsWith(".d"))
-        name.drop(1).toLongOption
-      else None
-    epoch match {
-      case Some(n) =>
-        val marker = new Path(lease.getParent, s"r$n")
-        try fs match {
-          case _: org.apache.hadoop.fs.LocalFileSystem =>
-            // one atomic syscall, NO side effects: the checksummed
-            // local create writes-and-chmods a `.crc` sibling AFTER the
-            // marker is visible, and a claimant that saw the marker,
-            // claimed above it, and GC'd it races those trailing ops
-            // into spurious IOExceptions (observed in the contention
-            // soak). Once created the release stands; a later delete of
-            // the marker is the GC doing its job.
-            java.nio.file.Files.createFile(
-              java.nio.file.Paths.get(fs.makeQualified(marker).toUri))
-          case _ =>
-            FileContext.getFileContext(marker.toUri, hconf(spark))
-              .create(marker,
-                java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-                Options.CreateOpts.createParent())
-              .close()
-        } catch {
-          // an existing marker already records the release — idempotent
-          case _: java.nio.file.FileAlreadyExistsException => ()
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-          case e: java.io.IOException =>
-            // benign iff the release was OBSERVED: the marker is there,
-            // or someone already claimed a higher number (only possible
-            // having seen this release or this holder's crash — either
-            // way the hold is over)
-            val logical = new Path(lease.getParent.getParent,
-              lease.getParent.getName.dropRight(2))
-            if (!fs.exists(marker) &&
-                !leaseFiles(fs, logical).exists(_._1 > n))
-              throw e
-        }
-      case None => fs.delete(lease, false)
+    val n = Some(lease.getName)
+      .filter(_.startsWith("e") && lease.getParent.getName.endsWith(".d"))
+      .flatMap(_.drop(1).toLongOption)
+      .getOrElse(throw new IllegalArgumentException(
+        s"releaseLease: $lease is not a claimLease epoch path (<lease>.d/e<n>)"))
+    val marker = new Path(lease.getParent, s"r$n")
+    try fs match {
+      case _: org.apache.hadoop.fs.LocalFileSystem =>
+        // one atomic syscall, NO side effects: the checksummed local
+        // create writes-and-chmods a `.crc` sibling AFTER the marker is
+        // visible, and a claimant that saw the marker, claimed above it,
+        // and GC'd it races those trailing ops into spurious IOExceptions
+        // (observed in the contention soak). Once created the release
+        // stands; a later delete of the marker is the GC doing its job.
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(fs.makeQualified(marker).toUri))
+      case _ =>
+        FileContext.getFileContext(marker.toUri, hconf(spark))
+          .create(marker,
+            java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
+            Options.CreateOpts.createParent())
+          .close()
+    } catch {
+      // an existing marker already records the release — idempotent
+      case _: java.nio.file.FileAlreadyExistsException => ()
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
+      case e: java.io.IOException =>
+        // benign iff the release was OBSERVED: the marker is there, or
+        // someone already claimed a higher number (only possible having
+        // seen this release or this holder's crash — either way the hold
+        // is over)
+        val logical = new Path(lease.getParent.getParent,
+          lease.getParent.getName.dropRight(2))
+        if (!fs.exists(marker) && !leaseFiles(fs, logical).exists(_._1 > n))
+          throw e
     }
   }
 

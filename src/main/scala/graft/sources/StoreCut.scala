@@ -16,7 +16,9 @@ import graft.obs.Signals
   *
   *  - TORN READS are unrepresentable: [[readPinned]] resolves each table
   *    at the cut's pinned version, so a load racing a swap sees either
-  *    the whole old cut or the whole new one.
+  *    the whole old cut or the whole new one. It is the only read mode:
+  *    a part no cut pins, or a pin that aged out, fails loudly — no
+  *    reader ever falls back to a table's current version.
   *  - INTERRUPTED SWAPS serve the previous cut: a writer crashing
   *    anywhere between its table commits and its cut publish leaves
   *    partial commits that no reader resolves; re-running the
@@ -76,10 +78,11 @@ object StoreCut {
   /** Run `read` against the store's current cut (`Map.empty` when the
     * store has none). A pinned table version vacuumed between the cut
     * read and the resolve means the store moved on mid-read: the cut is
-    * re-resolved and `read` re-run ONCE ([[readPinned]]'s own fallback
-    * covers a single non-strict table aging out; this covers the whole
-    * cut, strict reads included — their failure's cause chain carries
-    * the race). A second race, or any other failure, propagates.
+    * re-resolved and `read` re-run ONCE — the one recovery a reader
+    * gets ([[readPinned]] itself never falls back; its aged-out error
+    * carries the race in its cause chain). A second race, or any other
+    * failure, propagates: a pin vacuumed while the cut did NOT move
+    * fails the re-run the same way, loudly.
     */
   def atCut[T](spark: SparkSession, root: String)(
       read: Map[String, Long] => T): T = {
@@ -109,43 +112,37 @@ object StoreCut {
                     expectedBase: Option[Long]): Option[Long] =
     AtomicStore.advanceKvIfBase(spark, manifestRoot(root), pins, expectedBase)
 
-  /** Read one component at its cut-pinned version; keys the cut does not
-    * pin (legacy stores mid-upgrade) read at current.
-    *
-    * `strict` governs a pin whose table manifest aged past the vacuum
-    * retention window: a CURRENT-cut reader (strict = false) falls back
-    * to the table's current version — the only resolvable truth for a
-    * reader that stale, and for the live cut "current" is at worst a
-    * few in-flight commits ahead of the pin. A TIME-TRAVEL reader
-    * (strict = true) FAILS LOUDLY instead: silently serving newer files
-    * under a pinned-cut label would be exactly the
-    * wrong-data-without-an-error state loadAt promises away.
+  /** Read one component at its cut-pinned version — the only way a
+    * cut-governed store reads a component. A part the cut does not pin
+    * was never published (no cut, or only crash residue under the
+    * table) and throws, naming the root and the part. A pin whose table
+    * version aged past the vacuum retention window throws too: serving
+    * the table's newer files under the cut's label would be exactly the
+    * wrong-data-without-an-error state the cut exists to exclude. A
+    * current-cut reader whose pin was vacuumed because the store moved
+    * on mid-read recovers through [[atCut]]'s one re-resolve.
     */
   def readPinned(spark: SparkSession, root: String, part: String,
-                 pins: Map[String, Long],
-                 strict: Boolean = false): DataFrame =
-    pins.get(part) match {
-      case Some(v) =>
-        // this guard covers the EAGER resolution (the version manifest's
-        // open); the returned frame is lazy, so a vacuum racing the
-        // caller's ACTION surfaces as a task-level failure instead —
-        // bounded by the vacuum grace window (dir reclamation is
-        // anchored at the moment the last referencing manifest died, so
-        // a reader that resolved an existing manifest has the full
-        // window to finish its scan)
-        try AtomicStore.readAt(spark, s"$root/$part", v)
-        catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
-          if (strict)
-            throw new IllegalStateException(
-              s"pinned read of $root/$part at v$v failed — the cut aged " +
-                "out of the vacuum retention window (its table version " +
-                "was reclaimed). Pin a newer cut, or retain more history " +
-                "(compact keepVersions / grace) if time-travel reads this " +
-                "old are needed", e)
-          else AtomicStore.read(spark, s"$root/$part")
-        }
-      case None => AtomicStore.read(spark, s"$root/$part")
+                 pins: Map[String, Long]): DataFrame = {
+    val v = pins.getOrElse(part, throw new IllegalStateException(
+      s"$root: no published cut pins '$part' — the store never published " +
+        "it (any table underneath is unpublished crash residue)"))
+    // this guard covers the EAGER resolution (the version manifest's
+    // open); the returned frame is lazy, so a vacuum racing the caller's
+    // ACTION surfaces as a task-level failure instead — bounded by the
+    // vacuum grace window (dir reclamation is anchored at the moment the
+    // last referencing manifest died, so a reader that resolved an
+    // existing manifest has the full window to finish its scan)
+    try AtomicStore.readAt(spark, s"$root/$part", v)
+    catch { case e: Throwable if AtomicStore.isVacuumRace(e) =>
+      throw new IllegalStateException(
+        s"pinned read of $root/$part at v$v failed — the cut aged " +
+          "out of the vacuum retention window (its table version " +
+          "was reclaimed). Pin a newer cut, or retain more history " +
+          "(compact keepVersions / grace) if time-travel reads this " +
+          "old are needed", e)
     }
+  }
 
   /** Is version `v` of `table` an append-extension of cut pin `pin` —
     * every pinned data dir still listed at `v`, or the chain was

@@ -257,7 +257,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       AnnIndexStore.appendVectors(root, sEmb(Seq(2L)))
     }
-    assert(e.getMessage.contains("no commits"),
+    assert(e.getMessage.contains(s"$root: no published cut pins 'params'"),
       s"unexpected failure shape: ${e.getMessage}")
   }
 
@@ -596,40 +596,69 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(stamps("assigned") === Set(3L))
   }
 
-  test("a manifest-less store loads every table at current, stamped rows fenced by the params generation") {
-    // a store written table by table before the manifest existed: no
-    // cut, so load reads each component at its current version and the
-    // fence compares stamps against the params row's generation
+  test("a first writeModel crashing before its cut publish stays invisible: appends refuse, generation 0, load serves the written vectors") {
+    // write publishes a model-less cut; the first writeModel then
+    // commits codebook/hyperplanes/params (generation 1 in the params
+    // TABLE) and dies before its cut publish. No cut pins the model, so
+    // nothing may encode against it or serve under its generation.
+    val root = java.nio.file.Files.createTempDirectory("graft_annidx_wm0")
+      .toString
+    val written = (0L until 6L).toSeq
+    AnnIndexStore.write(root, sComponents(sEmb(written)))
+    val (_, orphanGen) = AnnIndexStore.writeModelVersions(root, sModel)
+    assert(orphanGen === 1L)
+    val e = intercept[IllegalStateException] {
+      AnnIndexStore.appendVectors(root, sEmb(Seq(100L)))
+    }
+    assert(e.getMessage.contains("no published cut pins 'params'"),
+      e.getMessage)
+    assert(AnnIndexStore.currentModelVersion(spark, root) === 0L)
+    val loaded = AnnIndexStore.load(spark, root)
+    assert(loaded.assigned.columns.toSeq === Seq("vec_id", "centroid_id"))
+    assert(setOf(loaded.assigned) ===
+      setOf(sComponents(sEmb(written)).assigned))
+    assert(setOf(loaded.sigs) === setOf(sComponents(sEmb(written)).sigs))
+    // a stamped batch under the orphan's generation, landed below the
+    // cut, is fenced out as well: the served generation is the cut's (0)
+    graft.sources.AtomicStore.commitAppend(
+      Similarity.ivfAssign(sEmb(Seq(101L)), sCents)
+        .select("vec_id", "centroid_id")
+        .withColumn("model_version", lit(orphanGen)), s"$root/assigned")
+    val pins = graft.sources.StoreCut.cut(spark, root).get
+    graft.sources.StoreCut.advance(spark, root,
+      Map("assigned" -> (pins("assigned") + 1)))
+    assert(AnnIndexStore.load(spark, root).assigned.select("vec_id")
+      .collect().map(_.getLong(0)).toSet === written.toSet)
+    // re-running the model write to completion repairs: appends flow
+    AnnIndexStore.writeModel(root, sModel)
+    assert(AnnIndexStore.currentModelVersion(spark, root) === 2L)
+    AnnIndexStore.appendVectors(root, sEmb(Seq(7L)))
+    assert(AnnIndexStore.load(spark, root).assigned.select("vec_id")
+      .collect().map(_.getLong(0)).toSet === written.toSet + 7L)
+  }
+
+  test("a store with no cut fails loudly on load and loadModel instead of reading tables at current") {
     import spark.implicits._
     val store = graft.sources.AtomicStore
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_nocut")
       .toString
     val base = sComponents(sEmb((0L until 6L).toSeq))
+    // every table committed, no cut ever published
     store.commitSnapshot(base.centroids, s"$root/centroids")
     store.commitSnapshot(base.assigned, s"$root/assigned")
     store.commitSnapshot(base.assignedMulti, s"$root/assigned_multi")
     store.commitSnapshot(base.codes, s"$root/codes")
     store.commitSnapshot(base.sigs, s"$root/sigs")
-    store.commitSnapshot(Seq((2, 2, 2L)).toDF("nprobe", "num_sub",
+    store.commitSnapshot(sCodebookDf, s"$root/codebook")
+    store.commitSnapshot(sHyperplanes, s"$root/hyperplanes")
+    store.commitSnapshot(Seq((2, 2, 1L)).toDF("nprobe", "num_sub",
       "model_version"), s"$root/params")
-    // one batch stamped with the params generation, one stale straggler
-    def stampedBatch(id: Long, gen: Long) =
-      Similarity.ivfAssign(sEmb(Seq(id)), sCents)
-        .select("vec_id", "centroid_id")
-        .withColumn("model_version", lit(gen))
-    store.commitAppend(stampedBatch(100L, 2L), s"$root/assigned")
-    store.commitAppend(stampedBatch(101L, 1L), s"$root/assigned")
     assert(graft.sources.StoreCut.cut(spark, root).isEmpty)
-
-    val loaded = AnnIndexStore.load(spark, root)
-    assert(loaded.assigned.columns.toSeq === Seq("vec_id", "centroid_id"))
-    assert(loaded.assigned.select("vec_id").as[Long].collect().toSet ===
-      ((0L until 6L).toSet + 100L))
-    assert(setOf(loaded.centroids) === setOf(base.centroids))
-    assert(setOf(loaded.sigs) === setOf(base.sigs))
-    assert(AnnIndexStore.currentModelVersion(spark, root) === 2L)
-    assert(graft.sources.StoreCut.cut(spark, root).isEmpty,
-      "a load must not publish a cut")
+    val e = intercept[IllegalStateException](AnnIndexStore.load(spark, root))
+    assert(e.getMessage.contains(s"$root: no published cut pins"),
+      e.getMessage)
+    intercept[IllegalStateException](AnnIndexStore.loadModel(spark, root))
+    assert(AnnIndexStore.currentModelVersion(spark, root) === 0L)
   }
 
   test("a bare write() on a model-ful store is refused — refreshIndex is the swap") {
@@ -902,8 +931,8 @@ class AnnIndexStoreSpec extends SparkSpec {
     // loadAt's contract: an aged-out cut must never silently serve the
     // table's current files under the pinned-cut label — a recall eval
     // would report current-index numbers as the pinned cut's with no
-    // error. The strict read names the failure; the live (non-strict)
-    // load keeps its benign current fallback.
+    // error. The pinned read names the failure; the live load, whose
+    // cut pins the surviving versions, keeps serving.
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_ttold")
       .toString
     AnnIndexStore.write(root, sComponents(sEmb(Seq(0L, 1L))))
@@ -927,9 +956,9 @@ class AnnIndexStoreSpec extends SparkSpec {
   test("stacked crashed writeModels cannot get the SERVED model version vacuumed (pin-aware retention)") {
     // two writeModels crash before their cut publish: the model tables
     // sit two versions ahead of the cut. A keep-2 maintenance vacuum
-    // would reclaim the PINNED (served!) codebook version — and the
-    // current-fallback read would then silently serve an orphaned
-    // codebook. compact's retention reaches back to the cut's pin.
+    // would reclaim the PINNED (served!) codebook version, and the
+    // model would stop loading. compact's retention reaches back to the
+    // cut's pin.
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_stack")
       .toString
     AnnIndexStore.write(root, sComponents(sEmb(Seq(0L, 1L))))

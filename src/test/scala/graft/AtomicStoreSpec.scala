@@ -444,7 +444,7 @@ class AtomicStoreSpec extends SparkSpec {
     // re-claim after release works; the crashed-holder path breaks
     val l2 = AtomicStore.claimLease(spark, lp, 60000L, "t")
     fs.setTimes(l2, System.currentTimeMillis() - 120000L, -1L)
-    assert(!AtomicStore.leaseHeld(spark, lp, fallbackTtlMs = 60000L))
+    assert(!AtomicStore.leaseHeld(spark, lp))
     val l3 = AtomicStore.claimLease(spark, lp, 60000L, "t")
     assert(fs.exists(l3))
     assert(!fs.exists(l2), "superseded crashed epoch must be GC'd")
@@ -528,8 +528,6 @@ class AtomicStoreSpec extends SparkSpec {
     fs.setTimes(l, System.currentTimeMillis() - 20 * 60 * 1000L, -1L)
     assert(AtomicStore.leaseHeld(spark, lp),
       "default-TTL checker must honor the holder's persisted 60-min TTL")
-    assert(AtomicStore.leaseHeld(spark, lp, fallbackTtlMs = 1000L),
-      "persisted TTL must override even a 1s fallback")
     intercept[Busy] {
       AtomicStore.claimLease(spark, lp, ttlMs = 1000L, "impatient claimant")
     }
@@ -613,20 +611,33 @@ class AtomicStoreSpec extends SparkSpec {
     AtomicStore.releaseLease(spark, l3)
   }
 
-  test("lease: a legacy bare lease file blocks while fresh, breaks once stale") {
-    // pre-epoch leases (and tests that simulate holders with a bare
-    // create) sit at the logical path itself — epoch 0 of the protocol
+  test("lease: an epoch file without a ttl_ms line counts with the default TTL on both sides; release takes only epoch paths") {
+    // claimLease always persists its TTL; a stub epoch file (crash
+    // residue, never a claimLease product) carries none. Checker and
+    // claimant must agree on its deadline: the protocol default, never
+    // the claimant's own (shorter) TTL.
     val lp = s"${root()}/.lease"
     val fs = leaseFs(lp)
-    val bare = new org.apache.hadoop.fs.Path(lp)
-    fs.create(bare, false).close()
+    val stub = new org.apache.hadoop.fs.Path(s"$lp.d", "e1")
+    fs.create(stub, false).close()
+    fs.setTimes(stub, System.currentTimeMillis() - 10 * 60 * 1000L, -1L)
     assert(AtomicStore.leaseHeld(spark, lp))
-    intercept[Busy] { AtomicStore.claimLease(spark, lp, 60000L, "t") }
-    fs.setTimes(bare, System.currentTimeMillis() - 10000L, -1L)
-    assert(!AtomicStore.leaseHeld(spark, lp, fallbackTtlMs = 1000L))
-    val l = AtomicStore.claimLease(spark, lp, ttlMs = 1000L, "t")
-    assert(!fs.exists(bare), "superseded bare lease must be GC'd")
+    intercept[Busy] {
+      AtomicStore.claimLease(spark, lp, ttlMs = 1000L, "impatient claimant")
+    }
+    fs.setTimes(stub, System.currentTimeMillis() -
+      AtomicStore.DefaultLeaseTtlMs - 60000L, -1L)
+    assert(!AtomicStore.leaseHeld(spark, lp))
+    val l = AtomicStore.claimLease(spark, lp, ttlMs = 60000L, "t")
+    assert(l.getName === "e2")
+    assert(!fs.exists(stub), "the superseded stub is GC'd")
+    // nothing at the logical path itself is a lease: release refuses it
+    intercept[IllegalArgumentException] {
+      AtomicStore.releaseLease(spark, new org.apache.hadoop.fs.Path(lp))
+    }
+    assert(AtomicStore.leaseHeld(spark, lp))
     AtomicStore.releaseLease(spark, l)
+    assert(!AtomicStore.leaseHeld(spark, lp))
   }
 
   test("lease GC sweeps aged .tmp_ orphans, never a fresh mid-flight tmp") {

@@ -207,13 +207,13 @@ class ConfigStoreSpec extends SparkSpec {
     assert(AtomicStore.currentVersion(spark, empty).isEmpty)
   }
 
-  test("write/read round-trips the store as a lake table") {
+  test("appendDelta/readLatest round-trips the store with a deterministic content_md5") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cfg").toString
-    ConfigStore.write(ConfigStore.withIdentity(store), dir)
-    val back = ConfigStore.read(spark, dir)
+    ConfigStore.appendDelta(ConfigStore.withIdentity(store), dir, batchId = 1L)
+    val back = ConfigStore.readLatest(spark, dir)
     assert(back.count() === 2)
     assert(back.columns.contains("content_md5"))
-    // identity is deterministic across write/read
+    // identity is deterministic across persist/read
     val md5s = ConfigStore.withIdentity(store)
       .select("config_uuid", "content_md5").as[(String, String)].collect().toMap
     val backM = back.select("config_uuid", "content_md5")

@@ -480,6 +480,32 @@ class DocIndexStoreSpec extends SparkSpec {
       === (newIds :+ 12L).toSet)
   }
 
+  test("a spec table no cut publishes leaves loadSpec at None") {
+    // the declaration is read only through the cut's `spec` pin: a spec
+    // commit that never reached a cut (a crashed declared rebuild of an
+    // undeclared store, or a bare table with no manifest at all) must
+    // neither describe the served rows nor gate appends
+    import spark.implicits._
+    val store = graft.sources.AtomicStore
+    val bare = java.nio.file.Files.createTempDirectory("graft_docidx_nocut")
+      .toString
+    store.commitSnapshot(Seq("specX").toDF("sig_spec"), s"$bare/spec")
+    assert(graft.sources.StoreCut.cut(spark, bare).isEmpty)
+    assert(DocIndexStore.loadSpec(spark, bare) === None)
+
+    val root = java.nio.file.Files.createTempDirectory("graft_docidx_spec0")
+      .toString
+    val sim = Seq((0L, 7L), (1L, 14L)).toDF("doc_id", "simhash")
+    val mh = Seq((0L, 0L, 1L, 0L, 0L)).toDF(
+      "doc_id", "mh_0", "mh_1", "band_0", "band_1")
+    DocIndexStore.write(root, DocIndexStore.Components(sim, mh))
+    store.commitSnapshot(Seq("specX").toDF("sig_spec"), s"$root/spec")
+    assert(DocIndexStore.loadSpec(spark, root) === None)
+    // the undeclared store keeps accepting undeclared appends
+    DocIndexStore.appendSimhash(root, Seq((2L, 21L)).toDF("doc_id", "simhash"))
+    assert(DocIndexStore.load(spark, root).simhash.count() === 3L)
+  }
+
   test("loadAt pins a signature cut bit-identically across later appends and rebuilds") {
     import spark.implicits._
     def sim(ids: Seq[Long]) =

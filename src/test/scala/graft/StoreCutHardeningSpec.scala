@@ -105,6 +105,43 @@ class StoreCutHardeningSpec extends SparkSpec {
     assert(calls === 1)
   }
 
+  test("readPinned on a part the cut does not pin throws, naming the root and the part") {
+    val root = freshRoot("cut_unpinned")
+    // a committed table the cut never published: crash residue
+    AtomicStore.commitSnapshot(rows(0, 3), s"$root/t")
+    val e = intercept[IllegalStateException](
+      StoreCut.readPinned(spark, root, "t", Map("other" -> 0L)))
+    assert(e.getMessage.contains(root) && e.getMessage.contains("'t'"),
+      e.getMessage)
+    // the same through atCut on a store with no cut at all
+    val e2 = intercept[IllegalStateException](
+      StoreCut.atCut(spark, root)(StoreCut.readPinned(spark, root, "t", _)))
+    assert(e2.getMessage.contains(s"$root: no published cut pins 't'"),
+      e2.getMessage)
+  }
+
+  test("atCut: a current-cut read whose pin was vacuumed while the cut did not move fails loudly") {
+    val root = freshRoot("cut_stale_pin")
+    val table = s"$root/t"
+    val v0 = AtomicStore.commitSnapshot(rows(0, 3), table)
+    StoreCut.advance(spark, root, Map("t" -> v0))
+    // the table moves on below an unchanged cut (commits nobody
+    // published), and an aggressive vacuum reclaims the pinned version
+    AtomicStore.commitSnapshot(rows(3, 6), table)
+    AtomicStore.commitSnapshot(rows(6, 9), table)
+    AtomicStore.vacuum(spark, table, keepVersions = 1, graceMs = 0L)
+    var calls = 0
+    val e = intercept[IllegalStateException] {
+      StoreCut.atCut(spark, root) { pins =>
+        calls += 1
+        StoreCut.readPinned(spark, root, "t", pins)
+      }
+    }
+    assert(e.getMessage.contains("aged out"), e.getMessage)
+    assert(calls === 2, "one re-resolve at the same cut, then the failure")
+    assert(StoreCut.cut(spark, root).get === Map("t" -> v0))
+  }
+
   test("bare AtomicStore.compact on a cut-governed table refuses with the foldAndAdvance remedy") {
     val root = freshRoot("cut_governed")
     val table = s"$root/t"
