@@ -68,7 +68,8 @@ object SparkWork {
   * `BENCH_PROFILE.json`. The store layer records:
   *
   *  - [[SwallowedAdvances]], per store root: a best-effort cut advance
-  *    given up after a durable commit (count; last error as the note).
+  *    or post-commit fold given up after a durable commit (count; last
+  *    error as the note).
   *  - [[GovernProbes]] / [[GovernProbeFailures]], per table: governance
   *    probes `AtomicStore.compact`'s guard paid (a warm guard pays none)
   *    / that failed twice, so the guard failed open for that call.

@@ -7,7 +7,7 @@ import graft.obs.Signals
 import graft.sources.{AtomicStore, StoreCut}
 
 /** The CONSISTENT-CUT form of the tag-engine write family — tags,
-  * history and (optionally) reports for one job published under ONE
+  * history and (optionally) reports for one commit published under ONE
   * store-level manifest ([[StoreCut]]), the same shape that closed the
   * index stores' torn-swap class in round 17.
   *
@@ -24,44 +24,48 @@ import graft.sources.{AtomicStore, StoreCut}
   * Layout under a family root:
   * {{{
   *   <root>/tags       # TagStore delta-log batches (__op/__batch rows)
-  *   <root>/history    # day-partitioned history appends
+  *   <root>/history    # history appends (event_date column derived)
   *   <root>/reports    # export appends (only when jobs pass reports)
-  *   <root>/manifest   # the StoreCut — ONE cut pins all parts per job
-  *   <root>/_job_lease # single-writer job commits
+  *   <root>/manifest   # the StoreCut — ONE cut pins all parts per commit
+  *   <root>/_job_lease # single-writer commits
   * }}}
   *
-  * Protocol per job ([[commitJob]], under the job lease): commit the tag
-  * delta batch, commit the history batch, commit the report batch, then
-  * publish ONE cut pinning all of them. Readers ([[readTags]]/
+  * Protocol per commit ([[commitTick]], under the job lease; a job is a
+  * one-element tick): write one batch per part — the tags change set of
+  * every job folded in job order, the union of their history rows, the
+  * union of their report rows — publish each part's table version once,
+  * then publish ONE cut pinning all of them. Readers ([[readTags]]/
   * [[readHistory]]/[[readReports]]) resolve every part through the cut,
-  * so a crash at ANY inter-commit point leaves the previous cut fully
-  * serving — none of the crashed job's commits visible in ANY table.
+  * so a crash at ANY point before the cut publish leaves the previous
+  * cut fully serving — none of the crashed commit's batches visible in
+  * ANY table.
   *
   * Recovery is TRUNCATION, not adoption — the one place this store must
   * differ from the index stores' append semantics: an index append is a
   * self-contained batch ("delayed, not lost" — the next fold adopts it),
-  * but a tag-family batch is HALF A JOB. Adopting a crashed job's
+  * but a tag-family batch is HALF A COMMIT. Adopting a crashed commit's
   * history batch without its tag merge is exactly the phantom-history
   * state the cut exists to kill. So every commit here resolves its
   * parent file set from the CUT PIN, never from the table's current
   * version: a crashed predecessor's orphan suffix is simply not listed
-  * by the next job's manifest (its dirs age out under vacuum), and the
-  * re-run of a crashed job lands its rows exactly once. For the same
-  * reason the maintenance folds ([[compact]]) materialize from the pin,
-  * not from current — never through [[StoreCut.foldAndAdvance]], whose
-  * adopt-the-chain contract is right for index stores and wrong here.
+  * by the next commit's manifest (its dirs age out under vacuum), and
+  * the re-run of a crashed commit lands its rows exactly once. For the
+  * same reason the maintenance folds ([[compact]]) materialize from the
+  * pin, not from current — never through [[StoreCut.foldAndAdvance]],
+  * whose adopt-the-chain contract is right for index stores and wrong
+  * here.
   *
   * Scale notes (the 100 TB write family): tags take the delta-log form —
-  * bytes per job scale with the BATCH (upserts + tombstones,
-  * [[TagStore.mergeDelta]]), never the tag lake — history and
-  * reports are plain appends, and the cut publish is one metadata file
-  * (one LIST + one create + one atomic claim). The job lease serializes
-  * only the COMMIT section (metadata ops + batch-sized writes), not
-  * evaluation; config evaluation runs before the lease in
-  * [[commitJob]]'s callers. The evaluated terminals ([[commitComputed]]
-  * per job, [[runTick]] per scheduler tick) are the one exception: they
-  * evaluate under the lease so the `overwrite=false` read and the commit
-  * see one serialization point.
+  * bytes per commit scale with the BATCH (upserts + tombstones,
+  * [[TagStore.tickDelta]]), never the tag lake — history and reports are
+  * plain appends, and a commit costs one data write and one table
+  * publish per part plus one cut publish, whatever its job count. The
+  * job lease serializes only the COMMIT section (metadata ops +
+  * batch-sized writes), not evaluation; config evaluation runs before
+  * the lease in [[commitTick]]'s callers. The evaluated terminals
+  * ([[commitComputed]] per job, [[runTick]] per scheduler tick) are the
+  * one exception: they evaluate under the lease so the `overwrite=false`
+  * read and the commit see one serialization point.
   */
 object TagFamilyStore {
 
@@ -78,15 +82,15 @@ object TagFamilyStore {
   private def leasePath(root: String) = s"$root/_job_lease"
 
   /** TEST-ONLY crash seam, the family sibling of
-    * `AnnIndexStore.testMidSwapHook`: invoked with the stage name after
-    * each table commit inside [[commitJob]] ("tags", "history",
-    * "reports") and at the tick path's inter-commit points
-    * ("tags@`i`" / "job@`i`" per config index — [[commitTick]]), before
-    * the single cut publish. SCOPED PER STORE ROOT (round-18 advice): a
-    * JVM-global hook set by one oracle query would crash unrelated
-    * family commits if the driver ever ran queries concurrently — here a
-    * hook only ever fires for the root that installed it. Production
-    * never sets one.
+    * `AnnIndexStore.testMidSwapHook`: invoked with the stage name inside
+    * every commit before its single cut publish — "tags" after the tags
+    * table publishes, "history" after the history table publishes, and
+    * "reports" once every part has published (whether or not the commit
+    * carries reports: the widest tear window). SCOPED PER STORE ROOT
+    * (round-18 advice): a JVM-global hook set by one oracle query would
+    * crash unrelated family commits if the driver ever ran queries
+    * concurrently — here a hook only ever fires for the root that
+    * installed it. Production never sets one.
     */
   private val testHooks =
     new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
@@ -112,9 +116,8 @@ object TagFamilyStore {
     * encoding), its history rows (must carry `event_time`; the
     * `event_date` day column is derived here by
     * [[Sinks.withHistoryPartition]]) and optionally its report rows (must
-    * carry `export_time`). All parts land as separate table commits and
-    * become visible together via ONE cut publish — or not at all: a
-    * one-job [[commitTick]].
+    * carry `export_time`). All parts become visible together via ONE cut
+    * publish — or not at all: a one-job [[commitTick]].
     *
     * `incoming` is consumed more than once (the delta build and the
     * tombstone split) — callers producing it from an expensive
@@ -127,12 +130,11 @@ object TagFamilyStore {
     commitTick(spark, root, Seq(JobBatch("job", incoming, history, reports)),
       leaseTtlMs, compactAboveBatches)
 
-  /** One job's write family in batch form — the unit [[commitTick]]
-    * chains: the tag MERGE change set (`incoming`,
-    * [[TagStore.mergeDelta]]'s encoding), the history rows
+  /** One job's share of a [[commitTick]]: the tag MERGE change set
+    * (`incoming`, [[TagStore.mergeDelta]]'s encoding), the history rows
     * (`event_time`-bearing) and optional report rows (`export_time`).
-    * `jobId` labels crash-spec hooks and errors only; history identity
-    * stays in the rows (`job_uuid`).
+    * `jobId` only labels the job for its caller; history identity stays
+    * in the rows (`job_uuid`).
     */
   final case class JobBatch(jobId: String, incoming: DataFrame,
                             history: DataFrame,
@@ -140,30 +142,23 @@ object TagFamilyStore {
 
   /** ATOMIC WHOLE-TICK commit — the scheduler-tick grain of
     * [[commitJob]] (round-18 verdict #1): N due configs' evaluated
-    * batches land as chained per-config table commits and become
-    * visible via ONE cut publish, or not at all. A crash at ANY
-    * inter-commit point — including BETWEEN configs, the tear
-    * [[graft.streaming.Streams.schedulerTick]]'s reference analogue
-    * (`/scheduled_auto_updates` launching N tasks, main.py:3075–3110)
-    * simply lives with — leaves the pre-tick cut serving in every
-    * table: configs that already committed inside the crashed tick are
-    * orphan suffixes the re-run truncates, so the re-run lands every
-    * config exactly once.
+    * batches become visible via ONE cut publish, or not at all. The
+    * reference launches one independent task per due config
+    * (`/scheduled_auto_updates`, main.py:3075–3110), so a crashed tick
+    * there leaves the configs that finished applied; here a crash at any
+    * point before the cut publish leaves the pre-tick cut serving in
+    * every table, and the re-run lands every config exactly once.
     *
-    * Chaining, not merging: config `i`'s batch manifests list the cut
-    * pin's files plus configs `0..i`'s batches, so per-config batch
-    * identity (history attribution, latest-wins order — a later config
-    * in the tick wins conflicts, the deterministic rendering of
-    * `TagEngine.perConfigIncoming`'s intra-tick isolation) is preserved
-    * while the tick's visibility stays all-or-nothing. Scale: the tick
-    * publish is ONE metadata file regardless of N; per-config cost is
-    * the same 2–3 batch commits a lone [[commitJob]] pays; the final cut
-    * CAS is the only coordination point.
+    * The tick writes ONE batch per part, whatever N: the jobs' tag
+    * change sets folded in job order ([[TagStore.tickDelta]] — a later
+    * config in the tick wins conflicts, the deterministic rendering of
+    * `TagEngine.perConfigIncoming`'s intra-tick isolation), the union of
+    * their history rows (attribution stays in each row's `job_uuid`) and,
+    * when any job carries reports, the union of their report rows. The
+    * batches are written concurrently, each part's table version is
+    * published once, then the one CAS'd cut publish makes them visible.
     *
-    * Returns the final per-part versions plus the published cut
-    * (`"manifest"`). Crash hooks fire as `"<part>"` and `"<part>@<i>"`
-    * after each table commit and `"job@<i>"` after each config's full
-    * batch set (the inter-config points).
+    * Returns the published part versions plus the cut (`"manifest"`).
     */
   def commitTick(spark: SparkSession, root: String, jobs: Seq[JobBatch],
                  leaseTtlMs: Long = AtomicStore.DefaultLeaseTtlMs,
@@ -188,158 +183,103 @@ object TagFamilyStore {
       s"TagFamilyStore: idempotency-pin key '$k' collides with a family " +
         "part / manifest name — pick a key outside " +
         ReservedPinKeys.mkString("{", ", ", "}")))
+    val grain = if (jobs.sizeIs > 1) "tick" else "job"
     val baseCut = StoreCut.cutVersion(spark, root)
     val pins = baseCut.map(v => StoreCut.cutAt(spark, root, v))
       .getOrElse(Map.empty)
     checkOrphanBound(spark, root, pins)
-    // running parent file lists per part: the cut pin's files, extended
-    // by each committed batch of THIS tick — never the table's current
-    // chain (the truncation rule: a crashed predecessor's suffix is not
-    // a parent)
-    var parents: Map[String, Seq[String]] =
-      Seq(TagsPart, HistoryPart, ReportsPart).map { p =>
-        p -> pins.get(p).toSeq
-          .flatMap(pv => AtomicStore.filesAt(spark, s"$root/$p", pv))
-          .map(x => new org.apache.hadoop.fs.Path(x).getName)
-      }.toMap
-    var versions = Map.empty[String, Long]
-    // per-part commit counts of THIS attempt — on a crash anywhere below
-    // they become the attempt's expected orphan contribution
-    val attemptCommits = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    // ---- §2.6 overlap: pre-write every batch, publish strictly in order.
-    // A data dir is INVISIBLE until its manifest publishes (writeData is
-    // protocol step 1, visibility is step 2) — so the tick's batch writes,
-    // the only data-sized Spark jobs in the commit section, are
-    // independent of each other and of the publish order the crash specs
-    // pin. The round-20 tick path ran them back-to-back: N configs × 2–3
-    // parts of sequential write-job latency per tick. Here they fan out
-    // concurrently at tick entry; the PUBLISHES — the visibility points
-    // the hooks bracket — stay chained in exactly the old order.
-    // Versions are PREDICTED from one entry-time resolve per part (under
-    // the job lease this tick is the only publisher, so part p's j-th
-    // commit lands at base(p)+1+j); the consume step verifies the
-    // prediction before each publish, and a miss — only an
-    // out-of-protocol writer can cause one — fails the tick like a lost
-    // cut CAS, never publishing a wrong __batch stamp.
+    def union(dfs: Seq[DataFrame]): DataFrame =
+      dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    val batches: Seq[(String, Long => DataFrame)] = Seq(
+      TagsPart -> ((v: Long) => TagStore.tickDelta(jobs.map(_.incoming))
+        .withColumn("__batch", lit(v))),
+      HistoryPart -> ((_: Long) =>
+        Sinks.withHistoryPartition(union(jobs.map(_.history))))) ++
+      Option.when(jobs.exists(_.reports.nonEmpty))(ReportsPart ->
+        ((_: Long) => Sinks.withReportPartition(union(jobs.flatMap(_.reports)))))
+    // each part publishes once, at the version after the one current at
+    // entry: under the job lease this commit is the only publisher, so
+    // the tags batch can carry its __batch stamp before it is written.
+    // The data writes are the only data-sized Spark jobs in the commit
+    // section and a dir stays invisible until its manifest publishes, so
+    // they run concurrently; the publishes follow in part order
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    final case class Planned(part: String, predictedV: Long,
-                             fut: Future[String]) {
-      @volatile var consumed = false
+    // (every version resolves before any write starts, so a failed
+    // resolve leaves no write running)
+    val writes = batches.map { case (part, mk) =>
+      (part, mk, AtomicStore.currentVersion(spark, s"$root/$part")
+        .getOrElse(-1L) + 1)
+    }.map { case (part, mk, v) =>
+      (part, v, Future(blocking(AtomicStore.writeData(mk(v), s"$root/$part"))))
     }
-    val nextV = scala.collection.mutable.Map.empty[String, Long]
-    def plan(part: String, mk: Long => DataFrame): Planned = {
-      val v = nextV.getOrElse(part,
-        AtomicStore.currentVersion(spark, s"$root/$part").getOrElse(-1L) + 1)
-      nextV(part) = v + 1
-      Planned(part, v,
-        Future(blocking(AtomicStore.writeData(mk(v), s"$root/$part"))))
-    }
-    val planned: Seq[Seq[Planned]] = jobs.map { job =>
-      Seq(plan(TagsPart, v =>
-          TagStore.mergeDelta(job.incoming).withColumn("__batch", lit(v))),
-        plan(HistoryPart, _ => Sinks.withHistoryPartition(job.history))) ++
-        job.reports.map(r =>
-          plan(ReportsPart, _ => Sinks.withReportPartition(r)))
-    }
-    // a crashed/aborted tick must not leak background write jobs into
-    // whatever runs next, nor leave known-unpublished dirs for vacuum:
-    // await every unconsumed write and reclaim it before rethrowing —
-    // the post-crash table state is then byte-identical to the old
-    // sequential path's (published versions only)
-    def reclaimUnconsumed(): Unit =
-      planned.flatten.filterNot(_.consumed).foreach { p =>
-        try AtomicStore.reclaimData(spark, s"$root/${p.part}",
-          Await.result(p.fut, Duration.Inf))
+    var versions = Map.empty[String, Long]
+    val awaited = scala.collection.mutable.Set.empty[String]
+    // a crashed/aborted commit must not leak background write jobs into
+    // whatever runs next, nor leave known-unpublished dirs for vacuum —
+    // and every part it published is the orphan suffix the next commit
+    // truncates: record it so the entry-time bound check can tell
+    // in-protocol residue from a leak (an out-of-protocol writer, a
+    // chain parented on current instead of the pin)
+    def abandon(): Unit = {
+      writes.filterNot(w => awaited(w._1)).foreach { case (part, _, fut) =>
+        try AtomicStore.reclaimData(spark, s"$root/$part",
+          Await.result(fut, Duration.Inf))
         catch { case scala.util.control.NonFatal(_) => () }
       }
+      versions.keys.foreach(p =>
+        expectedOrphans.merge(s"$root/$p", 1L, (a, b) => a + b))
+    }
     try {
-    jobs.zipWithIndex.foreach { case (job, i) =>
-      planned(i).foreach { p =>
-        val table = s"$root/${p.part}"
+      writes.foreach { case (part, v, fut) =>
+        val table = s"$root/$part"
         val rel =
-          try Await.result(p.fut, Duration.Inf)
-          finally p.consumed = true
-        val actualNext =
-          AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1
-        if (actualNext != p.predictedV ||
-            !AtomicStore.publish(spark, table,
-              parents(p.part) :+ rel, p.predictedV)) {
-          // under the job lease nothing else publishes: a missed
-          // prediction is a writer outside the family protocol. Abort
-          // the tick (the catch below reclaims and records the orphans);
+          try Await.result(fut, Duration.Inf)
+          finally awaited += part
+        // parents: the cut pin's files — never the table's current chain
+        // (the truncation rule: a crashed predecessor's suffix is not a
+        // parent)
+        val parents = pins.get(part).toSeq
+          .flatMap(pv => AtomicStore.filesAt(spark, table, pv))
+          .map(x => new org.apache.hadoop.fs.Path(x).getName)
+        if (AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1 != v ||
+            !AtomicStore.publish(spark, table, parents :+ rel, v)) {
+          // under the job lease nothing else publishes: a moved version
+          // is a writer outside the family protocol. Abort the commit;
           // the re-run truncates back to the pin and lands once
           AtomicStore.reclaimData(spark, table, rel)
           throw new java.util.ConcurrentModificationException(
-            s"TagFamilyStore: $table could not publish its predicted " +
-              s"v${p.predictedV} while this " +
-              s"${if (jobs.sizeIs > 1) "tick" else "job"} held the job " +
-              "lease — another writer is committing to it outside the " +
-              "family protocol. These commits are orphaned (the next " +
-              "commit truncates them); re-run")
+            s"TagFamilyStore: $table could not publish v$v while this " +
+              s"$grain held the job lease — another writer is committing " +
+              "to it outside the family protocol. These commits are " +
+              "orphaned (the next commit truncates them); re-run")
         }
-        parents += p.part -> (parents(p.part) :+ rel)
-        versions += p.part -> p.predictedV
-        attemptCommits(p.part) += 1
-        // hooks fire at the same post-publish points as always
-        p.part match {
-          case TagsPart =>
-            fireHook(root, TagsPart); fireHook(root, s"$TagsPart@$i")
-          case HistoryPart =>
-            fireHook(root, HistoryPart); fireHook(root, s"$HistoryPart@$i")
-          case _ => ()
-        }
+        versions += part -> v
+        if (part != ReportsPart) fireHook(root, part)
       }
-      // the reports hook fires whether or not this job carries reports:
-      // for a report-less job it is the "both tables committed, the cut
-      // publish never reached" point — the widest tear window, and the
-      // stage name the crash specs/gate already key on
-      fireHook(root, ReportsPart); fireHook(root, s"$ReportsPart@$i")
-      fireHook(root, s"job@$i")
-    }
-    } catch { case t: Throwable =>
-      reclaimUnconsumed()
-      // this attempt is now a crashed tick: its committed versions are
-      // the orphan suffix the next commit will truncate — record them so
-      // the entry-time bound check above can tell in-protocol residue
-      // from a leak (an out-of-protocol writer, a chain parented on
-      // current instead of the pin)
-      attemptCommits.foreach { case (p, n) =>
-        expectedOrphans.merge(s"$root/$p", n, (a, b) => a + b)
-      }
-      throw t
-    }
-    // THE atomicity point: one cut pinning every part's LAST committed
-    // version — CAS'd against the cut version the whole tick's parents
-    // derive from. Mandatory (not best-effort): before it, the tick
-    // never happened; a failure here is a crashed tick whose re-run
-    // truncates all of these commits and re-lands them. The CAS closes
-    // the fenced-zombie hole the lease alone cannot: a holder stalled
-    // past its TTL (GC pause, VM freeze) whose lease a successor
-    // legally broke would otherwise blind-merge table versions whose
-    // chains were parented on the PRE-successor pins — numerically
-    // higher, so max-merge would adopt them and drop the successor's
-    // published batches from the served cut. Losing the CAS instead
-    // orphans this zombie's commits (the next tick truncates them) and
-    // fails loudly with the re-run remedy.
+      fireHook(root, ReportsPart)
+    } catch { case t: Throwable => abandon(); throw t }
+    // THE atomicity point: one cut pinning every part's committed version
+    // — CAS'd against the cut version the commit's parents derive from.
+    // Mandatory (not best-effort): before it, the commit never happened;
+    // a failure here is a crashed commit whose re-run truncates these
+    // versions and re-lands them. The CAS closes the fenced-zombie hole
+    // the lease alone cannot: a holder stalled past its TTL (GC pause, VM
+    // freeze) whose lease a successor legally broke would otherwise
+    // blind-merge table versions parented on the PRE-successor pins —
+    // numerically higher, so max-merge would adopt them and drop the
+    // successor's published batches from the served cut. Losing the CAS
+    // instead orphans this zombie's commits (the next commit truncates
+    // them) and fails loudly with the re-run remedy.
     val cutV =
       try StoreCut.advanceIfBase(spark, root, versions ++ extraPins, baseCut)
         .getOrElse(throw new java.util.ConcurrentModificationException(
-          s"TagFamilyStore: the cut at $root moved while this " +
-            s"${if (jobs.sizeIs > 1) "tick" else "job"} was committing — " +
-            "its lease was broken (holder stalled past the TTL?) and " +
-            "another publisher advanced. These commits are orphaned (the " +
-            "next commit truncates them); re-run"))
-      catch { case t: Throwable =>
-        // a failed/lost publish orphans the whole attempt — same
-        // accounting as a crash inside the commit loop
-        attemptCommits.foreach { case (p, n) =>
-          expectedOrphans.merge(s"$root/$p", n, (a, b) => a + b)
-        }
-        throw t
-      }
+          s"TagFamilyStore: the cut at $root moved while this $grain was " +
+            "committing — its lease was broken (holder stalled past the " +
+            "TTL?) and another publisher advanced. These commits are " +
+            "orphaned (the next commit truncates them); re-run"))
+      catch { case t: Throwable => abandon(); throw t }
     // published: the pin now covers every version this attempt wrote AND
     // everything beneath; any crash residue beneath the new pin is no
     // longer a suffix, so the root's expectation resets — and the root
@@ -347,17 +287,17 @@ object TagFamilyStore {
     Seq(TagsPart, HistoryPart, ReportsPart)
       .foreach(p => expectedOrphans.remove(s"$root/$p"))
     seenRoots.add(root)
-    // post-publish maintenance, best-effort (the tick is committed AND
-    // published — a maintenance hiccup must not fail it): fold any part
-    // whose pinned chain outgrew the dir threshold, so a long-lived
-    // store's read cost stays flat in JOB count instead of decaying one
-    // manifest + one small batch dir per job
+    // post-publish maintenance, best-effort (the commit is published — a
+    // maintenance hiccup must not fail it, but it is counted): fold any
+    // part whose pinned chain outgrew the dir threshold, so a long-lived
+    // store's read cost stays flat in commit count
     if (compactAboveBatches > 0)
       try versions.foreach { case (part, v) =>
         if (AtomicStore.filesAt(spark, s"$root/$part", v)
             .lengthCompare(compactAboveBatches) > 0)
           foldPartLocked(spark, root, part)
-      } catch { case scala.util.control.NonFatal(_) =>
+      } catch { case scala.util.control.NonFatal(e) =>
+        StoreCut.recordSwallow(root, e)
         // a crashed fold may have published its fold version without
         // advancing the cut — one more in-protocol orphan per part
         Seq(TagsPart, HistoryPart, ReportsPart)
@@ -642,9 +582,9 @@ object TagFamilyStore {
     * for every due config, each config's merge set derived against the
     * SAME pre-tick cut-pinned tag state — the intra-tick isolation
     * documented there) committed through [[commitTick]]'s
-    * one-cut-per-tick publish. A crash anywhere — mid-config or between
-    * configs — leaves the pre-tick state serving everywhere; the re-run
-    * lands every config exactly once.
+    * one-cut-per-tick publish. A crash anywhere before the cut publish
+    * leaves the pre-tick state serving everywhere; the re-run lands every
+    * config exactly once.
     *
     * Returns the versions and the committed [[JobBatch]]es — each
     * batch's `incoming` is localCheckpoint'd, so a caller can roll the
@@ -695,8 +635,7 @@ object TagFamilyStore {
     * flatten — and history/reports must never record values that differ
     * from the batch actually merged. The checkpoints are independent
     * READS of pre-commit state, so they run concurrently
-    * ([[Par.ckptAll]]); the sequential section stays the chained
-    * per-part commits the protocol demands.
+    * ([[Par.ckptAll]]).
     */
   private def commitEvaluated(spark: SparkSession, root: String,
                               eventTime: Column, leaseTtlMs: Long,

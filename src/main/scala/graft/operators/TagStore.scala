@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * they run anywhere parquet does.
   *
   * Persisting tag state is [[TagFamilyStore]]'s job: it appends the
-  * [[mergeDelta]] change set of each job to a cut-pinned log and reads
-  * the state back through [[latestStateOf]] — the two log functions
-  * below are the encoding that store shares with these transforms.
+  * [[tickDelta]] change set of each commit (its jobs' [[mergeDelta]]
+  * sets, folded in job order) to a cut-pinned log and reads the state
+  * back through [[latestStateOf]] — the log functions below are the
+  * encoding that store shares with these transforms.
   *
   * Scale notes: both joins are equi-joins on the tag key; with the tags table
   * bucketed by `asset_uri` the shuffle on the existing side disappears, and
@@ -51,18 +52,21 @@ object TagStore {
 
   private val TagInstanceKey = Seq("asset_uri", "column", "template_id")
 
+  /** An empty field value (NULL counts as empty). */
+  private def emptyValue = coalesce(col("field_value"), lit("")) === ""
+
   /** The delete-when-all-empty TRIGGER (DataCatalogController.py:
     * 1581–1592), as one definition: the tag-instance keys of `incoming`
-    * whose every field value is empty (NULL counts as empty). Shared by
+    * whose every field value is [[emptyValue]]. Shared by
     * [[dropAllEmptyTags]], [[applyWithDeletes]] and the delta-log
     * [[mergeDelta]], so the reference-semantics rule cannot drift
-    * between the in-memory transforms and the persisted log.
+    * between the in-memory transforms and the persisted log
+    * ([[tickDelta]] evaluates the same predicate per job in a window).
     */
   private def allEmptyTagKeys(incoming: DataFrame): DataFrame =
     incoming
       .groupBy(TagInstanceKey.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-           count(when(coalesce(col("field_value"), lit("")) === "", 1)).as("__ne"))
+      .agg(count(lit(1)).as("__n"), count(when(emptyValue, 1)).as("__ne"))
       .filter(col("__n") === col("__ne"))
       .select(TagInstanceKey.map(col): _*)
 
@@ -101,9 +105,9 @@ object TagStore {
 
   /** The CHANGE SET one merge appends to the delta log: upsert rows
     * plus one tombstone per all-empty incoming tag instance — the
-    * delete-when-all-empty trigger as log rows. The tag-family store's
-    * job commit ([[TagFamilyStore]]) stamps it with the batch version;
-    * persisted bytes scale with the BATCH, never the tag lake.
+    * delete-when-all-empty trigger as log rows. The upserts and the
+    * tombstones of one merge always touch disjoint tag instances.
+    * Persisted bytes scale with the BATCH, never the tag lake.
     */
   private[operators] def mergeDelta(incoming: DataFrame): DataFrame = {
     val emptyKeys = allEmptyTagKeys(incoming)
@@ -117,12 +121,61 @@ object TagStore {
     upserts.unionByName(deletes)
   }
 
+  /** The ONE log batch a family commit of `incoming.size` jobs appends:
+    * the jobs' [[mergeDelta]] change sets folded so that the batch reads
+    * as the jobs applied in order. Per job ordinal, an upsert is dropped
+    * when a later job upserts the same field key or tombstones its
+    * instance, and a tombstone is dropped when a later job tombstones the
+    * same instance. What survives is at most one tombstone per instance
+    * (the last one) plus the upserts after it, which [[latestStateOf]]
+    * serves over that tombstone. One job is exactly [[mergeDelta]].
+    *
+    * Several jobs take one shuffle: the union is hash-partitioned by tag
+    * instance once, and every per-job and per-tick decision is a window
+    * within that partitioning — [[mergeDelta]]'s trigger included (an
+    * instance whose every field in a job is empty is that job's
+    * tombstone), so the batch costs one shuffle stage and one write
+    * whatever the job count.
+    */
+  private[operators] def tickDelta(incoming: Seq[DataFrame]): DataFrame =
+    if (incoming.sizeIs == 1) mergeDelta(incoming.head)
+    else {
+      import org.apache.spark.sql.expressions.Window
+      val inst = TagInstanceKey.map(col)
+      val job = col("__job")
+      val del = col("__del")
+      val byJob = Window.partitionBy(inst :+ job: _*).orderBy("field_id")
+      val wholeJob = byJob.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val blanked = Set("field_id", "field_type", "field_value")
+      incoming.zipWithIndex
+        .map { case (inc, i) => inc.withColumn("__job", lit(i)) }
+        .reduce(_ unionByName _)
+        .repartition(inst: _*)
+        .withColumn("__del", count(lit(1)).over(wholeJob) ===
+          count(when(emptyValue, 1)).over(wholeJob))
+        .withColumn("__rn", row_number().over(byJob))
+        .withColumn("__last_del",
+          max(when(del, job)).over(Window.partitionBy(inst: _*)))
+        .withColumn("__last_up",
+          max(when(!del, job)).over(Window.partitionBy(keyCols.map(col): _*)))
+        .filter(when(del, job === col("__last_del") && col("__rn") === 1)
+          .otherwise(job === col("__last_up") &&
+            coalesce(col("__last_del") < job, lit(true))))
+        .select(incoming.head.columns.toIndexedSeq.map(c =>
+          if (blanked(c)) when(del, lit("")).otherwise(col(c)).as(c)
+          else col(c)) :+
+          when(del, lit("delete_tag")).otherwise(lit("upsert")).as("__op"): _*)
+    }
+
   /** Latest-wins state over a [[mergeDelta]] log, whichever resolved
     * view of it the caller pinned (the family store's current, time-travel
     * and fold reads): per field key the newest upsert wins; a tag
-    * instance's newest tombstone hides every field row at or before it
-    * (later upserts resurrect the tag — exactly [[applyWithDeletes]]
-    * replayed in batch order, which AtomicStoreSpec pins by equivalence).
+    * instance's newest tombstone hides every field row of an EARLIER
+    * batch (upserts of its own or a later batch resurrect the tag —
+    * exactly [[applyWithDeletes]] replayed in batch order, which
+    * AtomicStoreSpec pins by equivalence). A [[tickDelta]] batch may carry
+    * an instance's tombstone beside upserts a later job made to it.
     */
   private[operators] def latestStateOf(log: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -136,7 +189,7 @@ object TagStore {
       .withColumn("__rn", row_number().over(wk))
       .filter(col("__rn") === 1)
       .join(delB, TagInstanceKey, "left")
-      .filter(col("__del_b").isNull || col("__batch") > col("__del_b"))
+      .filter(col("__del_b").isNull || col("__batch") >= col("__del_b"))
       .select(dataCols.toIndexedSeq.map(col): _*)
   }
 }

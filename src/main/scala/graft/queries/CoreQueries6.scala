@@ -164,13 +164,13 @@ object CoreQueries6 {
   // --------------- whole-tick atomicity (q55, round 19)
 
   /** The scheduler-tick grain of q53: tick 1 (TWO configs) commits
-    * under ONE cut; tick 2 (two configs) crashes BETWEEN its configs —
-    * config 0's tags AND history fully landed, config 1 never ran —
-    * which is exactly the tear `/scheduled_auto_updates` lives with
-    * (main.py:3075–3110: N independent tasks, no tick boundary). The
-    * served state after the crash must equal tick 1 EXACTLY (the
-    * landed config 0 is invisible: tick atomicity, not job atomicity),
-    * and the re-run must land BOTH configs exactly once.
+    * under ONE cut; tick 2 (two configs) crashes after its tags AND
+    * history tables published, before its cut publish. In the
+    * reference a tick is N independent tasks with no tick boundary
+    * (`/scheduled_auto_updates`, main.py:3075–3110), so a crash there
+    * leaves the finished configs applied. The served state after the
+    * crash must equal tick 1 EXACTLY (tick atomicity, not job
+    * atomicity), and the re-run must land BOTH configs exactly once.
     */
   def q55TickAtomicity(spark: SparkSession, dir: String): DataFrame =
     CoreQueries.withTempDir(spark, "graft_q55") { rootPath =>
@@ -188,9 +188,9 @@ object CoreQueries6 {
           mkHistory(spark, "t1-s0", Seq("a/orders"))),
         JobBatch("s1", mkIncoming(spark, Seq(("a/region", "n_rows", "5"))),
           mkHistory(spark, "t1-s1", Seq("a/region")))))
-      // the crash: after config 0's full batch set, before config 1
+      // the crash: both configs' tags and history published, no cut
       TagFamilyStore.setTestMidJobHook(root, s =>
-        if (s == "job@0") throw new RuntimeException("injected tick crash"))
+        if (s == "history") throw new RuntimeException("injected tick crash"))
       try {
         TagFamilyStore.commitTick(spark, root, tick2)
         throw new IllegalStateException("q55: the injection must fire")
@@ -313,7 +313,7 @@ object CoreQueries6 {
     * ([[graft.streaming.Streams.schedulerTickCommit]]): the rollup must
     * equal the pure-transform tick's EXACTLY (q40's oracle, verbatim)
     * while the tags+history land under ONE cut. Adversarial by
-    * construction: the FIRST attempt is crashed between its configs
+    * construction: the FIRST attempt is crashed before its cut publish
     * (the q55 injection through the real scheduler path), so the
     * emitted rollup comes from the RE-RUN — wrong truncation would
     * double cA's history/tags and a leaked first attempt would shift
@@ -334,7 +334,7 @@ object CoreQueries6 {
         CoreQueries5.tickFields,
         eventTime = to_timestamp(lit("2026-01-05 00:00:00")))
       TagFamilyStore.setTestMidJobHook(root, s =>
-        if (s == "job@0") throw new RuntimeException("injected tick crash"))
+        if (s == "history") throw new RuntimeException("injected tick crash"))
       try {
         // the commit section runs eagerly inside schedulerTickCommit,
         // so the injection fires during tick() itself — no action needed
@@ -378,13 +378,13 @@ object CoreQueries6 {
     * [[graft.streaming.Streams.schedulerTickCommit]], so each due
     * config's A12 report rows ([[graft.operators.TagEngine.reportRowsFor]],
     * apply_export_config's shape, DataCatalogController.py:1139–1196)
-    * land as the THIRD part of its batch under the tick's ONE cut. Tick 1
+    * land in the tick's reports part under the tick's ONE cut. Tick 1
     * commits; tick 2 (due again after the advance merges back) is
-    * crash-injected TWICE — first at `reports@0` (config 0's tags,
-    * history AND reports all committed, mid-tick) then at `job@1` (every
-    * config committed, the cut publish never reached, the widest window)
-    * — and all THREE tables must serve tick 1's state exactly; the
-    * third attempt lands every config's three parts exactly once.
+    * crash-injected TWICE — first at `history` (tags and history
+    * published, reports not) then at `reports` (all three parts
+    * published, the cut publish never reached, the widest window) — and
+    * all THREE tables must serve tick 1's state exactly; the third
+    * attempt lands every config's three parts exactly once.
     */
   def q58TickReports(spark: SparkSession, dir: String): DataFrame = {
     graft.Lake.registerAll(spark, dir)
@@ -414,8 +414,8 @@ object CoreQueries6 {
               if e.getMessage == "injected tick crash" => ()
         } finally TagFamilyStore.clearTestMidJobHook(root)
       }
-      crashedTick("reports@0") // mid-tick: config 0 fully landed
-      crashedTick("job@1")     // all configs landed, cut never published
+      crashedTick("history") // tags + history published, reports not
+      crashedTick("reports") // every part published, cut never published
       def reports() = TagFamilyStore.readReports(spark, root,
         graft.operators.TagEngine.reportRowsFor(
           mkIncoming(spark, Seq.empty),

@@ -281,8 +281,10 @@ object AtomicStore {
     */
   private[graft] val FoldPrefix = "f_"
 
-  /** TEST-ONLY seam for the CAS commits: invoked after the base check and
-    * the batch's data write, immediately before the manifest publish.
+  /** TEST-ONLY seam for the CAS commits and the family fold
+    * (`StoreCut.fold`'s truncate-to-pin form): invoked after the base
+    * check and the batch's data write, immediately before the manifest
+    * publish.
     * IngestRaceSpec reaches the publish-race loser branch stochastically
     * (two real writers); this hook lets AtomicStoreSpec land a racing
     * winner at exactly the lost-race instant, pinning the loser's

@@ -343,6 +343,7 @@ object StoreCut {
         val v = AtomicStore.currentVersion(spark, table).getOrElse(-1L) + 1
         val rel = AtomicStore.writeData(reduce(pinned, v), table,
           AtomicStore.FoldPrefix)
+        AtomicStore.testPrePublishHook()
         if (AtomicStore.publish(spark, table, Seq(rel), v)) {
           // CAS'd adoption, same zombie argument as the family job
           // publish: the fold materialized from the pin read at THIS
@@ -386,23 +387,23 @@ object StoreCut {
     folded.getOrElse(v)
   }
 
-  /** OPS SIGNAL for the best-effort publication paths: a swallowed cut
-    * advance is correct (the batch is durably committed and adopted by
-    * the next append/fold) but would otherwise be INVISIBLE — a store
-    * whose every advance fails persistently (an IAM break, a throttle
-    * storm, an out-of-band manifest-dir deletion) would silently lag its
-    * cut forever. Each abandoned publication is counted per root under
-    * `Signals.SwallowedAdvances` with its error as the note, and logs
-    * one stderr line.
+  /** OPS SIGNAL for the best-effort steps after a durable commit: a
+    * swallowed cut advance or post-commit fold is correct (the batch is
+    * durably committed; the next append/fold adopts or re-folds it) but
+    * would otherwise be INVISIBLE — a store whose every advance fails
+    * persistently (an IAM break, a throttle storm, an out-of-band
+    * manifest-dir deletion) would silently lag its cut forever. Each
+    * abandoned step is counted per root under `Signals.SwallowedAdvances`
+    * with its error as the note, and logs one stderr line.
     */
-  private def recordSwallow(root: String, e: Throwable): Unit = {
+  private[graft] def recordSwallow(root: String, e: Throwable): Unit = {
     val n = Signals.count(Signals.SwallowedAdvances, root)
     val what = s"${e.getClass.getSimpleName}: " +
       Option(e.getMessage).getOrElse("").take(200)
     Signals.note(Signals.SwallowedAdvances, root, what)
-    System.err.println(s"[storecut] swallowed best-effort cut advance " +
-      s"(#$n at this root) — the committed batch stays " +
-      s"unpublished until the next append/fold adopts it: $root: $what")
+    System.err.println(s"[storecut] swallowed best-effort post-commit " +
+      s"step (#$n at this root) — the commit itself landed; the next " +
+      s"append/fold catches up: $root: $what")
   }
 
   /** [[advance]] with bounded retries, swallowing (but counting — see

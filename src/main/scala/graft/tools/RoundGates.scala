@@ -73,9 +73,9 @@ object RoundGates {
       // pinned cut time-travels across the fold (see TagFamilyCrash)
       Gate("tag_family_crash", "graft.tools.TagFamilyCrash",
         Seq(sfDir, "6", "50")),
-      // whole-TICK crash at inter-config points under latency (round
-      // 19): a tick of 4 configs killed between configs and after its
-      // last history commit — the WHOLE tick (landed configs included)
+      // whole-TICK crash before the cut publish under latency: a tick
+      // of 4 configs killed after its tags publish and after its
+      // history publish — the WHOLE tick (published batches included)
       // must stay invisible, re-runs land every config exactly once,
       // final == crash-free replay, pinned cut survives the fold (see
       // TagTickScale)

@@ -10,24 +10,23 @@ import graft.operators.TagFamilyStore.JobBatch
   *
   * `crash` regime: `waves` ticks of `n` lake-derived configs each land
   * through the REAL [[TagFamilyStore.commitTick]] path under SlowFs
-  * latency; two mid-run ticks are killed at INTER-CONFIG points (after
-  * config n/2's full batch set; after the LAST config's history commit
-  * — every table of every config committed, the single cut publish
-  * never reached). PASS requires: after each crash the served tags AND
-  * history equal the pre-tick state row-for-row with the cut version
-  * unchanged (the whole tick invisible, landed configs included); the
+  * latency; two mid-run ticks are killed before their cut publish (at
+  * `tags`: the tick's tags batch published, its history not; at
+  * `history`: both tables published, the single cut publish never
+  * reached). PASS requires: after each crash the served tags AND history
+  * equal the pre-tick state row-for-row with the cut version unchanged
+  * (the whole tick invisible, its published batches included); the
   * re-run lands every config exactly once; the final store equals a
   * crash-free replay of the same ticks; and a cut pinned at tick-1's
   * boundary still time-travels bit-identically after every later tick
   * and a full fold.
   *
-  * `ladder` regime: the SCALING.md evidence that the one-cut-per-tick
-  * publish stays METADATA-SIZED as n grows — per-tick commit wall at
-  * n ∈ {1, 4, 16} configs vs the same configs landed as n separate
-  * `commitJob` calls (which pay a lease claim + a cut publish EACH).
-  * Per-config overhead of the tick form must fall toward the 2-commit
-  * floor as n grows; the gap to the per-job form is the saved
-  * (n−1) × (lease + cut-publish) metadata ops.
+  * `ladder` regime: the SCALING.md evidence that a tick's commit stays
+  * METADATA-SIZED as n grows — per-tick commit wall at n ∈ {1, 4, 16}
+  * configs vs the same configs landed as n separate `commitJob` calls
+  * (which pay two data writes, two table publishes, a lease claim and a
+  * cut publish EACH). The tick pays those once whatever n, so its
+  * per-config overhead must fall as n grows.
   *
   * {{{
   * runMain graft.tools.TagTickScale <sfDir> [waves] [n] [opLatencyMs] [crash|ladder]
@@ -91,8 +90,8 @@ object TagTickScale {
     val cleanRoot = java.nio.file.Files.createTempDirectory("graft_tick_c")
       .toString
     val crashWaves = Map(
-      waves / 2 -> s"job@${n / 2}",           // between configs
-      waves / 2 + 1 -> s"history@${n - 1}")   // everything committed
+      waves / 2 -> "tags",         // the tags batch published, history not
+      waves / 2 + 1 -> "history")  // both tables published, no cut
     var cut1 = -1L
     var pinnedTags: DataFrame = null
     var crashesOk = true
@@ -172,9 +171,9 @@ object TagTickScale {
   }
 
   /** Per-tick commit wall at growing n, vs n separate commitJob calls:
-    * the per-config metadata overhead of the tick form must FALL with n
-    * (one lease + one cut publish amortized), while the per-job form
-    * pays both per config.
+    * the per-config overhead of the tick form must FALL with n (one
+    * write and publish per part, one lease and one cut publish
+    * amortized), while the per-job form pays them all per config.
     */
   private def ladder(spark: SparkSession, orders: DataFrame): Unit = {
     def mkInc(tag: String): DataFrame =

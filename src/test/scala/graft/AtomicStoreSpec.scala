@@ -218,6 +218,27 @@ class AtomicStoreSpec extends SparkSpec {
     assert(state(TagFamilyStore.readTags(spark, r)) === snap)
   }
 
+  test("delta-log merge of four jobs in ONE commitTick == in-order snapshot replay, in one batch") {
+    val r = root()
+    // the same merge sequence as above, committed as one tick: the one
+    // tags batch must read as the four jobs applied in job order
+    val batches = Seq(
+      tags("a" -> "1", "b" -> "2"),
+      tags("a" -> "9"),
+      tags("b" -> ""),
+      tags("b" -> "back", "c" -> "3"))
+    TagFamilyStore.commitTick(spark, r, batches.zipWithIndex.map {
+      case (b, i) => TagFamilyStore.JobBatch(s"j$i", b, hist(b))
+    })
+    val snap = state(batches.foldLeft(tags())(TagStore.applyWithDeletes))
+    assert(snap === Set("a" -> "9", "b" -> "back", "c" -> "3"))
+    assert(state(TagFamilyStore.readTags(spark, r)) === snap)
+    val fs = new org.apache.hadoop.fs.Path(r).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(
+      new org.apache.hadoop.fs.Path(s"$r/tags", "data")).length === 1)
+  }
+
   test("read merges schemas across append batches (columns never vanish)") {
     // commitAppend imposes no schema check, so later waves may carry
     // columns earlier batches lack; a sampled-footer read would drop

@@ -284,14 +284,38 @@ class TagFamilyStoreSpec extends SparkSpec {
       .as[String].collect().toSet === (1 until 8).map(i => s"a$i").toSet)
   }
 
+  test("a post-publish fold that fails is swallowed but counted; the commit returns") {
+    val root = freshRoot()
+    TagFamilyStore.commitJob(spark, root, mkIncoming(j1Tags),
+      mkHistory("job-1", Seq(("a/orders", "100"), ("a/region", "5"))),
+      compactAboveBatches = 1)
+    // the second commit leaves two dirs per part, forcing the fold; its
+    // fold publish fails
+    AtomicStore.testPrePublishHook = () =>
+      throw new java.io.IOException("injected fold failure")
+    val v =
+      try TagFamilyStore.commitJob(spark, root, mkIncoming(j2Tags),
+        mkHistory("job-2", Seq(("a/orders", "100"))),
+        compactAboveBatches = 1)
+      finally AtomicStore.testPrePublishHook = () => ()
+    assert(v.contains("manifest"))
+    assert(Signals.counts(Signals.SwallowedAdvances).get(root) === Some(1L))
+    assert(Signals.notes(Signals.SwallowedAdvances).get(root)
+      .exists(_.contains("injected fold failure")))
+    // the commit itself is served
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) ===
+      Map("job-1" -> 2L, "job-2" -> 1L))
+  }
+
   test("an out-of-protocol commit during a job aborts it; the re-run lands once") {
     val root = freshRoot()
     TagFamilyStore.commitJob(spark, root, mkIncoming(j1Tags),
       mkHistory("job-1", Seq(("a/orders", "100"), ("a/region", "5"))))
     val cutBefore = TagFamilyStore.currentCutVersion(spark, root)
     // after the job's tags publish, a writer that bypasses the job lease
-    // commits to the history table: the job's predicted history version
-    // is taken, so the job must fail rather than publish a second way
+    // commits to the history table: the version the job took at entry
+    // for its history batch is gone, so the job must fail rather than
+    // publish a second way
     TagFamilyStore.setTestMidJobHook(root, stage =>
       if (stage == "tags")
         AtomicStore.commitAppend(mkHistory("intruder", Seq(("a/x", "1"))),

@@ -9,10 +9,10 @@ import graft.operators.TagFamilyStore.JobBatch
 import graft.sources.StoreCut
 
 /** The ATOMIC WHOLE-TICK family commit (round 19): N configs' batches
-  * chained under ONE cut publish — a crash at any inter-commit point,
-  * including BETWEEN configs, must leave the pre-tick state serving in
-  * every table (configs that already committed inside the crashed tick
-  * included), and the re-run must land every config exactly once.
+  * land as ONE batch per part under ONE cut publish — a crash at any
+  * point before the cut publish must leave the pre-tick state serving in
+  * every table (the crashed tick's published table versions included),
+  * and the re-run must land every config exactly once.
   */
 class TagFamilyTickSpec extends SparkSpec {
   import spark.implicits._
@@ -79,9 +79,8 @@ class TagFamilyTickSpec extends SparkSpec {
       afterTick2Hist)
   }
 
-  test("a crash at EVERY inter-commit point — including BETWEEN configs — hides the WHOLE tick; re-run lands once") {
-    for (crashAt <- Seq("tags@0", "history@0", "job@0", "tags@1",
-        "history@1", "job@1", "tags@2", "history@2")) {
+  test("a crash at EVERY point before the cut publish hides the WHOLE tick; re-run lands once") {
+    for (crashAt <- Seq("tags", "history", "reports")) {
       val root = freshRoot()
       seedTick(root)
       val cutBefore = TagFamilyStore.currentCutVersion(spark, root)
@@ -95,8 +94,8 @@ class TagFamilyTickSpec extends SparkSpec {
         finally TagFamilyStore.clearTestMidJobHook(root)
       assert(crashed, s"the $crashAt injection must fire")
 
-      // tick atomicity: even configs that fully committed inside the
-      // crashed tick (crash at job@1 = cfg0 AND cfg1 landed) are
+      // tick atomicity: even the tables the crashed tick already
+      // published (crash at reports = tags AND history landed) are
       // invisible — the cut never advanced
       assert(TagFamilyStore.currentCutVersion(spark, root) === cutBefore,
         s"crash at $crashAt must not advance the cut")
@@ -121,7 +120,7 @@ class TagFamilyTickSpec extends SparkSpec {
     val root = freshRoot()
     seedTick(root)
     TagFamilyStore.setTestMidJobHook(root, s =>
-      if (s == "job@1") StoreCut.advance(spark, root, Map("zz" -> 0L)))
+      if (s == "reports") StoreCut.advance(spark, root, Map("zz" -> 0L)))
     try intercept[java.util.ConcurrentModificationException](
       TagFamilyStore.commitTick(spark, root, tick2()))
     finally TagFamilyStore.clearTestMidJobHook(root)
@@ -139,14 +138,14 @@ class TagFamilyTickSpec extends SparkSpec {
     assert(healthy.cutVersion === Some(0L))
     assert(healthy.retainedCuts === Seq(0L))
 
-    // crash after BOTH tables of tick-2's first config committed
+    // crash after BOTH of tick-2's tables published
     TagFamilyStore.setTestMidJobHook(root, s =>
-      if (s == "job@0") throw new RuntimeException("injected tick crash"))
+      if (s == "history") throw new RuntimeException("injected tick crash"))
     try intercept[RuntimeException](
       TagFamilyStore.commitTick(spark, root, tick2()))
     finally TagFamilyStore.clearTestMidJobHook(root)
     val torn = TagFamilyStore.porcelain(spark, root)
-    // exactly the crashed config's two commits sit above the pins
+    // exactly the crashed tick's two table versions sit above the pins
     assert(torn.orphanSuffix === Map("tags" -> 1L, "history" -> 1L))
     assert(torn.cutVersion === healthy.cutVersion, "cut unmoved")
 
@@ -161,7 +160,7 @@ class TagFamilyTickSpec extends SparkSpec {
       .exists(s => s.contains("cut=v1") && s.contains("jobs=3")))
   }
 
-  test("commitTick == the same jobs as sequential commitJobs (chained latest-wins == serialized merges)") {
+  test("commitTick == the same jobs as sequential commitJobs (one folded batch == serialized merges)") {
     val rootTick = freshRoot()
     val rootSeq = freshRoot()
     seedTick(rootTick)
@@ -185,6 +184,68 @@ class TagFamilyTickSpec extends SparkSpec {
     // but the tick minted ONE cut where the sequential form minted three
     assert(TagFamilyStore.currentCutVersion(spark, rootTick) === Some(1L))
     assert(TagFamilyStore.currentCutVersion(spark, rootSeq) === Some(4L))
+  }
+
+  private def dataDirs(root: String, part: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/$part/data")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.listStatus(p).length else 0
+  }
+
+  private def mkReports(assets: Seq[String]): DataFrame =
+    assets.toDF("table")
+      .select(col("table"), lit("gov").as("tag_template"),
+        to_timestamp(lit("2026-01-05 00:00:00")).as("export_time"))
+
+  test("a tick of N jobs writes and publishes ONE batch per part it carries, plus ONE cut") {
+    val root = freshRoot()
+    seedTick(root)
+    val tickJobs = tick2().zipWithIndex.map { case (b, i) =>
+      // only cfg0 and cfg2 export: the reports part is their union
+      if (i == 1) b else b.copy(reports = Some(mkReports(Seq(s"r$i"))))
+    }
+    val parts = Seq("tags", "history", "reports")
+    val dirsBefore = parts.map(p => p -> dataDirs(root, p)).toMap
+    val cut = TagFamilyStore.currentCutVersion(spark, root).get
+    val v = TagFamilyStore.commitTick(spark, root, tickJobs)
+    parts.foreach(p => assert(dataDirs(root, p) === dirsBefore(p) + 1,
+      s"$p must gain exactly one data dir"))
+    // one table version per part: the seed's v0 for tags/history, and
+    // the first reports version
+    assert(v === Map("tags" -> 1L, "history" -> 1L, "reports" -> 0L,
+      "manifest" -> (cut + 1)))
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) === afterTick2Tags)
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) ===
+      afterTick2Hist)
+    assert(TagFamilyStore.readReports(spark, root, mkReports(Nil))
+      .select("table").as[String].collect().toSet === Set("r0", "r2"))
+  }
+
+  test("in-tick conflicts: a later job's delete and re-upsert of one tag resolve in job order") {
+    val root = freshRoot()
+    TagFamilyStore.commitJob(spark, root,
+      mkIncoming(Seq(("a/x", "old", "PRE"), ("a/y", "env", "Y"))),
+      mkHistory("t1", Seq("a/x", "a/y")))
+    TagFamilyStore.commitTick(spark, root, Seq(
+      JobBatch("cfg0", mkIncoming(Seq(("a/x", "env", "c0"))),
+        mkHistory("t2-cfg0", Seq("a/x"))),
+      JobBatch("cfg1", mkIncoming(Seq(("a/x", "env", ""))), // delete a/x
+        mkHistory("t2-cfg1", Seq("a/x"))),
+      JobBatch("cfg2", mkIncoming(Seq(("a/x", "who", "c2"))),
+        mkHistory("t2-cfg2", Seq("a/x")))))
+    // cfg1's tombstone hides the pre-tick field AND cfg0's upsert; only
+    // cfg2's field — written after the delete — is served
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) ===
+      Set("a/x|who|c2", "a/y|env|Y"))
+    // the same jobs replayed as in-memory merges, in order
+    val replay = Seq(Seq(("a/x", "env", "c0")), Seq(("a/x", "env", "")),
+      Seq(("a/x", "who", "c2"))).map(mkIncoming).foldLeft(
+      mkIncoming(Seq(("a/x", "old", "PRE"), ("a/y", "env", "Y"))))(
+      graft.operators.TagStore.applyWithDeletes)
+    assert(tagSet(TagFamilyStore.readTags(spark, root)) === tagSet(replay))
+    // history: one row per job per asset, attributed per job
+    assert(histUuids(TagFamilyStore.readHistory(spark, root)) === Map(
+      "t1" -> 2L, "t2-cfg0" -> 1L, "t2-cfg1" -> 1L, "t2-cfg2" -> 1L))
   }
 
   test("an empty tick is a no-op (no lease, no cut mint)") {
