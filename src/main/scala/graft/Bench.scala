@@ -35,15 +35,15 @@ import graft.obs.{Signals, SparkWork}
   *
   * Every sample also counts its Spark work ([[graft.obs.SparkWork]]):
   * `BENCH_PROFILE.json` holds each query's fastest sample as
-  * `{wall_s, jobs, tasks, task_s, sql_executions}`, plus the store
-  * signals under `"store"`. Job and task counts do not depend on box
-  * load, so they compare across runs that walls cannot.
+  * `{wall_s, jobs, tasks, task_s, sql_executions, compiles, compile_s}`,
+  * plus the store signals under `"store"`. Job and task counts do not
+  * depend on box load, so they compare across runs that walls cannot.
   *
   * `runMain graft.Bench [query…]`: trailing query names (or ids: `q58`)
   * run only those queries; such a run prints the contract line and one
-  * `PROF,<query>,<wall_s>,<jobs>,<tasks>,<task_s>` line per query, and
-  * writes no side file (those describe full-suite runs), so its contract
-  * line's `"queries_file"` is `null`.
+  * `PROF,<query>,<wall_s>,<jobs>,<tasks>,<task_s>,<compiles>,<compile_s>`
+  * line per query, and writes no side file (those describe full-suite
+  * runs), so its contract line's `"queries_file"` is `null`.
   */
 object Bench {
 
@@ -256,7 +256,8 @@ object Bench {
       catch { case e: java.io.IOException => System.err.println(s"$p write failed: $e") }
     if (only.nonEmpty) results.foreach { case (k, _, _) =>
       val (wall, w) = fastest(k)
-      println(f"PROF,$k,$wall%.3f,${w.jobs},${w.tasks},${w.taskS}%.2f")
+      println(f"PROF,$k,$wall%.3f,${w.jobs},${w.tasks},${w.taskS}%.2f," +
+        f"${w.compiles},${w.compileS}%.3f")
     } else {
       val qsFull = results.map { case (k, v, _) => s"\"$k\":${fmt(v)}" }
         .mkString("{", ",", "}")

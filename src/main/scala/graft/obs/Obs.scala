@@ -6,19 +6,26 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.Bridge
 
 /** The Spark work one piece of driver code caused: jobs, tasks, summed
-  * executor run time of those tasks, and SQL executions. Counts are
-  * SparkContext-wide: work another thread submits meanwhile is counted
-  * too.
+  * executor run time of those tasks, SQL executions, and the generated
+  * classes compiled (`compiles`) with their summed compile time
+  * (`compileS`). Job, task and SQL counts are SparkContext-wide and the
+  * compile figures JVM-wide: work another thread causes meanwhile is
+  * counted too. A compile is a miss of Spark's codegen cache, so a plan
+  * shape already compiled and still cached compiles nothing.
   */
 final case class SparkWork(jobs: Long, tasks: Long, taskS: Double,
-                           sqlExecutions: Long) {
+                           sqlExecutions: Long, compiles: Long = 0L,
+                           compileS: Double = 0.0) {
   def json(wallS: Double): String =
     f"""{"wall_s":$wallS%.3f,"jobs":$jobs,"tasks":$tasks,""" +
-      f""""task_s":$taskS%.2f,"sql_executions":$sqlExecutions}"""
+      f""""task_s":$taskS%.2f,"sql_executions":$sqlExecutions,""" +
+      f""""compiles":$compiles,"compile_s":$compileS%.3f}"""
 }
 
 object SparkWork {
@@ -39,6 +46,10 @@ object SparkWork {
       SparkWork(jobs.get, tasks.get, taskMs.get / 1e3, sqlExecutions.get)
   }
 
+  /** JVM-wide codegen totals: (classes compiled, compile nanoseconds). */
+  private def compiled: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   /** Runs `body` and counts the Spark work posted while it ran. The
     * listener bus delivers events asynchronously, so the bus is drained
     * before the listener is installed (earlier work's late events stay
@@ -53,9 +64,11 @@ object SparkWork {
     val counter = new Counter
     sc.addSparkListener(counter)
     try {
+      val (n0, ns0) = compiled
       val out = body
+      val (n1, ns1) = compiled
       Bridge.drainListenerBus(sc)
-      (out, counter.work)
+      (out, counter.work.copy(compiles = n1 - n0, compileS = (ns1 - ns0) / 1e9))
     } finally sc.removeSparkListener(counter)
   }
 }

@@ -221,6 +221,12 @@ object TagEngine {
     * set-based over the URI column), the template's fields PIVOTED to typed
     * columns (history tables are created from the template,
     * BigQueryUtils.py:344–387), plus the `event_date` day partition.
+    *
+    * Rows group per `(asset_uri, column, job_uuid)`, so several jobs
+    * sharing `config`'s field list take ONE call: `jobUuid` may be an
+    * expression naming each row's job (the family store's tick passes one
+    * over its job ordinal), and with distinct uuids the result is exactly
+    * the union of the per-job calls.
     */
   def historyRows(incoming: DataFrame, config: TagConfig, eventTime: Column,
                   jobUuid: Column): DataFrame = {
@@ -260,7 +266,7 @@ object TagEngine {
     // makes the missing cell NULL, matching the omitted JSON key.
     val pivoted = incoming
       .filter(coalesce(col("field_value").cast("string"), lit("")) =!= "")
-      .groupBy(col("asset_uri"), col("column"))
+      .groupBy(col("asset_uri"), col("column"), jobUuid.as("job_uuid"))
       .pivot("field_id", config.fields.map(_.fieldId))
       .agg(first("field_value"))
     // no withHistoryPartition here: the family store's history commit
@@ -268,7 +274,7 @@ object TagEngine {
     // call sites drifting apart
     pivoted.select(
       Seq(eventTime.as("event_time"), assetName.as("asset_name"),
-        jobUuid.as("job_uuid")) ++
+        col("job_uuid")) ++
         config.fields.map(f => typed(f, col(f.fieldId)).as(f.fieldId)): _*)
   }
 

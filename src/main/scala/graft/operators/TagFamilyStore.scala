@@ -105,6 +105,22 @@ object TagFamilyStore {
   private def fireHook(root: String, stage: String): Unit =
     Option(testHooks.get(root)).foreach(_(stage))
 
+  /** TEST-ONLY plan seam, scoped per root like the crash seam: invoked
+    * with each part's batch frame, exactly as it is handed to the
+    * write, after every part version resolved and before that part's
+    * write starts. Production never sets one.
+    */
+  private val testPartHooks =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      (String, DataFrame) => Unit]()
+
+  private[graft] def setTestPartHook(root: String,
+                                     h: (String, DataFrame) => Unit): Unit =
+    testPartHooks.put(root, h)
+
+  private[graft] def clearTestPartHook(root: String): Unit =
+    testPartHooks.remove(root)
+
   private val JobLeaseWhat =
     "TagFamilyStore job commit (exclusive multi-table publish)"
 
@@ -112,16 +128,16 @@ object TagFamilyStore {
 
   /** Atomically commit one job's write family: the tag MERGE change set
     * (`incoming` in the unified tag-row shape — upserts plus the
-    * delete-when-all-empty trigger, exactly [[TagStore.mergeDelta]]'s
-    * encoding), its history rows (must carry `event_time`; the
+    * delete-when-all-empty trigger, encoded by [[TagStore.tickDelta]]),
+    * its history rows (must carry `event_time`; the
     * `event_date` day column is derived here by
     * [[Sinks.withHistoryPartition]]) and optionally its report rows (must
     * carry `export_time`). All parts become visible together via ONE cut
     * publish — or not at all: a one-job [[commitTick]].
     *
-    * `incoming` is consumed more than once (the delta build and the
-    * tombstone split) — callers producing it from an expensive
-    * evaluation should localCheckpoint first ([[commitComputed]] does).
+    * The tags batch is one plan over `incoming`; callers whose history
+    * or reports derive from the same expensive evaluation should
+    * localCheckpoint it first ([[commitComputed]] materializes once).
     */
   def commitJob(spark: SparkSession, root: String, incoming: DataFrame,
                 history: DataFrame, reports: Option[DataFrame] = None,
@@ -131,10 +147,12 @@ object TagFamilyStore {
       leaseTtlMs, compactAboveBatches)
 
   /** One job's share of a [[commitTick]]: the tag MERGE change set
-    * (`incoming`, [[TagStore.mergeDelta]]'s encoding), the history rows
-    * (`event_time`-bearing) and optional report rows (`export_time`).
-    * `jobId` only labels the job for its caller; history identity stays
-    * in the rows (`job_uuid`).
+    * (`incoming`, unified tag rows — an all-empty instance is the delete
+    * trigger), the history rows (`event_time`-bearing) and optional
+    * report rows (`export_time`). `jobId` only labels the job for its
+    * caller; history identity stays in the rows (`job_uuid`). The
+    * evaluated terminals return one per job ([[runTick]]): `incoming` is
+    * then that job's rows of the tick's one checkpoint.
     */
   final case class JobBatch(jobId: String, incoming: DataFrame,
                             history: DataFrame,
@@ -150,8 +168,9 @@ object TagFamilyStore {
     * every table, and the re-run lands every config exactly once.
     *
     * The tick writes ONE batch per part, whatever N: the jobs' tag
-    * change sets folded in job order ([[TagStore.tickDelta]] — a later
-    * config in the tick wins conflicts, the deterministic rendering of
+    * change sets folded in job order ([[TagStore.tickDelta]] over the
+    * jobs' [[TagStore.tickFrame]] — a later config in the
+    * tick wins conflicts, the deterministic rendering of
     * `TagEngine.perConfigIncoming`'s intra-tick isolation), the union of
     * their history rows (attribution stays in each row's `job_uuid`) and,
     * when any job carries reports, the union of their report rows. The
@@ -166,11 +185,25 @@ object TagFamilyStore {
     if (jobs.isEmpty) Map.empty
     else AtomicStore.withLease(spark, leasePath(root), leaseTtlMs,
         JobLeaseWhat) {
-      commitTickLocked(spark, root, jobs, compactAboveBatches)
+      commitTickLocked(spark, root, jobs.size,
+        TagStore.tickFrame(TagStore.jobTagged(jobs.map(_.incoming))),
+        union(jobs.map(_.history)),
+        Option.when(jobs.exists(_.reports.nonEmpty))(
+          union(jobs.flatMap(_.reports))),
+        compactAboveBatches)
     }
 
+  private def union(dfs: Seq[DataFrame]): DataFrame =
+    dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** The commit section of every family commit: `tick` is the commit's
+    * [[TagStore.tickFrame]] (its tags batch is [[TagStore.tickDelta]] of
+    * it), `history` and `reports` are the other parts' whole batches.
+    */
   private def commitTickLocked(spark: SparkSession, root: String,
-                               jobs: Seq[JobBatch],
+                               jobCount: Int, tick: DataFrame,
+                               history: DataFrame,
+                               reports: Option[DataFrame],
                                compactAboveBatches: Int,
                                extraPins: Map[String, Long] = Map.empty)
       : Map[String, Long] = {
@@ -183,20 +216,17 @@ object TagFamilyStore {
       s"TagFamilyStore: idempotency-pin key '$k' collides with a family " +
         "part / manifest name — pick a key outside " +
         ReservedPinKeys.mkString("{", ", ", "}")))
-    val grain = if (jobs.sizeIs > 1) "tick" else "job"
+    val grain = if (jobCount > 1) "tick" else "job"
     val baseCut = StoreCut.cutVersion(spark, root)
     val pins = baseCut.map(v => StoreCut.cutAt(spark, root, v))
       .getOrElse(Map.empty)
     checkOrphanBound(spark, root, pins)
-    def union(dfs: Seq[DataFrame]): DataFrame =
-      dfs.reduce(_.unionByName(_, allowMissingColumns = true))
     val batches: Seq[(String, Long => DataFrame)] = Seq(
-      TagsPart -> ((v: Long) => TagStore.tickDelta(jobs.map(_.incoming))
-        .withColumn("__batch", lit(v))),
-      HistoryPart -> ((_: Long) =>
-        Sinks.withHistoryPartition(union(jobs.map(_.history))))) ++
-      Option.when(jobs.exists(_.reports.nonEmpty))(ReportsPart ->
-        ((_: Long) => Sinks.withReportPartition(union(jobs.flatMap(_.reports)))))
+      TagsPart -> ((v: Long) =>
+        TagStore.tickDelta(tick).withColumn("__batch", lit(v))),
+      HistoryPart -> ((_: Long) => Sinks.withHistoryPartition(history))) ++
+      reports.map(r =>
+        ReportsPart -> ((_: Long) => Sinks.withReportPartition(r)))
     // each part publishes once, at the version after the one current at
     // entry: under the job lease this commit is the only publisher, so
     // the tags batch can carry its __batch stamp before it is written.
@@ -209,10 +239,12 @@ object TagFamilyStore {
     // (every version resolves before any write starts, so a failed
     // resolve leaves no write running)
     val writes = batches.map { case (part, mk) =>
-      (part, mk, AtomicStore.currentVersion(spark, s"$root/$part")
-        .getOrElse(-1L) + 1)
-    }.map { case (part, mk, v) =>
-      (part, v, Future(blocking(AtomicStore.writeData(mk(v), s"$root/$part"))))
+      val v = AtomicStore.currentVersion(spark, s"$root/$part")
+        .getOrElse(-1L) + 1
+      (part, v, mk(v))
+    }.map { case (part, v, df) =>
+      Option(testPartHooks.get(root)).foreach(_(part, df))
+      (part, v, Future(blocking(AtomicStore.writeData(df, s"$root/$part"))))
     }
     var versions = Map.empty[String, Long]
     val awaited = scala.collection.mutable.Set.empty[String]
@@ -303,7 +335,7 @@ object TagFamilyStore {
         Seq(TagsPart, HistoryPart, ReportsPart)
           .foreach(p => expectedOrphans.merge(s"$root/$p", 1L, (a, b) => a + b))
       }
-    Signals.note(Signals.FamilyCuts, root, s"cut=v$cutV jobs=${jobs.size} " +
+    Signals.note(Signals.FamilyCuts, root, s"cut=v$cutV jobs=$jobCount " +
       versions.toSeq.sortBy(_._1)
         .map { case (p, v) => s"$p=v$v" }.mkString(" "))
     versions + ("manifest" -> cutV)
@@ -573,24 +605,30 @@ object TagFamilyStore {
       : Map[String, Long] =
     commitEvaluated(spark, root, eventTime, leaseTtlMs, idempotencyPin) {
       existing =>
-        Seq(("job", config, TagEngine.incomingFor(config, computed, existing),
+        Seq((config, TagEngine.incomingFor(config, computed, existing),
           jobUuid))
-    }._1
+    }.versions
 
   /** The WHOLE scheduler tick with the family-cut terminal:
     * [[TagEngine.perConfigIncoming]]'s evaluation (ONE catalog expansion
     * for every due config, each config's merge set derived against the
     * SAME pre-tick cut-pinned tag state — the intra-tick isolation
-    * documented there) committed through [[commitTick]]'s
-    * one-cut-per-tick publish. A crash anywhere before the cut publish
-    * leaves the pre-tick state serving everywhere; the re-run lands every
-    * config exactly once.
+    * documented there) committed under one cut publish, as one
+    * [[commitTick]] of the same batches would. A crash anywhere before
+    * the cut publish leaves the pre-tick state serving everywhere; the
+    * re-run lands every config exactly once.
     *
-    * Returns the versions and the committed [[JobBatch]]es — each
-    * batch's `incoming` is localCheckpoint'd, so a caller can roll the
-    * tick up (per-job counts over the PRODUCED rows, the
-    * `Streams.schedulerTickCommit` contract) without re-evaluating
-    * anything or mis-counting store rows the jobs never touched.
+    * Its commit cost does not grow with the number of due configs: the
+    * tick is materialized ONCE and each part is one plan over that one
+    * frame (see [[commitEvaluated]]).
+    *
+    * Returns the versions and one [[JobBatch]] per config — its
+    * `incoming` is that config's rows of the tick's checkpoint, so a
+    * caller can roll the tick up (per-job counts over the PRODUCED rows,
+    * the `Streams.schedulerTickCommit` contract) without re-evaluating
+    * anything or mis-counting store rows the jobs never touched; its
+    * `history` and `reports` are that config's rows of the tick's
+    * history and report parts (lazy: nothing runs unless read).
     * `jobUuidOf` names each config's job in its history rows (the
     * scheduler's convention is `md5(config_uuid|version)` — see
     * `Streams.schedulerTickCommit`); the default labels by config uuid.
@@ -615,50 +653,120 @@ object TagFamilyStore {
               idempotencyPin: Option[(String, Long)] = None)
       : (Map[String, Long], Seq[JobBatch]) =
     if (configs.isEmpty) (Map.empty, Seq.empty)
-    else commitEvaluated(spark, root, eventTime, leaseTtlMs, idempotencyPin) {
+    else {
+      val t = evaluatedTick(spark, configs, catalog, root, eventTime,
+        jobUuidOf, leaseTtlMs, idempotencyPin)
+      val job = col("__job")
+      (t.versions, configs.zipWithIndex.map { case ((id, cfg), i) =>
+        JobBatch(id, t.tick.filter(job === i).drop("__job", "__del"),
+          t.history.filter(col("job_uuid") <=> jobUuidOf(id)),
+          // report rows are a per-row projection of the tick's rows: the
+          // filter resolves `__job` below that projection
+          Option.when(cfg.exportTags)(t.reports.get.filter(job === i)))
+      })
+    }
+
+  /** [[runTick]] returning, for its batches, the tick's PRODUCED rows as
+    * one frame: every config's incoming rows tagged with its id as
+    * `config_uuid`, read from the tick's one checkpoint — what a per-job
+    * rollup groups (`Streams.schedulerTickCommit`).
+    */
+  private[graft] def runTickProduced(spark: SparkSession,
+                                     configs: Seq[(String, TagConfig)],
+                                     catalog: DataFrame, root: String,
+                                     eventTime: Column,
+                                     jobUuidOf: String => Column,
+                                     idempotencyPin: Option[(String, Long)])
+      : (Map[String, Long], DataFrame) = {
+    require(configs.nonEmpty, "runTickProduced: no configs to run")
+    val t = evaluatedTick(spark, configs, catalog, root, eventTime, jobUuidOf,
+      AtomicStore.DefaultLeaseTtlMs, idempotencyPin)
+    (t.versions, t.tick
+      .withColumn("config_uuid", perJob(configs.map(c => lit(c._1))))
+      .drop("__job", "__del"))
+  }
+
+  private def evaluatedTick(spark: SparkSession,
+                            configs: Seq[(String, TagConfig)],
+                            catalog: DataFrame, root: String,
+                            eventTime: Column, jobUuidOf: String => Column,
+                            leaseTtlMs: Long,
+                            idempotencyPin: Option[(String, Long)])
+      : Evaluated =
+    commitEvaluated(spark, root, eventTime, leaseTtlMs, idempotencyPin) {
       existing =>
         TagEngine.perConfigIncoming(spark, configs, catalog, existing)
           .zip(configs).map { case ((id, inc), (_, cfg)) =>
-            (id, cfg, inc, jobUuidOf(id))
+            (cfg, inc, jobUuidOf(id))
           }
+    }
+
+  /** An evaluated commit: its versions (empty on a replay skip), the
+    * tick frame it materialized ([[TagStore.tickFrame]], checkpointed)
+    * and the history and report parts it built from it.
+    */
+  private final case class Evaluated(versions: Map[String, Long],
+                                     tick: DataFrame, history: DataFrame,
+                                     reports: Option[DataFrame])
+
+  /** The per-job value `values(i)` of each tick-frame row of job `i`. */
+  private def perJob(values: Seq[Column]): Column =
+    values.zipWithIndex.tail.foldLeft(when(col("__job") === 0, values.head)) {
+      case (c, (v, i)) => c.when(col("__job") === i, v)
     }
 
   /** The ONE body of both evaluated terminals, entirely under the job
     * lease so the overwrite filters' read and the commit see one
     * serialization point: check the idempotency pin, read the cut-pinned
-    * tag state once, derive each job's `(jobId, config, incoming,
-    * jobUuid)` from it, checkpoint every incoming set, build the batches
-    * and commit them under one cut — unless the pin marks a replay.
+    * tag state once, derive each job's `(config, incoming, jobUuid)` from
+    * it, materialize the jobs' incoming rows, build the parts and commit
+    * them under one cut — unless the pin marks a replay.
     *
-    * One materialization per job: the incoming set feeds the delta
-    * build, the tombstone split, the history pivot AND the report
-    * flatten — and history/reports must never record values that differ
-    * from the batch actually merged. The checkpoints are independent
-    * READS of pre-commit state, so they run concurrently
-    * ([[Par.ckptAll]]).
+    * ONE materialization per commit: a single `localCheckpoint` of the
+    * [[TagStore.tickFrame]] of the jobs' incoming sets — their union, each
+    * row tagged with its job ordinal and its (instance, job) all-empty
+    * trigger, computed in that same pass. History and reports must never
+    * record values that differ from the batch actually merged, so every
+    * part reads that one frame, each as ONE plan whatever the job count:
+    *  - tags: [[TagStore.tickDelta]] of it;
+    *  - history: the written (non-`__del`) rows through ONE
+    *    [[TagEngine.historyRows]] pivot per distinct field list in the
+    *    tick, `job_uuid` chosen per job;
+    *  - reports: the exporting jobs' written rows through one
+    *    [[TagEngine.reportRowsFor]] projection.
+    * The frame's partitioning satisfies every one of those groupings, so
+    * no part shuffles and a small commit's parts each land as one file.
     */
   private def commitEvaluated(spark: SparkSession, root: String,
                               eventTime: Column, leaseTtlMs: Long,
                               idempotencyPin: Option[(String, Long)])(
-      jobsOf: DataFrame => Seq[(String, TagConfig, DataFrame, Column)])
-      : (Map[String, Long], Seq[JobBatch]) =
+      jobsOf: DataFrame => Seq[(TagConfig, DataFrame, Column)])
+      : Evaluated =
     AtomicStore.withLease(spark, leasePath(root), leaseTtlMs, JobLeaseWhat) {
       val replayed = idempotencyPin.exists { case (k, n) =>
         StoreCut.cut(spark, root).exists(_.get(k).exists(_ >= n))
       }
       val jobs = jobsOf(readTagsOr(spark, root, TagEngine.emptyTagRows(spark)))
-      val batches = jobs.zip(Par.ckptAll(jobs.map(_._3): _*)).map {
-        case ((id, cfg, _, uuid), inc) =>
-          // history and the A12 report rows (when the config exports)
-          // describe the WRITTEN instances only: an all-empty instance
-          // fires the delete trigger and must leave no phantom row
-          val written = TagStore.dropAllEmptyTags(inc)
-          JobBatch(id, inc, TagEngine.historyRows(written, cfg, eventTime, uuid),
-            Option.when(cfg.exportTags)(
-              TagEngine.reportRowsFor(written, eventTime)))
-      }
-      if (replayed) (Map.empty, batches)
-      else (commitTickLocked(spark, root, batches, compactAboveBatches = 64,
-        extraPins = idempotencyPin.toMap), batches)
+      val tick =
+        TagStore.tickFrame(TagStore.jobTagged(jobs.map(_._2))).localCheckpoint()
+      val job = col("__job")
+      // history and the A12 report rows (when the config exports)
+      // describe the WRITTEN instances only: an all-empty instance fires
+      // the delete trigger and must leave no phantom row
+      val written = tick.filter(!col("__del"))
+      val history = union(jobs.indices
+        .groupBy(i => jobs(i)._1.fields.map(f => (f.fieldId, f.fieldType)))
+        .values.toSeq.sortBy(_.head).map { is =>
+          TagEngine.historyRows(written.filter(job.isin(is: _*)),
+            jobs(is.head)._1, eventTime, perJob(jobs.map(_._3)))
+        })
+      val exporting = jobs.indices.filter(jobs(_)._1.exportTags)
+      val reports = Option.when(exporting.nonEmpty)(TagEngine.reportRowsFor(
+        written.filter(job.isin(exporting: _*)), eventTime))
+      val versions =
+        if (replayed) Map.empty[String, Long]
+        else commitTickLocked(spark, root, jobs.size, tick, history, reports,
+          compactAboveBatches = 64, extraPins = idempotencyPin.toMap)
+      Evaluated(versions, tick, history, reports)
     }
 }

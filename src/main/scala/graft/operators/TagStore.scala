@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Tag-state maintenance (SURVEY.md §2 A9/A10, B5).
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   * they run anywhere parquet does.
   *
   * Persisting tag state is [[TagFamilyStore]]'s job: it appends the
-  * [[tickDelta]] change set of each commit (its jobs' [[mergeDelta]]
+  * [[tickDelta]] change set of each commit (its jobs' merge change
   * sets, folded in job order) to a cut-pinned log and reads the state
   * back through [[latestStateOf]] — the log functions below are the
   * encoding that store shares with these transforms.
@@ -56,19 +57,18 @@ object TagStore {
   private def emptyValue = coalesce(col("field_value"), lit("")) === ""
 
   /** The delete-when-all-empty TRIGGER (DataCatalogController.py:
-    * 1581–1592), as one definition: the tag-instance keys of `incoming`
-    * whose every field value is [[emptyValue]]. Shared by
-    * [[dropAllEmptyTags]], [[applyWithDeletes]] and the delta-log
-    * [[mergeDelta]], so the reference-semantics rule cannot drift
-    * between the in-memory transforms and the persisted log
-    * ([[tickDelta]] evaluates the same predicate per job in a window).
+    * 1581–1592), as one definition: true on every row of a tag instance
+    * whose every field value in its job (`job` — none for a single
+    * frame) is [[emptyValue]]. A window, so NULL key parts group
+    * together exactly as [[upsert]]'s `<=>` match does — every consumer
+    * ([[dropAllEmptyTags]], [[applyWithDeletes]], the delta log's
+    * [[tickFrame]]) reads the same rule, with no equi-join that would
+    * let a NULL-`column` instance escape its own trigger.
     */
-  private def allEmptyTagKeys(incoming: DataFrame): DataFrame =
-    incoming
-      .groupBy(TagInstanceKey.map(col): _*)
-      .agg(count(lit(1)).as("__n"), count(when(emptyValue, 1)).as("__ne"))
-      .filter(col("__n") === col("__ne"))
-      .select(TagInstanceKey.map(col): _*)
+  private def allEmpty(job: Column*): Column = {
+    val w = Window.partitionBy(TagInstanceKey.map(col) ++ job: _*)
+    count(lit(1)).over(w) === count(when(emptyValue, 1)).over(w)
+  }
 
   /** Delete-when-all-empty (DataCatalogController.py:1581–1592): if every
     * field of an incoming tag instance is empty, the whole tag
@@ -76,7 +76,7 @@ object TagStore {
     * Returns incoming minus the all-empty tag instances.
     */
   def dropAllEmptyTags(incoming: DataFrame): DataFrame =
-    incoming.join(allEmptyTagKeys(incoming), TagInstanceKey, "left_anti")
+    incoming.withColumn("__del", allEmpty()).filter(!col("__del")).drop("__del")
 
   /** Full upsert-with-deletes lifecycle (`create_update_delete_tag`,
     * DataCatalogController.py:1468–1605): an incoming tag whose fields are
@@ -84,10 +84,13 @@ object TagStore {
     * incoming rows upsert over existing; untouched existing rows survive.
     */
   def applyWithDeletes(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val emptyKeys = allEmptyTagKeys(incoming)
-    val nonEmpty = incoming.join(emptyKeys, TagInstanceKey, "left_anti")
-    val kept = existing.join(emptyKeys, TagInstanceKey, "left_anti")
-    upsert(kept, nonEmpty)
+    val flagged = incoming.withColumn("__del", allEmpty())
+    val emptyKeys = flagged.filter(col("__del"))
+      .select(TagInstanceKey.map(c => col(c).as(s"__k_$c")): _*)
+    // NULL-safe, like the trigger's window
+    val kept = existing.join(emptyKeys, TagInstanceKey
+      .map(c => existing(c) <=> emptyKeys(s"__k_$c")).reduce(_ && _), "left_anti")
+    upsert(kept, flagged.filter(!col("__del")).drop("__del"))
   }
 
   /** Reconcile (`ReconcileTagsRequest`, DataCatalogController.py:455–473):
@@ -103,72 +106,78 @@ object TagStore {
     untouched.unionByName(incoming)
   }
 
-  /** The CHANGE SET one merge appends to the delta log: upsert rows
-    * plus one tombstone per all-empty incoming tag instance — the
-    * delete-when-all-empty trigger as log rows. The upserts and the
-    * tombstones of one merge always touch disjoint tag instances.
-    * Persisted bytes scale with the BATCH, never the tag lake.
+  /** A whole-partition window over a tag instance, sorted by the rest of
+    * the per-key window that follows it (`keyOrder`: the key's remaining
+    * parts, then its order), so that one sort serves both windows —
+    * Spark keeps the instance window below the key window and sorts once
+    * for the two. Each window's sort is generated code of its own, and
+    * the family's commit and read paths stay within Spark's codegen
+    * cache only when they compile few distinct classes.
     */
-  private[operators] def mergeDelta(incoming: DataFrame): DataFrame = {
-    val emptyKeys = allEmptyTagKeys(incoming)
-    val upserts = incoming.join(emptyKeys, TagInstanceKey, "left_anti")
-      .withColumn("__op", lit("upsert"))
-    val deletes = emptyKeys
-      .withColumn("field_id", lit("")).withColumn("field_type", lit(""))
-      .withColumn("field_value", lit(""))
-      .select(upserts.columns.filterNot(_ == "__op").toIndexedSeq.map(col): _*)
-      .withColumn("__op", lit("delete_tag"))
-    upserts.unionByName(deletes)
-  }
+  private def sortedAsKeys(byInstance: WindowSpec,
+                           keyOrder: Seq[Column]): WindowSpec =
+    byInstance.orderBy(keyOrder: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
-  /** The ONE log batch a family commit of `incoming.size` jobs appends:
-    * the jobs' [[mergeDelta]] change sets folded so that the batch reads
-    * as the jobs applied in order. Per job ordinal, an upsert is dropped
-    * when a later job upserts the same field key or tombstones its
-    * instance, and a tombstone is dropped when a later job tombstones the
-    * same instance. What survives is at most one tombstone per instance
-    * (the last one) plus the upserts after it, which [[latestStateOf]]
-    * serves over that tombstone. One job is exactly [[mergeDelta]].
-    *
-    * Several jobs take one shuffle: the union is hash-partitioned by tag
-    * instance once, and every per-job and per-tick decision is a window
-    * within that partitioning — [[mergeDelta]]'s trigger included (an
-    * instance whose every field in a job is empty is that job's
-    * tombstone), so the batch costs one shuffle stage and one write
-    * whatever the job count.
+  /** The jobs' incoming sets of one commit as one frame, each row tagged
+    * with its job ordinal `__job`: the input of [[tickFrame]].
     */
-  private[operators] def tickDelta(incoming: Seq[DataFrame]): DataFrame =
-    if (incoming.sizeIs == 1) mergeDelta(incoming.head)
-    else {
-      import org.apache.spark.sql.expressions.Window
-      val inst = TagInstanceKey.map(col)
-      val job = col("__job")
-      val del = col("__del")
-      val byJob = Window.partitionBy(inst :+ job: _*).orderBy("field_id")
-      val wholeJob = byJob.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val blanked = Set("field_id", "field_type", "field_value")
-      incoming.zipWithIndex
-        .map { case (inc, i) => inc.withColumn("__job", lit(i)) }
-        .reduce(_ unionByName _)
-        .repartition(inst: _*)
-        .withColumn("__del", count(lit(1)).over(wholeJob) ===
-          count(when(emptyValue, 1)).over(wholeJob))
-        .withColumn("__rn", row_number().over(byJob))
-        .withColumn("__last_del",
-          max(when(del, job)).over(Window.partitionBy(inst: _*)))
-        .withColumn("__last_up",
-          max(when(!del, job)).over(Window.partitionBy(keyCols.map(col): _*)))
-        .filter(when(del, job === col("__last_del") && col("__rn") === 1)
-          .otherwise(job === col("__last_up") &&
-            coalesce(col("__last_del") < job, lit(true))))
-        .select(incoming.head.columns.toIndexedSeq.map(c =>
+  private[operators] def jobTagged(incoming: Seq[DataFrame]): DataFrame =
+    TagEngine.balancedUnion(incoming.zipWithIndex.map { case (inc, i) =>
+      inc.withColumn("__job", lit(i))
+    })
+
+  /** The TICK FRAME over [[jobTagged]] rows: each row with the
+    * [[allEmpty]] trigger of its (tag instance, job) as `__del`,
+    * hash-partitioned by `(asset_uri, column)`. That one exchange
+    * satisfies every per-part grouping downstream — [[tickDelta]]'s
+    * windows and the history pivot's `(asset_uri, column, job_uuid)` —
+    * so a checkpoint of this frame (it carries its partitioning) feeds
+    * every part of the commit with no further shuffle, whatever the job
+    * count.
+    */
+  private[operators] def tickFrame(tagged: DataFrame): DataFrame =
+    tagged.repartition(col("asset_uri"), col("column"))
+      .withColumn("__del", allEmpty(col("__job")))
+
+  /** The ONE log batch a family commit appends, from its [[tickFrame]]:
+    * the jobs' change sets — upserts plus one tombstone per all-empty
+    * (`__del`) tag instance, the delete-when-all-empty trigger as log
+    * rows — folded so that the batch reads as the jobs applied in
+    * order. Per field key only the last job's upsert survives, and only
+    * when no later job tombstones its instance; per instance only the
+    * last tombstone survives. [[latestStateOf]] serves the upserts after
+    * that tombstone over it. One job's batch is its merge change set: its
+    * non-empty rows as upserts and one tombstone per all-empty instance.
+    *
+    * A tombstone's key is its instance's blank field key, so both rules
+    * are one ordered window per key (kind apart) plus the instance's last
+    * tombstone job, sharing one sort within the frame's `(asset_uri,
+    * column)` partitioning: the batch costs no shuffle beyond the frame's
+    * own and one write, whatever the job count. Persisted bytes scale
+    * with the BATCH, never the tag lake.
+    */
+  private[operators] def tickDelta(tick: DataFrame): DataFrame = {
+    val inst = TagInstanceKey.map(col)
+    val job = col("__job")
+    val del = col("__del")
+    val blanked = Set("field_id", "field_type", "field_value")
+    val fid = when(del, lit("")).otherwise(col("field_id"))
+    tick
+      .withColumn("__last_del", max(when(del, job)).over(
+        sortedAsKeys(Window.partitionBy(inst: _*), Seq(fid, del, job.desc))))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(inst :+ fid :+ del: _*).orderBy(job.desc)))
+      .filter(col("__rn") === 1 &&
+        (del || coalesce(col("__last_del") < job, lit(true))))
+      .select(tick.columns.toIndexedSeq.filterNot(Set("__job", "__del"))
+        .map(c =>
           if (blanked(c)) when(del, lit("")).otherwise(col(c)).as(c)
           else col(c)) :+
-          when(del, lit("delete_tag")).otherwise(lit("upsert")).as("__op"): _*)
-    }
+        when(del, lit("delete_tag")).otherwise(lit("upsert")).as("__op"): _*)
+  }
 
-  /** Latest-wins state over a [[mergeDelta]] log, whichever resolved
+  /** Latest-wins state over a [[tickDelta]] log, whichever resolved
     * view of it the caller pinned (the family store's current, time-travel
     * and fold reads): per field key the newest upsert wins; a tag
     * instance's newest tombstone hides every field row of an EARLIER
@@ -178,18 +187,18 @@ object TagStore {
     * an instance's tombstone beside upserts a later job made to it.
     */
   private[operators] def latestStateOf(log: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dataCols = log.columns.filterNot(c => c == "__op" || c == "__batch")
-    val delB = log.filter(col("__op") === "delete_tag")
-      .groupBy(TagInstanceKey.map(col): _*)
-      .agg(max(col("__batch")).as("__del_b"))
-    val wk = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__batch").desc)
-    log.filter(col("__op") === "upsert")
-      .withColumn("__rn", row_number().over(wk))
-      .filter(col("__rn") === 1)
-      .join(delB, TagInstanceKey, "left")
-      .filter(col("__del_b").isNull || col("__batch") >= col("__del_b"))
+    val (op, batch) = (col("__op"), col("__batch"))
+    // the tombstone rule is a window over the instance, so it groups NULL
+    // key parts exactly as the trigger does
+    log
+      .withColumn("__del_b", max(when(op === "delete_tag", batch)).over(
+        sortedAsKeys(Window.partitionBy(TagInstanceKey.map(col): _*),
+          Seq(col("field_id"), op, batch.desc))))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(keyCols.map(col) :+ op: _*).orderBy(batch.desc)))
+      .filter(op === "upsert" && col("__rn") === 1 &&
+        (col("__del_b").isNull || batch >= col("__del_b")))
       .select(dataCols.toIndexedSeq.map(col): _*)
   }
 }

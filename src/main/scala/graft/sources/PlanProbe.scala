@@ -63,7 +63,7 @@ object PlanProbe {
     * prepared plan itself is. Only `.execute()`/`.rdd`/`finalPhysicalPlan`
     * start stages — never plan construction.
     */
-  private def initialPlan(df: DataFrame): SparkPlan =
+  private[graft] def initialPlan(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p

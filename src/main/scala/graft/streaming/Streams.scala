@@ -345,9 +345,9 @@ object Streams {
     * (every config's tags + history under ONE CAS'd cut publish — a
     * crash mid-tick leaves the pre-tick state serving everywhere and
     * the re-run lands every config exactly once, where the reference's
-    * N independent tasks simply tear), and the returned rollup is
-    * computed from the SAME checkpointed batches the commit landed, so
-    * it reports exactly what was published. History identity matches
+    * N independent tasks simply tear), and the returned rollup groups
+    * the SAME checkpointed tick frame the commit landed by job, so it
+    * reports exactly what was published. History identity matches
     * the rollup's `job_uuid = md5(config_uuid|version)`.
     *
     * `tickId` arms the exactly-once replay pin (round-19 verdict #2 /
@@ -380,14 +380,11 @@ object Streams {
       case None => emptyTick(spark)
       case Some((dueRows, cfgs)) =>
         val versionOf = dueRows.map(r => r.getString(0) -> r.getLong(3)).toMap
-        val (_, batches) = TagFamilyStore.runTick(spark, cfgs,
+        val (_, tagRows) = TagFamilyStore.runTickProduced(spark, cfgs,
           catalog, familyRoot, eventTime,
           jobUuidOf = id => md5(concat_ws("|", lit(id),
             lit(versionOf(id).toString))),
           idempotencyPin = tickId.map("sched_tick" -> _))
-        val tagRows = batches
-          .map(b => b.incoming.withColumn("config_uuid", lit(b.jobId)))
-          .reduce(_.unionByName(_))
         tickRollup(spark, dueRows, tagRows)
           .join(graft.sched.Scheduler.advanceNextRun(configs, due, now)
             .select("config_uuid", "next_run", "version"), "config_uuid")

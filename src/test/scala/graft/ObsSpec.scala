@@ -25,6 +25,19 @@ class ObsSpec extends SparkSpec {
     assert(work.sqlExecutions === 3)
   }
 
+  test("SparkWork.during counts the classes a new plan shape compiles, and none on an identical re-run") {
+    // a literal no earlier plan carried makes the generated code new
+    val k = 1000003L + scala.util.Random.nextInt(1 << 30)
+    val df = spark.range(0, 100, 1, 2).selectExpr(s"id * $k + 7 AS x")
+      .filter(s"x % $k = 7")
+    val (_, first) = SparkWork.during(spark)(df.collect())
+    assert(first.compiles >= 1L, first)
+    assert(first.compileS > 0.0, first)
+    val (_, again) = SparkWork.during(spark)(df.collect())
+    assert(again.compiles === 0L, again)
+    assert(again.json(0.1).endsWith(""""compiles":0,"compile_s":0.000}"""))
+  }
+
   test("SparkWork.during propagates a throwing body") {
     val e = intercept[IllegalStateException](
       SparkWork.during(spark)(throw new IllegalStateException("boom")))
